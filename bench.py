@@ -3,7 +3,8 @@ local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": sf}
 
 Each query executes its full plan via the noop writer (no driver-side
-collect skewing the measurement).
+collect skewing the measurement).  Driver heap: $SPARK_DRIVER_MEMORY,
+else min(24g, 0.6 x MemAvailable); see ``start_session``.
 """
 
 from __future__ import annotations
@@ -12,12 +13,17 @@ import json
 import os
 import re
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import SparkSession  # noqa: E402
+
 from kafka_connect_morphlines_spark import get_spark  # noqa: E402
 from kafka_connect_morphlines_spark.plans.queries import QUERIES  # noqa: E402
+from kafka_connect_morphlines_spark.session import driver_memory  # noqa: E402
+from kafka_connect_morphlines_spark.sources.files import load_table  # noqa: E402
 
 HEADLINE = [
     # morphline pipeline path
@@ -165,49 +171,43 @@ HEADLINE = [
 ]
 
 
+def start_session(
+    app_name: str, sf_dir: str | None = None, extra_conf: dict[str, str] | None = None
+) -> SparkSession:
+    """The session of this bench and ``tools/``: the driver heap of
+    ``session.driver_memory()``, fixed (``-Xms`` = ``-Xmx``) and pre-touched
+    at untimed start-up so heap growth never page-faults inside a timed
+    query, plus warmers for one-time JVM/parquet/JSON/Python-worker init.
+    ``extra_conf`` is applied last."""
+    # read the heap once: spark.driver.memory and -Xms must be one value
+    heap = driver_memory()
+    # a JVM crash report goes to the temp dir, never into the checkout
+    java_opts = (
+        f"-Xms{heap} -XX:+AlwaysPreTouch"
+        f" -XX:ErrorFile={os.path.join(tempfile.gettempdir(), 'hs_err_pid%p.log')}"
+    )
+    conf = {
+        "spark.driver.memory": heap,
+        "spark.driver.extraJavaOptions": java_opts,
+        "spark.ui.showConsoleProgress": "false",
+        **(extra_conf or {}),
+    }
+    spark = get_spark(app_name=app_name, extra_conf=conf)
+    spark.range(1000).selectExpr("sum(id)").collect()
+    if sf_dir is not None:
+        load_table(spark, sf_dir, "region").selectExpr("count(*)").collect()
+    spark.sql("SELECT from_json('{\"a\":1}', 'a int')").collect()
+    # Python/Arrow runner: worker-pool spawn + first Arrow batch is ~2-3s
+    spark.range(100).mapInPandas(lambda it: it, "id long").collect()
+    return spark
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # Heap pre-touch (r10): the measurement host intermittently throttles
-    # fresh anonymous page faults to ~500-1000us each (tools/host_probe.py;
-    # normal ~1us) — a JVM that grows/shrinks its heap lazily then spends
-    # 90% of its CPU in the kernel and the bench measures the hypervisor,
-    # not the engine (observed: 158s warmup, first query >25 min, JVM
-    # stime:utime 10:1).  A committed-and-pre-touched heap floor faults its
-    # pages ONCE, in parallel, at session init (untimed) and never returns
-    # them, so per-query numbers stay page-fault-free.  -Xmx is unchanged
-    # (SPARK_DRIVER_MEMORY, default 64g): above the floor the heap can
-    # still grow, and AlwaysPreTouch covers those commits too.  Floor size
-    # is env-tunable; empty SPARK_GRAFT_XMS disables the whole thing.
-    # Default is a FIXED heap (Xmx pinned to the same size unless the
-    # caller set SPARK_DRIVER_MEMORY): a large lazy Xmx lets G1's
-    # ergonomic expand/shrink above the floor re-enter the throttled
-    # fault path mid-bench (observed as a creeping stime:utime ratio and
-    # ~1.8x-inflated readings in the second half of a full run).  24g is
-    # ~2.5x the live-set high-water observed across the full corpus.
-    xms = os.environ.get("SPARK_GRAFT_XMS", "24g")
-    if xms:
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", xms)
-    extra = (
-        {"spark.driver.extraJavaOptions": f"-Xms{xms} -XX:+AlwaysPreTouch"} if xms else {}
-    )
-    spark = get_spark(
-        app_name="bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus), extra_conf=extra
-    )
-    # warm the JVM/codegen/parquet/json paths so per-query numbers measure the
-    # plan, not one-time initialization
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from kafka_connect_morphlines_spark.sources.files import load_table
-
-    load_table(spark, sf_dir, "region").selectExpr("count(*)").collect()
-    spark.sql("SELECT from_json('{\"a\":1}', 'a int')").collect()
-    # warm the Python/Arrow runner too (worker-pool spawn + first Arrow
-    # batch is ~2-3s of session init that would otherwise be billed to
-    # whichever pandas-UDF query happens to run first)
-    spark.range(100).mapInPandas(lambda it: it, "id long").collect()
+    spark = start_session("bench", sf_dir)
 
     # JIT warmup pass (r10, VERDICT r09 #7): the r09 cold total was 2.2x
     # the warm total, attributed to C2-compiler starvation — the first
@@ -215,30 +215,26 @@ def main() -> None:
     # parquet reader, janino itself), not just their own codegen.  Run a
     # codegen-diverse subset once at the smallest sibling SF (untimed,
     # best-effort) so the per-query cold numbers measure PLAN compile
-    # cost, not who-ran-first.  Disable with SPARK_GRAFT_WARMUP=0.
-    warmup_sec = 0.0
-    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        small = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-        wdir = small if os.path.isdir(small) else sf_dir
-        t0 = time.time()
-        for wname in (
-            "agg_pricing_summary",     # decimal hash agg
-            "join_revenue_by_nation",  # broadcast + shuffle joins
-            "window_topk_orders",      # WindowExec + sort
-            "grok_extract",            # regex codegen
-            "dedup_minhash_lsh",       # xxhash explode + self-join
-            "embedding_cosine_topk",   # higher-order array functions
-            "pivot_event_counts",      # expand + pivot agg
-            "trend_daily_revenue_fast",  # sort_array aggregates
-        ):
-            try:
-                QUERIES[wname].build(spark, wdir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:  # noqa: BLE001 - warmup is best-effort
-                pass
-        warmup_sec = round(time.time() - t0, 3)
-        print(f"# warmup: {warmup_sec}s at {wdir}", file=sys.stderr)
+    # cost, not who-ran-first.
+    small = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    wdir = small if os.path.isdir(small) else sf_dir
+    t0 = time.time()
+    for wname in (
+        "agg_pricing_summary",     # decimal hash agg
+        "join_revenue_by_nation",  # broadcast + shuffle joins
+        "window_topk_orders",      # WindowExec + sort
+        "grok_extract",            # regex codegen
+        "dedup_minhash_lsh",       # xxhash explode + self-join
+        "embedding_cosine_topk",   # higher-order array functions
+        "pivot_event_counts",      # expand + pivot agg
+        "trend_daily_revenue_fast",  # sort_array aggregates
+    ):
+        try:
+            QUERIES[wname].build(spark, wdir).write.format("noop").mode("overwrite").save()
+        except Exception:  # noqa: BLE001 - warmup is best-effort
+            pass
+    warmup_sec = round(time.time() - t0, 3)
+    print(f"# warmup: {warmup_sec}s at {wdir}", file=sys.stderr)
 
     # Four passes per query: the first pays one-time whole-stage-codegen/JIT
     # compilation (measured on this host at 20-40s under contention vs ~1s

@@ -170,11 +170,12 @@ def pagerank(
             # r11: decimal(20,18), not (38,18) — same 18-dp half-up
             # rounding of the double contribution (values <= 1 by rank
             # mass, so 2 integer digits never overflow; per-node sums
-            # <= 1 fit the widened (30,18) sum buffer), but precision 20
-            # keeps Spark's Decimal compact-long-backed through the
-            # per-edge cast+add hot loop instead of allocating a JVM
-            # BigDecimal per row — microbenched 0.76 -> 0.60s per
-            # iteration stage on the 1.17M-edge sf0.1 trade graph.
+            # <= 1 fit the widened (30,18) sum buffer).  Microbenched
+            # 0.76 -> 0.60s per iteration stage on the 1.17M-edge sf0.1
+            # trade graph; the mechanism behind that is unverified.  It is
+            # not a long-backed Decimal: Spark keeps one in a long only up
+            # to precision 18 (Decimal.MAX_LONG_DIGITS), so (20,18) still
+            # holds a BigDecimal, as (38,18) did.
             # Bit-identical ranks (cast rounding and sum values are
             # unchanged); the unrolled SQL oracle needs no edit.
             .agg(F.sum(F.col("_c").cast("decimal(20,18)")).alias("_sum"))

@@ -4330,9 +4330,20 @@ def pagerank_trade_graph(spark, sf_dir):
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    # supplier ids are offset by 1,000,000 (below); the no-duplicates
+    # argument for the union needs every customer id under that offset,
+    # which TPC-H stops guaranteeing near SF 6.7 — fail loudly there
     pairs = (
         o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), (F.lit(1000000) + F.col("l_suppkey")).alias("s"))
+        .select(
+            F.when(
+                F.col("o_custkey") >= 1000000,
+                F.raise_error(F.lit("pagerank_trade_graph: o_custkey >= 1000000 collides with supplier ids")),
+            )
+            .otherwise(F.col("o_custkey"))
+            .alias("c"),
+            (F.lit(1000000) + F.col("l_suppkey")).alias("s"),
+        )
         .distinct()
     )
     # r11 (guide §1.2, §2.4): pairs feeds BOTH union branches — without a

@@ -8,8 +8,33 @@ external oracles).  Parallelism-sensitive knobs scale with the master string.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+_HEAP_CAP_MB = 24 * 1024  # 24g: ~2.5x the bench corpus' live-set high-water
+
+
+def heap_from_meminfo(meminfo: str) -> str:
+    """``min(24g, 0.6 x MemAvailable)`` from the text of ``/proc/meminfo``.
+
+    MemAvailable, not MemTotal: a JVM started while another one is alive
+    (the bench-contract test runs ``bench.py`` under the pytest session)
+    must fit in what is actually free."""
+    kb = int(re.search(r"^MemAvailable:\s+(\d+) kB", meminfo, re.MULTILINE).group(1))
+    return f"{min(_HEAP_CAP_MB, kb * 6 // 10 // 1024)}m"
+
+
+def driver_memory() -> str:
+    """The driver heap: ``$SPARK_DRIVER_MEMORY`` if set, else derived from
+    the host's available memory (:func:`heap_from_meminfo`)."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open("/proc/meminfo") as fh:
+            return heap_from_meminfo(fh.read())
+    except OSError:  # no procfs (not Linux): the cap
+        return f"{_HEAP_CAP_MB}m"
 
 
 def get_spark(
@@ -51,7 +76,7 @@ def get_spark(
         # keep the 3.5 behavior: read them as TIMESTAMP.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "64g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # RocksDB state store: required by transformWithState and the right

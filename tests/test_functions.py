@@ -723,6 +723,21 @@ def test_pagerank_hub_outranks_leaves(spark):
     assert ranks[0] > max(v for k, v in ranks.items() if k != 0) * 3
 
 
+def test_pagerank_trade_graph_rejects_custkey_at_supplier_offset(spark, tmp_path):
+    from kafka_connect_morphlines_spark.plans.queries import QUERIES
+
+    # a customer id at the 1,000,000 supplier-id offset would make its
+    # edges collide with supplier edges; the query must refuse, not mis-rank
+    spark.createDataFrame([(1, 1000000)], "o_orderkey long, o_custkey long").write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    spark.createDataFrame([(1, 7)], "l_orderkey long, l_suppkey long").write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    with pytest.raises(Exception, match="o_custkey >= 1000000"):
+        QUERIES["pagerank_trade_graph"].build(spark, str(tmp_path)).collect()
+
+
 def test_zscore_anomalies_flags_spike(spark):
     from pyspark.sql import functions as F
     from kafka_connect_morphlines_spark.functions import timeseries

@@ -12,7 +12,8 @@ Usage:
 JIT ramp outlasts three repetitions (the min is still what's reported).
 
 Environment: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-$SPARK_GRAFT_CPUS (default all).  Prints one JSON line per query:
+$SPARK_GRAFT_CPUS (default all), $SPARK_DRIVER_MEMORY (default derived
+from the host, see bench.start_session).  Prints one JSON line per query:
 {"query": name, "cold": s, "warms": [s,s,s], "warm": min, "load1": x}
 and a final summary line.
 """
@@ -30,37 +31,13 @@ sys.path.insert(0, REPO)
 
 
 def run_child(name: str, n_warms: int = 3) -> None:
-    from kafka_connect_morphlines_spark import get_spark
+    from bench import start_session
     from kafka_connect_morphlines_spark.plans.queries import QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    # FIXED pre-touched heap (see bench.py): keeps the reading free of the
-    # host's throttled-page-fault pathology.  Xms alone is not enough —
-    # with a large lazy Xmx, G1's ergonomic expand/shrink above the floor
-    # re-enters the throttled fault path (observed: one query burning 3+
-    # CPU-hours of kernel time); pinning Xmx == Xms means the heap never
-    # changes size after the untimed pre-touch.  8g is plenty for one
-    # query at bench scale.
-    xms = os.environ.get("SPARK_GRAFT_XMS", "8g")
-    extra = {"spark.ui.showConsoleProgress": "false"}
-    if xms:
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", xms)
-        extra["spark.driver.extraJavaOptions"] = f"-Xms{xms} -XX:+AlwaysPreTouch"
-    spark = get_spark(
-        app_name=f"iso-{name}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf=extra,
-    )
-    # same session warmers as bench.py so "cold" measures the QUERY's
-    # first compile, not one-time session init
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from kafka_connect_morphlines_spark.sources.files import load_table
-
-    load_table(spark, sf_dir, "region").selectExpr("count(*)").collect()
-    spark.sql("SELECT from_json('{\"a\":1}', 'a int')").collect()
-    spark.range(100).mapInPandas(lambda it: it, "id long").collect()
+    # bench.py's session and warmers, so "cold" measures the QUERY's first
+    # compile, not one-time session init
+    spark = start_session(f"iso-{name}", sf_dir)
 
     spec = QUERIES[name]
     load1 = os.getloadavg()[0]

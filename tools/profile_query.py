@@ -11,7 +11,8 @@ Prints one line per job of the LAST (warm) execution, newest first:
 plus a summary: total job ms (cold/warm), job count, top stages by time.
 
 Environment: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-$SPARK_GRAFT_CPUS (default all).
+$SPARK_GRAFT_CPUS (default all), $SPARK_DRIVER_MEMORY (default derived
+from the host, see bench.start_session).
 """
 
 from __future__ import annotations
@@ -40,29 +41,13 @@ def main() -> None:
         del args[i : i + 2]
     name = args[0]
 
-    from kafka_connect_morphlines_spark import get_spark
+    from bench import start_session
     from kafka_connect_morphlines_spark.plans.queries import QUERIES
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")  # fixed heap == Xms
-    spark = get_spark(
-        app_name=f"profile-{name}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-        extra_conf={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.ui.enabled": "true",
-            "spark.driver.extraJavaOptions": "-Xms8g -XX:+AlwaysPreTouch",
-        },
-    )
+    # bench.py's session and warmers, so cold is the query's compile
+    spark = start_session(f"profile-{name}", sf_dir, {"spark.ui.enabled": "true"})
     sc = spark.sparkContext
-    # session warmers (match isolated_bench so cold is the query's compile)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from kafka_connect_morphlines_spark.sources.files import load_table
-
-    load_table(spark, sf_dir, "region").selectExpr("count(*)").collect()
-    spark.range(100).mapInPandas(lambda it: it, "id long").collect()
 
     base = sc.uiWebUrl + "/api/v1/applications/" + sc.applicationId
     warm_start_job = None

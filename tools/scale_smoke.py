@@ -20,25 +20,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import Window, functions as F  # noqa: E402
 
-from kafka_connect_morphlines_spark import compile_pipeline, get_spark  # noqa: E402
+from bench import start_session  # noqa: E402
+from kafka_connect_morphlines_spark import compile_pipeline  # noqa: E402
 from kafka_connect_morphlines_spark.functions import bloom, dedup, dsir, evalmetrics, funnel, multimodal, orderstats, pq, relational, retrieval, semantic, similarity, sketches, temporal, textclean, textstats, traindata, validation, web, winnow  # noqa: E402
 from kafka_connect_morphlines_spark.functions import timeseries as timeseries_mod  # noqa: E402
 
 
 def main() -> None:
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 1
-    # FIXED pre-touched heap, same rationale as bench.py/isolated_bench: a
-    # lazy Xmx lets G1's ergonomic expand/shrink re-enter the host's
-    # throttled page-fault path mid-run (observed here as a 351s reading of
-    # a leg that reads 5.6s quiet and 13.7s under plain CPU contention —
-    # kernel time, not compute).  24g matches bench.py's floor; empty
-    # SPARK_GRAFT_XMS disables.
-    xms = os.environ.get("SPARK_GRAFT_XMS", "24g")
-    extra = {"spark.ui.showConsoleProgress": "false"}
-    if xms:
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", xms)
-        extra["spark.driver.extraJavaOptions"] = f"-Xms{xms} -XX:+AlwaysPreTouch"
-    spark = get_spark(app_name="scale_smoke", extra_conf=extra)
+    spark = start_session("scale_smoke")
 
     n_events = 20_000_000 * mult
     n_docs = 200_000 * mult
