@@ -7,39 +7,22 @@ expressions: ``from_json``, ``from_csv``, ``split``+``explode`` — so the JSON
 parsing happens JVM-side inside codegen, never in Python.
 
 Schema binding: morphlines carry a schema *per record* (``_valueSchema``);
-Spark is frame-typed, so parsers accept a pipeline-bound schema via
-``schemaString`` (Avro JSON) / ``schemaDdl`` (Spark DDL) / ``schemaFile``
-(SURVEY.md §7.3 item 1).
+Spark is frame-typed, so parsers bind a pipeline-wide schema at compile time
+through ``avro_schema.bind_schema`` (SURVEY.md §7.3 item 1; keys and
+precedence in the README's "Schema binding" section).
 """
 
 from __future__ import annotations
 
-import os
-import re
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from kafka_connect_morphlines_spark import record as R
-from kafka_connect_morphlines_spark.avro_schema import avro_struct
+from kafka_connect_morphlines_spark.avro_schema import avro_struct, bind_schema
 from kafka_connect_morphlines_spark.commands import command
 from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
 from kafka_connect_morphlines_spark.templates import colref
-
-
-def bound_schema(config, ctx) -> T.StructType | None:
-    """Resolve the schemaString/schemaDdl/schemaFile triad to a StructType."""
-    if "schemaDdl" in config:
-        return T.StructType.fromDDL(config["schemaDdl"])
-    if "schemaString" in config:
-        return avro_struct(config["schemaString"])
-    if "schemaFile" in config:
-        path = config["schemaFile"]
-        if not os.path.isabs(path):
-            path = os.path.join(ctx.base_dir, path)
-        with open(path, encoding="utf-8") as f:
-            text = f.read()
-        return T.StructType.fromDDL(text) if not text.lstrip().startswith("{") else avro_struct(text)
-    return None
 
 
 def _body(df: DataFrame, config) -> Column:
@@ -53,6 +36,54 @@ def _body(df: DataFrame, config) -> Column:
     if R.VALUE in df.columns:
         return F.col(R.VALUE)
     raise PipelineSpecError("no inputField configured and no attachment/_value column present")
+
+
+def _keep_valid(df: DataFrame, valid: Column, config) -> DataFrame:
+    """Apply a parser's validity predicate: ``flagInvalid`` marks failing
+    rows in ``_invalid`` for the streaming runner's DLQ split (cf. the
+    reference's log-and-skip, MorphlineSinkTask.java:137), OR-ing into an
+    earlier parser's flag so a row bad anywhere in the chain stays
+    quarantined; otherwise ``dropInvalid`` (default true) drops them."""
+    if config.get("flagInvalid", False):
+        invalid = ~valid
+        if "_invalid" in df.columns:
+            invalid = F.col("_invalid") | invalid
+        return df.withColumn("_invalid", invalid)
+    return df.filter(valid) if config.get("dropInvalid", True) else df
+
+
+def _parse_once(
+    df: DataFrame,
+    text: Column,
+    parse: Callable,
+    schema: T.StructType,
+    out: str,
+    config,
+    valid: Callable[[Column, str], Column],
+) -> DataFrame:
+    """Parse ``text`` into the ``out`` struct exactly once per row.
+
+    PERMISSIVE ``from_json``/``from_xml`` return an all-null struct (not
+    NULL) on malformed input, so validity comes from a corrupt-record field
+    instead of a second probe parse.  The explode(array(...)) fence makes
+    the parse a Generate output: predicate pushdown rewrites filters through
+    Project aliases (re-inlining the parse once per consumer — observed as 3
+    parses per row) but not through generator output.  ``valid(parsed,
+    corrupt_field)`` is the parser's own validity predicate.  The bound
+    ``schema`` is shared by every application of the compiled pipeline (one
+    per micro-batch), so it is copied, never extended in place.
+    """
+    corrupt = "_corrupt_record"
+    while corrupt in schema.fieldNames():
+        corrupt = "_" + corrupt
+    parse_schema = T.StructType([*schema.fields, T.StructField(corrupt, T.StringType())])
+    parsed = parse(text, parse_schema, {"columnNameOfCorruptRecord": corrupt, "mode": "PERMISSIVE"})
+    fence = "_parsed_once"
+    while fence in df.columns:
+        fence = "_" + fence
+    df = df.withColumn(fence, F.explode(F.array(parsed)))
+    df = df.withColumn(out, F.col(fence).dropFields(corrupt))
+    return _keep_valid(df, valid(F.col(fence), corrupt), config).drop(fence)
 
 
 def _charset(config) -> str:
@@ -72,54 +103,18 @@ def read_json(config, ctx):
     With a bound schema the output column (default ``_json``) is a typed
     struct via ``from_json``; without one it is the validated JSON text, which
     ``extractJsonPaths`` then reads with ``get_json_object``.  Unparseable
-    rows are dropped, mirroring the reference's failed-record drop
-    (MorphlineSinkTask.java:137).
+    rows are dropped (``dropInvalid``, mirroring the reference's failed-record
+    drop, MorphlineSinkTask.java:137) or flagged (``flagInvalid``, DLQ mode).
     """
     out = config.get("outputField", "_json")
-    schema = bound_schema(config, ctx)
-    drop_invalid = config.get("dropInvalid", True)
-    flag_invalid = config.get("flagInvalid", False)  # DLQ mode: mark, don't drop
+    schema = bind_schema(config, ctx).struct
 
     def transform(df: DataFrame) -> DataFrame:
         text = _as_text(_body(df, config), config)
         if schema is not None:
-            # single parse with a corrupt-record field for validity —
-            # PERMISSIVE from_json returns an all-null struct (not NULL) on
-            # malformed input, so struct nullity can't detect bad rows, and
-            # a separate get_json_object probe would parse the JSON twice.
-            # The explode(array(...)) fence makes the parse a Generate
-            # output: predicate pushdown rewrites filters through Project
-            # aliases (re-inlining from_json once per consumer — observed as
-            # 3 parses per row in the optimized plan) but not through
-            # generator output, so the JSON parses exactly once per row.
-            corrupt = "_corrupt_record"
-            while corrupt in schema.fieldNames():
-                corrupt = "_" + corrupt
-            parse_schema = schema.add(corrupt, T.StringType())
-            parsed = F.from_json(text, parse_schema, {"columnNameOfCorruptRecord": corrupt, "mode": "PERMISSIVE"})
-            fence = "_parsed_once"
-            while fence in df.columns:
-                fence = "_" + fence
-            df = df.withColumn(fence, F.explode(F.array(parsed)))
-            valid = text.isNotNull() & F.col(fence).getField(corrupt).isNull()
-            df = df.withColumn(out, F.col(fence).dropFields(corrupt))
-            if flag_invalid:
-                df = df.withColumn("_invalid", ~valid)
-            elif drop_invalid:
-                df = df.filter(valid)
-            return df.drop(fence)
-        else:
-            df = df.withColumn(out, text)
-            probe = F.coalesce(F.get_json_object(text, "$"), F.get_json_object(F.concat(F.lit('{"r":'), text, F.lit("}")), "$.r"))
-            valid = text.isNotNull() & probe.isNotNull()
-        if flag_invalid:
-            # quarantine path: the streaming runner routes flagged rows to the
-            # DLQ sink instead of silently dropping (cf. the reference's
-            # log-and-skip, MorphlineSinkTask.java:137)
-            df = df.withColumn("_invalid", ~valid)
-        elif drop_invalid:
-            df = df.filter(valid)
-        return df
+            return _parse_once(df, text, F.from_json, schema, out, config, lambda parsed, corrupt: text.isNotNull() & parsed.getField(corrupt).isNull())
+        probe = F.coalesce(F.get_json_object(text, "$"), F.get_json_object(F.concat(F.lit('{"r":'), text, F.lit("}")), "$.r"))
+        return _keep_valid(df.withColumn(out, text), text.isNotNull() & probe.isNotNull(), config)
 
     return transform
 
@@ -405,27 +400,6 @@ def _python_decode_datum_udf(schema_json: str, wire: bool = False):
     return dec
 
 
-def _resolve_avro_schema_json(config, ctx) -> str | None:
-    schema_json = config.get("schemaString")
-    if schema_json is None and "schemaFile" in config:
-        path = config["schemaFile"]
-        if not os.path.isabs(path):
-            path = os.path.join(ctx.base_dir, path)
-        with open(path, encoding="utf-8") as f:
-            schema_json = f.read()
-    if schema_json is None and "schemaRegistryUrl" in config:
-        # Compile-time registry binding (schema binds to the frame, not to
-        # each record — SURVEY.md §7.3.1): by explicit id, else by subject.
-        from kafka_connect_morphlines_spark import schema_registry  # noqa: PLC0415
-
-        url = config["schemaRegistryUrl"]
-        if "schemaId" in config:
-            schema_json = schema_registry.fetch_schema_by_id(url, int(config["schemaId"]))
-        elif "subject" in config:
-            schema_json = schema_registry.fetch_latest_schema(url, config["subject"])
-    return schema_json
-
-
 @command("readAvro")
 def read_avro(config, ctx):
     """Parse raw Avro datum bytes with a bound schema (kite readAvro).
@@ -437,18 +411,19 @@ def read_avro(config, ctx):
     2. spark-avro jar present: JVM ``from_avro`` (vectorized, codegen).
     3. jar absent: pure-Python Avro binary decoder behind an Arrow-batched
        pandas UDF (avro_codec.py) — same results, Python-speed.
-    A schemaString/schemaFile is required for raw bytes (a bare datum has no
-    embedded schema), or a schemaRegistryUrl + (schemaId | subject) to fetch
-    one at compile time.
+    Raw bytes need an Avro schema bound at compile time (a bare datum has no
+    embedded schema): schemaString, schemaFile, or a registry URL with
+    schemaId | subject.
 
-    ``wireFormat: true`` (implied by schemaRegistryUrl) consumes Confluent
+    ``wireFormat: true`` (implied by a registry URL) consumes Confluent
     single-record framing — magic 0x00 + 4-byte BE schema id + datum, the
     bytes KafkaAvroSerializer produces (reference default serializer,
     KafkaDataProducerCommandBuilder.java:251-256): the 5-byte header is
     stripped with a codegen substring before either decode path.
     """
-    schema_json = _resolve_avro_schema_json(config, ctx)
-    wire = bool(config.get("wireFormat", "schemaRegistryUrl" in config))
+    bound = bind_schema(config, ctx, avro=True)
+    schema_json = bound.avro_json
+    wire = bool(config.get("wireFormat", bound.registry_url is not None))
     out = config.get("outputField", "_json")
 
     def transform(df: DataFrame) -> DataFrame:
@@ -458,9 +433,7 @@ def read_avro(config, ctx):
         if isinstance(dtype_map.get(in_name), T.StructType):
             return df.withColumn(out, colref(in_name))  # already-decoded struct
         if schema_json is None:
-            raise PipelineSpecError(
-                "readAvro on raw bytes needs schemaString/schemaFile or schemaRegistryUrl + (schemaId|subject)"
-            )
+            raise PipelineSpecError("readAvro on raw bytes needs schemaString/schemaFile or a registry URL + (schemaId|subject)")
         payload = body.cast("binary")
         if _jvm_from_avro_usable(df):
             from_avro, _ = _avro_functions()
@@ -486,7 +459,7 @@ def read_avro_container(config, ctx):
     Decoding uses the pure-Python codec (avro_codec.py) behind a pandas
     UDF; containers are a file format, not a hot per-event path.
     """
-    schema_json = _resolve_avro_schema_json(config, ctx)
+    schema_json = bind_schema(config, ctx, avro=True).avro_json
     out = config.get("outputField", "_json")
 
     def transform(df: DataFrame) -> DataFrame:
@@ -528,45 +501,24 @@ def read_xml(config, ctx):
     """Parse the body as XML into a typed struct (the kite-morphlines
     saxon module's readXml, re-expressed on Spark 4's native ``from_xml``
     — JVM-side, no Python in the hot path).  Config: ``schemaDdl`` /
-    ``schemaString`` (required — XML has no self-describing types),
-    ``inputField`` (default ``_value``), ``outputField`` (default
+    ``schemaString`` / ``schemaFile`` (required — XML has no self-describing
+    types), ``inputField`` (default ``_value``), ``outputField`` (default
     ``_xml``), ``dropInvalid`` (default true, mirroring the reference's
-    failed-record drop, MorphlineSinkTask.java:136-138)."""
+    failed-record drop, MorphlineSinkTask.java:136-138) / ``flagInvalid``."""
     out = config.get("outputField", "_xml")
-    schema = bound_schema(config, ctx)
+    schema = bind_schema(config, ctx).struct
     if schema is None:
         raise PipelineSpecError(
             "readXml needs schemaDdl or schemaString (XML carries no types; "
             "for schemaless one-off fields use extractXmlPaths on the raw text)"
         )
-    drop_invalid = config.get("dropInvalid", True)
 
     def transform(df: DataFrame) -> DataFrame:
         text = _as_text(_body(df, config), config)
-        # PERMISSIVE from_xml returns an all-null struct (not NULL) on
-        # malformed input, exactly like from_json — same corrupt-record +
-        # explode-fence idiom as readJson (single parse per row)
-        corrupt = "_corrupt_record"
-        while corrupt in schema.fieldNames():
-            corrupt = "_" + corrupt
-        parse_schema = schema.add(corrupt, T.StringType())
-        parsed = F.from_xml(
-            text, parse_schema,
-            {"columnNameOfCorruptRecord": corrupt, "mode": "PERMISSIVE"},
+        return _parse_once(
+            df, text, F.from_xml, schema, out, config,
+            lambda parsed, corrupt: text.isNotNull() & parsed.isNotNull() & parsed.getField(corrupt).isNull(),
         )
-        fence = "_parsed_once"
-        while fence in df.columns:
-            fence = "_" + fence
-        df = df.withColumn(fence, F.explode(F.array(parsed)))
-        valid = (
-            text.isNotNull()
-            & F.col(fence).isNotNull()
-            & F.col(fence).getField(corrupt).isNull()
-        )
-        df = df.withColumn(out, F.col(fence).dropFields(corrupt))
-        if drop_invalid:
-            df = df.filter(valid)
-        return df.drop(fence)
 
     return transform
 

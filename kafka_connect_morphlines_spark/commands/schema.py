@@ -10,9 +10,8 @@ import json
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from kafka_connect_morphlines_spark import record as R
-from kafka_connect_morphlines_spark.avro_schema import avro_struct, timestamp_millis_fields
+from kafka_connect_morphlines_spark.avro_schema import bind_schema, timestamp_millis_fields
 from kafka_connect_morphlines_spark.commands import command
-from kafka_connect_morphlines_spark.commands.parsers import bound_schema
 from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
 from kafka_connect_morphlines_spark.templates import colref
 
@@ -26,11 +25,12 @@ def from_connect_data(config, ctx):
     converter=json   -> JSON bytes + application/json (ref :107-110)
     converter=avro   -> avro bytes + application/avro (ref :112-115; JVM
                         to_avro with the jar, else the pure-Python encoder
-                        — which needs schemaString/schemaFile bound)
+                        — which needs an Avro schema bound)
     """
     converter = config.get("converter", "avro")
     value_field = config.get("valueField", R.VALUE)
     charset = config.get("characterSet", "UTF-8")
+    bound = bind_schema(config, ctx, avro=True) if converter == "avro" else None
 
     def transform(df: DataFrame) -> DataFrame:
         dtype = {f.name: f.dataType for f in df.schema.fields}.get(value_field)
@@ -46,7 +46,7 @@ def from_connect_data(config, ctx):
         elif converter == "avro":
             from kafka_connect_morphlines_spark.commands.sinks import _avro_value_bytes  # noqa: PLC0415
 
-            body, mime = _avro_value_bytes(df, col, dtype, config), "application/avro"
+            body, mime = _avro_value_bytes(df, col, dtype, bound), "application/avro"
         else:
             raise PipelineSpecError(f"unknown converter {converter!r}")
         return df.withColumns(
@@ -93,7 +93,7 @@ def to_connect_data(config, ctx):
     """
     value_field = config.get("valueField", R.VALUE)
     mappings = {str(k): str(v) for k, v in config.get("mappings", {}).items()}
-    target = bound_schema(config, ctx)
+    target = bind_schema(config, ctx).struct
     if target is None:
         raise PipelineSpecError("toConnectData requires schemaString/schemaDdl/schemaFile")
 
@@ -133,34 +133,21 @@ def enrich_json(config, ctx):
     if not value_field:
         raise PipelineSpecError("enrichJson requires valueField (EnrichJsonBuilder.java:105-109)")
     out_field = config.get("outputField", value_field)
-    schema_str = config.get("schemaString")
-    if schema_str is None and "schemaFile" in config:
-        import os
-
-        path = config["schemaFile"]
-        if not os.path.isabs(path):
-            path = os.path.join(ctx.base_dir, path)
-        with open(path, encoding="utf-8") as f:
-            schema_str = f.read()
-    registry_url = config.get("schema-registry-url", config.get("schemaRegistryUrl"))
-    if schema_str is None and registry_url:
-        # compile-time registry lookup (EnrichJsonBuilder.java:191-200); the
-        # schema binds per pipeline, not per record (SURVEY.md §7.3.1) —
-        # heterogeneous subjects need one pipeline branch per subject + union
-        from kafka_connect_morphlines_spark.schema_registry import fetch_latest_schema
-
-        subject = config.get("subject")
-        if not subject:
-            field = config.get("subjectField")
-            raise PipelineSpecError(
-                "enrichJson with a schema registry needs a static 'subject' — "
-                + (f"per-record subjectField {field!r} cannot bind a frame-wide schema" if field else "none given")
-            )
-        schema_str = fetch_latest_schema(registry_url, subject)
+    # compile-time registry lookup (EnrichJsonBuilder.java:191-200); the
+    # schema binds per pipeline, not per record (SURVEY.md §7.3.1) —
+    # heterogeneous subjects need one pipeline branch per subject + union
+    bound = bind_schema(config, ctx, avro=True)
+    schema_str = bound.avro_json
+    if schema_str is None and bound.registry_url:
+        field = config.get("subjectField")
+        raise PipelineSpecError(
+            "enrichJson with a schema registry needs a static 'subject' or 'schemaId' — "
+            + (f"per-record subjectField {field!r} cannot bind a frame-wide schema" if field else "none given")
+        )
     if schema_str is None:
         raise PipelineSpecError("enrichJson requires schemaString/schemaFile or schema-registry-url+subject")
 
-    target = avro_struct(schema_str)
+    target = bound.struct
     ts_paths = set(timestamp_millis_fields(schema_str))
 
     # Parse schema: timestamp-millis fields read as strings (they may hold
@@ -201,9 +188,7 @@ def enrich_json(config, ctx):
     # value} and null as JSON null — the encoding Avro-JSON consumers (e.g.
     # the Confluent REST proxy payload) require.  Opt-in via wrapUnions;
     # output is then a JSON *string* column.
-    import json as _json
-
-    avro_tree = _json.loads(schema_str) if isinstance(schema_str, str) else schema_str
+    avro_tree = json.loads(schema_str)
 
     def _branch_name(node, ns: str | None = None) -> str:
         # Avro-JSON requires the namespace-qualified *fullname* for named
@@ -414,20 +399,10 @@ def to_avro_cmd(config, ctx):
     kite: Avro ``bytes``/``fixed`` fields are not representable through
     the JSON staging hop — use fromConnectData's avro leg for byte-typed
     schemas."""
-    from kafka_connect_morphlines_spark.avro_schema import avro_struct
-
-    schema_json = config.get("schemaString")
-    schema_file = config.get("schemaFile")
-    if schema_file and not schema_json:
-        import os
-
-        path = schema_file if os.path.isabs(schema_file) else os.path.join(ctx.base_dir, schema_file)
-        with open(path, encoding="utf-8") as fh:
-            schema_json = fh.read()
-    if not schema_json:
+    bound = bind_schema(config, ctx, avro=True)
+    if bound.avro_json is None:
         raise PipelineSpecError("toAvro needs schemaString or schemaFile")
-    schema = json.loads(schema_json) if isinstance(schema_json, str) else schema_json
-    struct_type = avro_struct(schema)
+    struct_type = bound.struct
     in_fld = config.get("inputField", R.VALUE)
     out_fld = config.get("outputField", in_fld)
 
@@ -442,7 +417,7 @@ def to_avro_cmd(config, ctx):
 
     # stash for writeAvroToByteArray downstream (schema travels with the
     # compile context, mirroring kite's record-attached schema)
-    ctx.settings["_last_avro_schema"] = schema
+    ctx.settings["_last_avro_schema"] = json.loads(bound.avro_json)
     return transform
 
 
@@ -458,12 +433,10 @@ def write_avro_to_byte_array(config, ctx):
     fmt = str(config.get("format", "container"))
     if fmt not in ("container", "containerlessBinary"):
         raise PipelineSpecError(f"writeAvroToByteArray: unknown format {fmt!r}")
-    schema_json = config.get("schemaString") or ctx.settings.get("_last_avro_schema")
-    if not schema_json:
-        raise PipelineSpecError(
-            "writeAvroToByteArray needs schemaString or a preceding toAvro"
-        )
-    schema = json.loads(schema_json) if isinstance(schema_json, str) else schema_json
+    schema_json = bind_schema(config, ctx, avro=True).avro_json
+    schema = json.loads(schema_json) if schema_json else ctx.settings.get("_last_avro_schema")
+    if not schema:
+        raise PipelineSpecError("writeAvroToByteArray needs schemaString or a preceding toAvro")
     in_fld = config.get("inputField", R.VALUE)
     out_fld = config.get("outputField", in_fld)
 

@@ -19,15 +19,16 @@ Transports:
 from __future__ import annotations
 
 import json
-import os
+import struct
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from kafka_connect_morphlines_spark import record as R
+from kafka_connect_morphlines_spark.avro_schema import BoundSchema, bind_schema
 from kafka_connect_morphlines_spark.commands import command
 from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
-from kafka_connect_morphlines_spark.templates import colref, template_to_column
+from kafka_connect_morphlines_spark.templates import colref
 
 def _kafka_format() -> str:
     """The session's kafka provider name — the real connector, or the
@@ -45,36 +46,10 @@ MEMORY_SINKS: dict[str, list] = {}
 LOAD_CLIENTS: dict[str, Callable[[list[dict]], Any]] = {}
 
 
-def _avro_serde_config(config) -> tuple[str | None, int | None]:
-    """(schema JSON, schema id) for ``format=avro`` from the command config.
-
-    Mirrors the reference's KafkaAvroSerializer setup (it reads
-    ``schema-registry-url`` from the producer properties and registers/looks
-    up the value schema — KafkaDataProducerCommandBuilder.java:251-256):
-    ``schemaString``/``schemaFile`` (absolute path) bind the writer schema
-    inline; otherwise ``schemaRegistryUrl`` + ``subject``/``schemaId``
-    resolves it at compile time.  ``schemaId`` alone turns on wire framing.
-    """
-    schema_json = config.get("schemaString")
-    if schema_json is None and "schemaFile" in config:
-        with open(config["schemaFile"], encoding="utf-8") as f:
-            schema_json = f.read()
-    registry = config.get("schemaRegistryUrl") or config.get("properties", {}).get("schema-registry-url")
-    schema_id = config.get("schemaId")
-    if schema_json is None and registry:
-        from kafka_connect_morphlines_spark import schema_registry  # noqa: PLC0415
-
-        if schema_id is not None:
-            schema_json = schema_registry.fetch_schema_by_id(registry, int(schema_id))
-        elif "subject" in config:
-            schema_json = schema_registry.fetch_latest_schema(registry, config["subject"])
-    return schema_json, (int(schema_id) if schema_id is not None else None)
-
-
-def _avro_value_bytes(df, value_col, dtype, config):
-    """Avro-encode the value column; Confluent wire framing when a schema id
-    is configured (magic 0x00 + BE id + datum — the bytes any
-    Schema-Registry-aware consumer expects).
+def _avro_value_bytes(df, value_col, dtype, bound: BoundSchema):
+    """Avro-encode the value column with the compile-time ``bound`` writer
+    schema; Confluent wire framing when it carries a schema id (magic 0x00 +
+    BE id + datum — the bytes any Schema-Registry-aware consumer expects).
 
     JVM ``to_avro`` with the bound writer schema when the spark-avro jar is
     present (vectorized; the header is a codegen concat), else the
@@ -86,12 +61,8 @@ def _avro_value_bytes(df, value_col, dtype, config):
         _jvm_from_avro_usable,
     )
 
-    schema_json, schema_id = _avro_serde_config(config)
-    header = None
-    if schema_id is not None:
-        import struct  # noqa: PLC0415
-
-        header = b"\x00" + struct.pack(">I", schema_id)
+    schema_json = bound.avro_json
+    header = None if bound.schema_id is None else b"\x00" + struct.pack(">I", bound.schema_id)
     if _jvm_from_avro_usable(df):
         _, to_avro = _avro_functions()
         encoded = to_avro(value_col, schema_json) if schema_json else to_avro(value_col)
@@ -126,20 +97,19 @@ def _python_encode_datum_udf(schema_json: str, dtype):
     return enc
 
 
-def _value_columns(df: DataFrame, config) -> DataFrame:
-    """Project the frame to (key, value, topic) for a Kafka-shaped write."""
+def _value_columns(df: DataFrame, config, value_schema: BoundSchema | None, key_schema: BoundSchema | None) -> DataFrame:
+    """Project the frame to (key, value, topic) for a Kafka-shaped write;
+    ``value_schema``/``key_schema`` are bound when the value/key leg is Avro."""
     topic = config.get("topic")
     topic_field = config.get("topicField", R.TOPIC)
     key_field = config.get("keyField")
     value_field = config.get("valueField", R.VALUE)
-    fmt = config.get("format", "json")
-
     value_col = colref(value_field) if value_field in df.columns else F.struct(*[colref(c) for c in df.columns])
     dtype = {f.name: f.dataType for f in df.schema.fields}.get(value_field)
-    if fmt == "json" and isinstance(dtype, (T.StructType, T.MapType, T.ArrayType)):
+    if value_schema is not None:
+        value_out = _avro_value_bytes(df, value_col, dtype, value_schema)
+    elif config.get("format", "json") == "json" and isinstance(dtype, (T.StructType, T.MapType, T.ArrayType)):
         value_out = F.to_json(value_col)
-    elif fmt == "avro":
-        value_out = _avro_value_bytes(df, value_col, dtype, config)
     else:
         value_out = value_col.cast("string")
 
@@ -147,21 +117,11 @@ def _value_columns(df: DataFrame, config) -> DataFrame:
     if key_field and key_field in df.columns:
         # keyFormat=avro: the reference's default key.serializer is also
         # KafkaAvroSerializer (KafkaDataProducerCommandBuilder.java:253);
-        # key schema/id come from keySchemaString/keySchemaFile/keySchemaId
-        # through the same serde config, so keys get the same wire framing.
-        if config.get("keyFormat") == "avro":
-            key_cfg = {
-                "schemaString": config.get("keySchemaString"),
-                "schemaId": config.get("keySchemaId"),
-                "schemaRegistryUrl": config.get("schemaRegistryUrl"),
-                "subject": config.get("keySubject"),
-                "properties": config.get("properties", {}),
-            }
-            if config.get("keySchemaFile"):
-                key_cfg["schemaFile"] = config["keySchemaFile"]
-            key_cfg = {k: v for k, v in key_cfg.items() if v is not None}
+        # key schema/id bind from the keySchema* keys, so keys get the same
+        # wire framing.
+        if key_schema is not None:
             key_dtype = {f.name: f.dataType for f in df.schema.fields}.get(key_field)
-            cols.insert(0, _avro_value_bytes(df, colref(key_field), key_dtype, key_cfg).alias("key"))
+            cols.insert(0, _avro_value_bytes(df, colref(key_field), key_dtype, key_schema).alias("key"))
         else:
             cols.insert(0, colref(key_field).cast("string").alias("key"))
     if topic:
@@ -178,14 +138,18 @@ def kafka_producer(config, ctx):
 
     ``properties { ... }`` map onto ``kafka.*`` writer options; per-record
     topic comes from ``topicField`` exactly like the reference's
-    topic/topicField pair (ref :129-134).
+    topic/topicField pair (ref :129-134).  Value, key (``keySchema*``) and
+    REST (``valueSchema*``) schemas bind once, here, at compile time.
     """
     transport = config.get("transport", "kafka")
     if "topic" not in config and "topicField" not in config and transport == "kafka":
         raise PipelineSpecError("kafkaProducer requires topic or topicField (ref :129-134)")
+    value_schema = bind_schema(config, ctx, avro=True) if config.get("format") == "avro" else None
+    key_schema = bind_schema(config, ctx, "key", avro=True) if config.get("keyFormat") == "avro" else None
+    rest_schema = bind_schema(config, ctx, "value", avro=True).avro_json if transport == "rest" else None
 
     def transform(df: DataFrame) -> DataFrame:
-        out = _value_columns(df, config)
+        out = _value_columns(df, config, value_schema, key_schema)
         if transport == "kafka":
             writer = out.write.format(_kafka_format()).mode("append")
             bootstrap = config.get("properties", {}).get("bootstrap-servers") or config.get("properties", {}).get("bootstrap.servers")
@@ -208,13 +172,6 @@ def kafka_producer(config, ctx):
                 raise PipelineSpecError("transport=rest requires kafka-rest-url")
             fixed_topic = config.get("topic")
             fixed_partition = config.get("partition")
-            value_schema = config.get("valueSchemaString")
-            if value_schema is None and "valueSchemaFile" in config:
-                p = config["valueSchemaFile"]
-                if not os.path.isabs(p):
-                    p = os.path.join(ctx.base_dir, p)
-                with open(p, encoding="utf-8") as fh:
-                    value_schema = fh.read()
             batch_size = int(config.get("batchSize", 500))
 
             def post_partition(rows):
@@ -223,8 +180,8 @@ def kafka_producer(config, ctx):
 
                 def send(topic, batch):
                     body = {"records": batch}
-                    if value_schema:
-                        body["value_schema"] = value_schema
+                    if rest_schema:
+                        body["value_schema"] = rest_schema
                     # partition-targeted endpoint (ref :341-346:
                     # /topics/{t}/partitions/{p}) when a fixed partition is set
                     suffix = f"/partitions/{int(fixed_partition)}" if fixed_partition is not None else ""

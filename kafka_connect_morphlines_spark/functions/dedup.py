@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from kafka_connect_morphlines_spark.functions import ensure_parallelism
-from kafka_connect_morphlines_spark.functions.textstats import shingles, shingles_exploded, tokens
+from kafka_connect_morphlines_spark.functions.textstats import shingles_exploded, tokens
 
 
 def exact_dedup_keys(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -64,22 +64,6 @@ def _affine_params(i: int) -> tuple[int, int]:
     return (a % (1 << 30)) | 1, b % _MERSENNE_P
 
 
-def minhash_signature(text: Column, num_hashes: int = 64, shingle_n: int = 3) -> Column:
-    """K minhashes over word shingles — array<bigint> of length K.
-
-    One murmur3 pass over the shingle array, then K affine permutations
-    ``min(a_i * h + b_i)`` (the standard universal-hash MinHash family) —
-    K×|shingles| integer mul-adds in codegen instead of K string-hash passes.
-    """
-    base = F.transform(shingles(text, shingle_n), lambda s: F.hash(s).cast("long").bitwiseAND(F.lit(0xFFFFFFFF)))
-
-    def perm(i: int):
-        a, b = _affine_params(i)
-        return lambda h: (h * a + b) % _MERSENNE_P
-
-    return F.array(*[F.array_min(F.transform(base, perm(i))) for i in range(num_hashes)])
-
-
 def _signatures_from_exploded(ex: DataFrame, num_hashes: int) -> DataFrame:
     """(_id, _sig: array<bigint>) from an exploded (_id, _s) shingle frame
     via K codegen'd min-aggregates.
@@ -116,14 +100,6 @@ def _raw_signatures(ex: DataFrame, num_hashes: int, base_hash: str = "murmur3") 
         a, b = _affine_params(i)
         aggs.append(F.min((F.col("_h") * a + b) % _MERSENNE_P).alias(f"_mh{i}"))
     return hashed.groupBy("_id").agg(*aggs)
-
-
-def _signatures_from_shingles(sh: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
-    """Signatures from a (id, _sh array) frame (kept for array-shaped
-    callers; the hot path builds the exploded frame directly with
-    shingles_exploded — codegen, no interpreted array construction)."""
-    ex = sh.select(F.col(id_col).alias("_id"), F.explode("_sh").alias("_s"))
-    return _signatures_from_exploded(ex, num_hashes)
 
 
 def _lsh_candidates_from_exploded(
@@ -203,20 +179,6 @@ def minhash_signatures(
     """(id, sig) MinHash signatures (see _signatures_from_exploded)."""
     ex = shingles_exploded(df, text_col, id_col, shingle_n).withColumnRenamed(id_col, "_id")
     return _signatures_from_exploded(ex, num_hashes)
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash LSH: (id_a, id_b)."""
-    df = ensure_parallelism(df)
-    ex = shingles_exploded(df, text_col, id_col, shingle_n).withColumnRenamed(id_col, "_id")
-    return _lsh_candidates_from_exploded(ex, num_hashes, bands)
 
 
 def jaccard(tokens_a: Column, tokens_b: Column) -> Column:

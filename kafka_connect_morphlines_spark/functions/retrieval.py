@@ -23,8 +23,6 @@ Shape at 100 TB:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
 from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
@@ -147,13 +145,6 @@ def bm25_topk(
         F.count(F.lit(1)).alias("n_terms_matched"),
     )
     return out.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
-
-
-def bm25_idf_table(n_docs: int, dfreq: dict[str, int]) -> dict[str, float]:
-    """Driver-side idf table for a fixed query vocabulary (testing aid)."""
-    return {
-        t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)) for t, df in dfreq.items()
-    }
 
 
 def tfidf_top_terms(

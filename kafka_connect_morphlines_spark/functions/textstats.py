@@ -49,10 +49,6 @@ def bpe_ish_tokens(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0)
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def quality_features(text: Column) -> dict[str, Column]:
     """Length / punctuation / stopword-ratio quality features.
 

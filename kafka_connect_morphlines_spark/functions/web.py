@@ -313,50 +313,6 @@ def ip_to_long(ip: Column) -> Column:
     return F.when(ok, val).otherwise(F.lit(None).cast("long"))
 
 
-def geoip_lookup(
-    df: DataFrame,
-    ranges: DataFrame,
-    ip_col: str = "ip",
-    start_col: str = "range_start",
-    end_col: str = "range_end",
-) -> DataFrame:
-    """GeoIP-style range lookup: annotate each row with the attributes of
-    the IP range containing its address (the kite geoIP command's job;
-    kite wraps the MaxMind reader — this is the same lookup expressed as
-    a relational range join over a (range_start, range_end, attrs...)
-    table, which is what the MaxMind CSV exports contain).
-
-    Shape at 100 TB: the range table is bounded (GeoIP2 country is ~1M
-    ranges, tens of MB) and each range is expanded to the /16 buckets it
-    spans (ranges are CIDR-aligned, so the expansion factor is ~1),
-    making the probe an EQUI-join on the bucket + two comparisons over a
-    BROADCAST table — never a nested-loop scan or shuffle of the fact
-    side.  Ranges must be disjoint (GeoIP exports are); facts with
-    unparseable IPs keep a row with null attributes (left join),
-    mirroring kite's record-unchanged-on-miss.
-    """
-    ipl = ip_to_long(F.col(ip_col))
-    facts = df.withColumn("_ipl", ipl).withColumn(
-        "_b16", (F.col("_ipl") / F.lit(65536)).cast("long")
-    )
-    expanded = ranges.select(
-        "*",
-        F.explode(
-            F.sequence(
-                (F.col(start_col) / F.lit(65536)).cast("long"),
-                (F.col(end_col) / F.lit(65536)).cast("long"),
-            )
-        ).alias("_b16"),
-    )
-    cond = (
-        (facts["_b16"] == expanded["_b16"])
-        & (facts["_ipl"] >= expanded[start_col])
-        & (facts["_ipl"] <= expanded[end_col])
-    )
-    out = facts.join(F.broadcast(expanded), cond, "left")
-    return out.drop(expanded["_b16"]).drop("_ipl", "_b16", start_col, end_col)
-
-
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Exact triangle count + global clustering coefficient over an
     undirected graph given as one row per unordered edge (src < dst,

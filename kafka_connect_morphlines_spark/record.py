@@ -14,7 +14,7 @@ so ``spark.read.format("kafka")`` plugs in with a trivial rename.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 TOPIC = "_topic"
 PARTITION = "_kafkaPartition"
@@ -41,20 +41,6 @@ KAFKA_SOURCE_RENAMES = {
     "key": KEY,
     "value": VALUE,
 }
-
-
-def envelope_schema(value_type: T.DataType = T.BinaryType()) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(TOPIC, T.StringType()),
-            T.StructField(PARTITION, T.IntegerType()),
-            T.StructField(OFFSET, T.LongType()),
-            T.StructField(TIMESTAMP, T.LongType()),  # epoch millis, like Connect
-            T.StructField(TIMESTAMP_TYPE, T.StringType()),
-            T.StructField(KEY, T.BinaryType()),
-            T.StructField(VALUE, value_type),
-        ]
-    )
 
 
 def from_kafka_source(df: DataFrame) -> DataFrame:

@@ -2,9 +2,10 @@
 
 The reference fetches the latest Avro schema for a subject from the registry
 inside enrichJson (EnrichJsonBuilder.java:191-200: GET
-``{url}/subjects/{subject}/versions/latest``).  Here the lookup happens once
-at pipeline-compile time — the schema binds to the frame, not to each record
-(SURVEY.md §7.3.1) — so the runtime plan carries no network dependency.
+``{url}/subjects/{subject}/versions/latest``).  Here every command looks its
+schema up through ``avro_schema.bind_schema``, once, at pipeline-compile
+time — the schema binds to the frame, not to each record (SURVEY.md §7.3.1)
+— so the runtime plan carries no network dependency.
 
 Tests/offline runs register schemas in ``OVERRIDES`` instead of hitting a
 server, mirroring the reference's mock-based test strategy.

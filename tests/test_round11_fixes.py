@@ -63,10 +63,12 @@ def test_ssl_prototype_plan_carries_no_literal_centroid_tree(spark):
     cost ~5s of driver-side wall per build (2048 py4j Column builds +
     Catalyst analysis) and printed as a 130KB formatted plan; the join
     form prints ~5KB.  Pin the plan size so a literal-map regression
-    fails loudly."""
+    fails loudly.  The literal tree prints as a ``map(`` expression (once
+    in plans/r11/ssl_prototype_prune_before.txt, absent after)."""
     plan = _formatted_plan(spark, "ssl_prototype_prune")
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert len(plan) < 40_000, f"plan ballooned to {len(plan)} chars"
+    assert "map(" not in plan, "centroids are back as a literal map in the plan"
 
 
 def _formatted_plan(spark, name: str) -> str:

@@ -3,17 +3,27 @@
 For every entry in __spark_entry__.queries(): run the Spark query and the
 oracle SQL at the given SF, compare row count + normalized values
 (column-name-sorted, row-sorted, stringified; floats rounded).  Queries
-without an oracle get a rows-only check (must run and return >= 0 rows).
+without an oracle get a rows-only check (must run and return >= 0 rows);
+so do golden-backed oracles (GOLDEN_SF001_ORACLES) at any SF but sf0.01.
+
+``--json OUT`` also writes one row per query in the driver's format
+({name: {rows_match, schema_match, hash_match, spark_rows, oracle_rows,
+err}}); "hash" is equality of the canonical frames.  With ``--only a,b``
+the rows merge into an existing OUT, so a spot-run keeps a full run's rows.
 
 Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
+       python tools/check_correctness.py [sf_dir] --json OUT [--only a,b]
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import math
 import os
 import sys
 import time
+import traceback
 
 import duckdb
 
@@ -44,75 +54,94 @@ def normalize_rows(cols, rows):
     return [c for c in sorted(cols)], out
 
 
+def check(spark, con, sf_dir, build, oracle_sql):
+    """One query against its oracle: (driver-format row, status message)."""
+    row = dict.fromkeys(["rows_match", "schema_match", "hash_match", "spark_rows", "oracle_rows", "err"])
+    try:
+        sdf = build(spark, sf_dir)
+        srows = [tuple(r) for r in sdf.collect()]
+        scols = sdf.columns
+    except Exception as ex:
+        row["err"] = traceback.format_exc()[-1500:]
+        return row, f"spark error: {type(ex).__name__}: {ex}"
+    row["spark_rows"] = len(srows)
+    if oracle_sql is None:
+        row["err"] = "no_oracle"
+        return row, f"rows-only, {len(srows)} rows"
+    try:
+        ores = con.execute(oracle_sql)
+        ocols = [d[0] for d in ores.description]
+        orows = ores.fetchall()
+    except Exception as ex:
+        row["err"] = traceback.format_exc()[-1500:]
+        return row, f"oracle error: {type(ex).__name__}: {ex}"
+    row["oracle_rows"] = len(orows)
+    sc, sr = normalize_rows(scols, srows)
+    oc, orr = normalize_rows(ocols, orows)
+    row["rows_match"] = len(sr) == len(orr)
+    row["schema_match"] = sc == oc
+    row["hash_match"] = bool(row["rows_match"] and row["schema_match"] and sr == orr)
+    if not row["schema_match"]:
+        return row, f"columns differ spark={sc} oracle={oc}"
+    if not row["rows_match"]:
+        return row, f"rowcount spark={len(sr)} oracle={len(orr)}"
+    if not row["hash_match"]:
+        bad = next(i for i, (a, b) in enumerate(zip(sr, orr)) if a != b)
+        cells = [f"{sc[j]}: spark={a!r} oracle={b!r}" for j, (a, b) in enumerate(zip(sr[bad], orr[bad])) if a != b]
+        return row, (
+            f"values differ at sorted-row {bad} ({len(cells)} cell(s)):\n  " + "\n  ".join(cells)
+            + f"\n  spark : {sr[bad]}\n  oracle: {orr[bad]}"
+        )
+    return row, f"{len(sr)} rows match"
+
+
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
+    ap.add_argument("queries", nargs="*", help="only these queries")
+    ap.add_argument("--json", metavar="OUT", help="write driver-format rows to OUT")
+    ap.add_argument("--only", default="", help="comma-separated query names (merges into OUT)")
+    args = ap.parse_args()
+    only = set(args.queries) | {q for q in args.only.split(",") if q}
 
     import __spark_entry__ as e
     from kafka_connect_morphlines_spark import get_spark
     from kafka_connect_morphlines_spark.plans.queries import GOLDEN_SF001_ORACLES
 
-    spark = get_spark(app_name="check_correctness")
-    is_sf001 = os.path.normpath(sf_dir).endswith("sf0.01")
+    qs = e.queries()
+    if only - set(qs):
+        raise SystemExit(f"query names not registered: {sorted(only - set(qs))}")
+    qs = {k: v for k, v in qs.items() if not only or k in only}
+    oracles = e.oracle_sql()
+    # golden-backed oracles are pinned at sf0.01 by construction (ADVICE
+    # r09): at other SFs they degrade to rows-only
+    if not os.path.normpath(args.sf_dir).endswith("sf0.01"):
+        oracles = {k: v for k, v in oracles.items() if k not in GOLDEN_SF001_ORACLES}
 
+    spark = get_spark(app_name="check_correctness")
     con = duckdb.connect()
     for tbl in TABLES:
-        con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'")
+        con.execute(f"CREATE VIEW {tbl} AS SELECT * FROM '{args.sf_dir}/{tbl}.parquet'")
 
-    qs = e.queries()
-    oracles = e.oracle_sql()
+    results: dict[str, dict] = {}
+    if args.json and only and os.path.exists(args.json):
+        with open(args.json) as fh:
+            results.update(json.load(fh))
     failures = []
-    for name in qs:
-        if only and name not in only:
-            continue
+    for name, build in qs.items():
         t0 = time.time()
-        try:
-            sdf = qs[name](spark, sf_dir)
-            srows = sdf.collect()
-            scols = sdf.columns
-        except Exception as ex:
+        row, msg = check(spark, con, args.sf_dir, build, oracles.get(name))
+        results[name] = row
+        ok = row["hash_match"] or row["err"] == "no_oracle"
+        if not ok:
             failures.append(name)
-            print(f"FAIL  {name}: spark error: {type(ex).__name__}: {ex}")
-            continue
-        if name not in oracles or (name in GOLDEN_SF001_ORACLES and not is_sf001):
-            # golden-backed oracles are pinned at sf0.01 by construction
-            # (ADVICE r09): at other SFs they degrade to rows-only
-            print(f"ok*   {name}: rows-only, {len(srows)} rows ({time.time() - t0:.1f}s)")
-            continue
-        try:
-            ores = con.execute(oracles[name])
-            ocols = [d[0] for d in ores.description]
-            orows = ores.fetchall()
-        except Exception as ex:
-            failures.append(name)
-            print(f"FAIL  {name}: oracle error: {type(ex).__name__}: {ex}")
-            continue
-        sc, sr = normalize_rows(scols, [tuple(r) for r in srows])
-        oc, orr = normalize_rows(ocols, orows)
-        if sc != oc:
-            failures.append(name)
-            print(f"FAIL  {name}: columns differ spark={sc} oracle={oc}")
-            continue
-        if len(sr) != len(orr):
-            failures.append(name)
-            print(f"FAIL  {name}: rowcount spark={len(sr)} oracle={len(orr)}")
-            continue
-        if sr != orr:
-            failures.append(name)
-            bad = next(i for i, (a, b) in enumerate(zip(sr, orr)) if a != b)
-            cells = [
-                f"{sc[j]}: spark={a!r} oracle={b!r}"
-                for j, (a, b) in enumerate(zip(sr[bad], orr[bad]))
-                if a != b
-            ]
-            print(
-                f"FAIL  {name}: values differ at sorted-row {bad} "
-                f"({len(cells)} cell(s)):\n  " + "\n  ".join(cells)
-                + f"\n  spark : {sr[bad]}\n  oracle: {orr[bad]}"
-            )
-            continue
-        print(f"ok    {name}: {len(sr)} rows match ({time.time() - t0:.1f}s)")
+        status = "FAIL" if not ok else "ok*" if row["err"] else "ok"
+        print(f"{status:5} {name}: {msg}" + ("" if not ok else f" ({time.time() - t0:.1f}s)"))
 
+    if args.json:
+        with open(args.json, "w") as fh:
+            json.dump(results, fh, indent=1)
+            fh.write("\n")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     sys.exit(1 if failures else 0)
 
