@@ -38,18 +38,18 @@ def _body(df: DataFrame, config) -> Column:
     raise PipelineSpecError("no inputField configured and no attachment/_value column present")
 
 
-def _keep_valid(df: DataFrame, valid: Column, config) -> DataFrame:
-    """Apply a parser's validity predicate: ``flagInvalid`` marks failing
+def _keep_valid(df: DataFrame, valid: Column, flag_invalid: bool, drop_invalid: bool) -> DataFrame:
+    """Apply a parser's validity predicate: ``flag_invalid`` marks failing
     rows in ``_invalid`` for the streaming runner's DLQ split (cf. the
     reference's log-and-skip, MorphlineSinkTask.java:137), OR-ing into an
     earlier parser's flag so a row bad anywhere in the chain stays
-    quarantined; otherwise ``dropInvalid`` (default true) drops them."""
-    if config.get("flagInvalid", False):
+    quarantined; otherwise ``drop_invalid`` drops them."""
+    if flag_invalid:
         invalid = ~valid
         if "_invalid" in df.columns:
             invalid = F.col("_invalid") | invalid
         return df.withColumn("_invalid", invalid)
-    return df.filter(valid) if config.get("dropInvalid", True) else df
+    return df.filter(valid) if drop_invalid else df
 
 
 def _parse_once(
@@ -58,8 +58,9 @@ def _parse_once(
     parse: Callable,
     schema: T.StructType,
     out: str,
-    config,
     valid: Callable[[Column, str], Column],
+    flag_invalid: bool,
+    drop_invalid: bool,
 ) -> DataFrame:
     """Parse ``text`` into the ``out`` struct exactly once per row.
 
@@ -83,7 +84,7 @@ def _parse_once(
         fence = "_" + fence
     df = df.withColumn(fence, F.explode(F.array(parsed)))
     df = df.withColumn(out, F.col(fence).dropFields(corrupt))
-    return _keep_valid(df, valid(F.col(fence), corrupt), config).drop(fence)
+    return _keep_valid(df, valid(F.col(fence), corrupt), flag_invalid, drop_invalid).drop(fence)
 
 
 def _charset(config) -> str:
@@ -108,13 +109,14 @@ def read_json(config, ctx):
     """
     out = config.get("outputField", "_json")
     schema = bind_schema(config, ctx).struct
+    keep = (config.get("flagInvalid", False), config.get("dropInvalid", True))
 
     def transform(df: DataFrame) -> DataFrame:
         text = _as_text(_body(df, config), config)
         if schema is not None:
-            return _parse_once(df, text, F.from_json, schema, out, config, lambda parsed, corrupt: text.isNotNull() & parsed.getField(corrupt).isNull())
+            return _parse_once(df, text, F.from_json, schema, out, lambda parsed, corrupt: text.isNotNull() & parsed.getField(corrupt).isNull(), *keep)
         probe = F.coalesce(F.get_json_object(text, "$"), F.get_json_object(F.concat(F.lit('{"r":'), text, F.lit("}")), "$.r"))
-        return _keep_valid(df.withColumn(out, text), text.isNotNull() & probe.isNotNull(), config)
+        return _keep_valid(df.withColumn(out, text), text.isNotNull() & probe.isNotNull(), *keep)
 
     return transform
 
@@ -504,7 +506,7 @@ def read_xml(config, ctx):
     ``schemaString`` / ``schemaFile`` (required — XML has no self-describing
     types), ``inputField`` (default ``_value``), ``outputField`` (default
     ``_xml``), ``dropInvalid`` (default true, mirroring the reference's
-    failed-record drop, MorphlineSinkTask.java:136-138) / ``flagInvalid``."""
+    failed-record drop, MorphlineSinkTask.java:136-138)."""
     out = config.get("outputField", "_xml")
     schema = bind_schema(config, ctx).struct
     if schema is None:
@@ -512,12 +514,14 @@ def read_xml(config, ctx):
             "readXml needs schemaDdl or schemaString (XML carries no types; "
             "for schemaless one-off fields use extractXmlPaths on the raw text)"
         )
+    drop_invalid = config.get("dropInvalid", True)
 
     def transform(df: DataFrame) -> DataFrame:
         text = _as_text(_body(df, config), config)
         return _parse_once(
-            df, text, F.from_xml, schema, out, config,
+            df, text, F.from_xml, schema, out,
             lambda parsed, corrupt: text.isNotNull() & parsed.isNotNull() & parsed.getField(corrupt).isNull(),
+            False, drop_invalid,
         )
 
     return transform

@@ -139,7 +139,8 @@ def kafka_producer(config, ctx):
     ``properties { ... }`` map onto ``kafka.*`` writer options; per-record
     topic comes from ``topicField`` exactly like the reference's
     topic/topicField pair (ref :129-134).  Value, key (``keySchema*``) and
-    REST (``valueSchema*``) schemas bind once, here, at compile time.
+    REST (``valueSchemaString``/``valueSchemaFile``) schemas bind once, here,
+    at compile time.
     """
     transport = config.get("transport", "kafka")
     if "topic" not in config and "topicField" not in config and transport == "kafka":

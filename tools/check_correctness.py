@@ -6,12 +6,14 @@ oracle SQL at the given SF, compare row count + normalized values
 without an oracle get a rows-only check (must run and return >= 0 rows);
 so do golden-backed oracles (GOLDEN_SF001_ORACLES) at any SF but sf0.01.
 
-``--json OUT`` also writes one row per query in the driver's format
+``--json OUT`` also writes one row per query in CORRECTNESS_local.json's format
 ({name: {rows_match, schema_match, hash_match, spark_rows, oracle_rows,
-err}}); "hash" is equality of the canonical frames.  With ``--only a,b``
-the rows merge into an existing OUT, so a spot-run keeps a full run's rows.
+err}}); "hash" is equality of the canonical frames.  ``--only a,b`` runs
+just those queries; with ``--json`` their rows merge into an existing OUT,
+so a spot-run keeps a full run's rows.  sf_dir defaults to sf0.001, or to
+sf0.01 with ``--json`` (the SF the golden-backed oracles certify at).
 
-Usage: python tools/check_correctness.py [sf_dir] [query_name ...]
+Usage: python tools/check_correctness.py [sf_dir] [--only a,b]
        python tools/check_correctness.py [sf_dir] --json OUT [--only a,b]
 """
 
@@ -55,7 +57,7 @@ def normalize_rows(cols, rows):
 
 
 def check(spark, con, sf_dir, build, oracle_sql):
-    """One query against its oracle: (driver-format row, status message)."""
+    """One query against its oracle: (CORRECTNESS_local.json row, status message)."""
     row = dict.fromkeys(["rows_match", "schema_match", "hash_match", "spark_rows", "oracle_rows", "err"])
     try:
         sdf = build(spark, sf_dir)
@@ -97,12 +99,12 @@ def check(spark, con, sf_dir, build, oracle_sql):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.001")
-    ap.add_argument("queries", nargs="*", help="only these queries")
-    ap.add_argument("--json", metavar="OUT", help="write driver-format rows to OUT")
+    ap.add_argument("sf_dir", nargs="?", help="default sf0.001, or sf0.01 with --json")
+    ap.add_argument("--json", metavar="OUT", help="write CORRECTNESS_local.json-format rows to OUT")
     ap.add_argument("--only", default="", help="comma-separated query names (merges into OUT)")
     args = ap.parse_args()
-    only = set(args.queries) | {q for q in args.only.split(",") if q}
+    args.sf_dir = args.sf_dir or ("/root/testdata/sf0.01" if args.json else "/root/testdata/sf0.001")
+    only = {q for q in args.only.split(",") if q}
 
     import __spark_entry__ as e
     from kafka_connect_morphlines_spark import get_spark
