@@ -15,7 +15,7 @@ timestamp-millis/micros, date for date, Decimal for decimal, str for
 enum, bytes for fixed) so rows feed straight into an Arrow batch with the
 converted StructType.
 
-The writer exists for tests and the files-transport kafkaProducer path —
+The writer exists for tests and the jar-less kafkaProducer encode path —
 golden tests encode fixtures with it and decode through the engine.
 """
 
@@ -158,7 +158,7 @@ def decode_datum(buf: bytes, schema: str | dict | list) -> Any:
 
 
 # --------------------------------------------------------------------------
-# binary encoder (tests + files-transport producer)
+# binary encoder (tests + jar-less kafkaProducer encode)
 # --------------------------------------------------------------------------
 
 

@@ -8,12 +8,12 @@ transforms that (a) mark the pipeline's sink config and (b) when the engine
 runner executes the pipeline in batch mode, perform the write via the
 DataFrame writer (Kafka) or ``foreachPartition`` bulk HTTP (Solr-shaped).
 
-Transports:
-- ``kafka``  — spark-sql-kafka writer (jar required; raises otherwise)
-- ``files``  — JSON files to a directory (test/dev transport)
-- ``memory`` — collect into a registered in-process buffer (unit tests; the
-               analog of the reference's mocked SolrClient,
-               MorphlineSinkTaskTest.java:59-76)
+kafkaProducer transports (the reference's two,
+KafkaDataProducerCommandBuilder.java:251-374):
+- ``kafka`` — ``sources.kafka.write_kafka_batch`` (spark-sql-kafka, or the
+              embedded broker after ``sources.embedded_broker.install``;
+              ``KafkaUnavailableError`` when neither is there)
+- ``rest``  — Confluent REST-proxy POSTs, executor-side ``foreachPartition``
 """
 
 from __future__ import annotations
@@ -28,15 +28,8 @@ from kafka_connect_morphlines_spark import record as R
 from kafka_connect_morphlines_spark.avro_schema import BoundSchema, bind_schema
 from kafka_connect_morphlines_spark.commands import command
 from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
+from kafka_connect_morphlines_spark.sources.kafka import write_kafka_batch
 from kafka_connect_morphlines_spark.templates import colref
-
-def _kafka_format() -> str:
-    """The session's kafka provider name — the real connector, or the
-    embedded broker when sources.embedded_broker.install() switched it."""
-    from kafka_connect_morphlines_spark.sources import kafka as kafka_mod  # noqa: PLC0415
-
-    return kafka_mod.KAFKA_FORMAT
-
 
 # In-process sink buffers for tests (name -> list of row dicts), mirroring the
 # reference's mock-loader test strategy.
@@ -143,34 +136,36 @@ def kafka_producer(config, ctx):
     at compile time.
     """
     transport = config.get("transport", "kafka")
-    if "topic" not in config and "topicField" not in config and transport == "kafka":
-        raise PipelineSpecError("kafkaProducer requires topic or topicField (ref :129-134)")
+    if transport == "kafka":
+        if "topic" not in config and "topicField" not in config:
+            raise PipelineSpecError("kafkaProducer requires topic or topicField (ref :129-134)")
+        properties = config.get("properties", {})
+        bootstrap = properties.get("bootstrap-servers") or properties.get("bootstrap.servers")
+        if not bootstrap:
+            raise PipelineSpecError("transport=kafka requires properties { bootstrap-servers : ... }")
+        # the reference's dash->dot key rewrite (ref :229-233)
+        options = {"kafka." + str(k).replace("-", "."): str(v) for k, v in properties.items()}
+    elif transport == "rest":
+        rest_url = config.get("kafka-rest-url", config.get("kafkaRestUrl"))
+        if not rest_url:
+            raise PipelineSpecError("transport=rest requires kafka-rest-url")
+        rest_schema = bind_schema(config, ctx, "value", avro=True).avro_json
+    else:
+        raise PipelineSpecError(f"kafkaProducer transport must be kafka or rest, not {transport!r}")
     value_schema = bind_schema(config, ctx, avro=True) if config.get("format") == "avro" else None
     key_schema = bind_schema(config, ctx, "key", avro=True) if config.get("keyFormat") == "avro" else None
-    rest_schema = bind_schema(config, ctx, "value", avro=True).avro_json if transport == "rest" else None
 
     def transform(df: DataFrame) -> DataFrame:
         out = _value_columns(df, config, value_schema, key_schema)
         if transport == "kafka":
-            writer = out.write.format(_kafka_format()).mode("append")
-            bootstrap = config.get("properties", {}).get("bootstrap-servers") or config.get("properties", {}).get("bootstrap.servers")
-            if bootstrap:
-                writer = writer.option("kafka.bootstrap.servers", str(bootstrap))
-            for k, v in config.get("properties", {}).items():
-                writer = writer.option("kafka." + str(k).replace("-", "."), str(v))
-            writer.save()
-        elif transport == "files":
-            out.write.mode(config.get("mode", "append")).json(config["path"])
-        elif transport == "rest":
+            write_kafka_batch(out, str(bootstrap), options=options)
+        else:
             # Confluent REST-proxy publish (reference
             # KafkaDataProducerCommandBuilder.java:333-374): POST
             # /topics/{topic} with application/vnd.kafka.avro.v2+json and
             # {"value_schema": ..., "records": [{"key":..,"value":..}]};
             # one retry on error_code 50003 ("no leader", ref :318-328),
             # connection errors propagate (RetriableException analog).
-            rest_url = config.get("kafka-rest-url", config.get("kafkaRestUrl"))
-            if not rest_url:
-                raise PipelineSpecError("transport=rest requires kafka-rest-url")
             fixed_topic = config.get("topic")
             fixed_partition = config.get("partition")
             batch_size = int(config.get("batchSize", 500))
@@ -223,12 +218,6 @@ def kafka_producer(config, ctx):
                     send(topic, batch)
 
             out.foreachPartition(post_partition)
-        elif transport == "memory":
-            MEMORY_SINKS.setdefault(config.get("name", "kafka"), []).extend(r.asDict(recursive=True) for r in out.collect())
-        elif transport == "noop":
-            pass
-        else:
-            raise PipelineSpecError(f"unknown transport {transport!r}")
         return df  # pass-through, like the reference command
 
     return transform

@@ -60,7 +60,7 @@ KAFKA_SCHEMA = (
 
 
 def _log_dir(options: dict) -> str:
-    d = options.get("kafka.bootstrap.servers") or options.get("path")
+    d = options.get("kafka.bootstrap.servers")
     if not d:
         raise ValueError("embedded kafka broker: kafka.bootstrap.servers must name the log directory")
     return d
@@ -110,15 +110,14 @@ class _PartitionSlice(InputPartition):
         self.end = end
 
 
-class _BrokerReader(DataSourceReader):
+class _BrokerScan:
+    """The subscribed topics of one log directory, and the records of one
+    partition slice — shared by the batch and the streaming reader."""
+
     def __init__(self, options: dict):
         self.root = _log_dir(options)
         subscribe = options.get("subscribe")
         self.topics = [t.strip() for t in subscribe.split(",")] if subscribe else None
-
-    def partitions(self) -> list[InputPartition]:
-        parts = [_PartitionSlice(t, p, d, 0, None) for t, p, d in _partition_dirs(self.root, self.topics)]
-        return parts or [_PartitionSlice("", -1, "", 0, 0)]  # empty scan
 
     def read(self, part: _PartitionSlice) -> Iterator[tuple]:
         if part.partition < 0:
@@ -128,12 +127,13 @@ class _BrokerReader(DataSourceReader):
                 yield _row(part.topic, part.partition, offset, rec)
 
 
-class _BrokerStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
-        self.root = _log_dir(options)
-        subscribe = options.get("subscribe")
-        self.topics = [t.strip() for t in subscribe.split(",")] if subscribe else None
+class _BrokerReader(_BrokerScan, DataSourceReader):
+    def partitions(self) -> list[InputPartition]:
+        parts = [_PartitionSlice(t, p, d, 0, None) for t, p, d in _partition_dirs(self.root, self.topics)]
+        return parts or [_PartitionSlice("", -1, "", 0, 0)]  # empty scan
 
+
+class _BrokerStreamReader(_BrokerScan, DataSourceStreamReader):
     def _counts(self) -> dict[str, int]:
         return {
             f"{t}/{p}": len(_read_partition(d))
@@ -156,13 +156,6 @@ class _BrokerStreamReader(DataSourceStreamReader):
                 pdir = os.path.join(self.root, topic, f"p{p}")
                 out.append(_PartitionSlice(topic, int(p), pdir, lo, hi))
         return out or [_PartitionSlice("", -1, "", 0, 0)]
-
-    def read(self, part: _PartitionSlice) -> Iterator[tuple]:
-        if part.partition < 0:
-            return
-        for offset, rec in enumerate(_read_partition(part.pdir)):
-            if part.start <= offset and (part.end is None or offset < part.end):
-                yield _row(part.topic, part.partition, offset, rec)
 
     def commit(self, end: dict) -> None:
         pass  # the log is append-only; nothing to release
@@ -246,7 +239,7 @@ class EmbeddedKafkaDataSource(DataSource):
 
 def install(spark) -> None:
     """Register the embedded broker for this session and point the engine's
-    kafka call sites (sources.kafka, kafkaProducer transport=kafka) at it.
+    kafka call sites (sources.kafka, which kafkaProducer writes through) at it.
     Idempotent per session."""
     from kafka_connect_morphlines_spark.sources import kafka as kafka_mod
 

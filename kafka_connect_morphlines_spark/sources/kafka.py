@@ -10,6 +10,8 @@ record schema (record.py), so compiled pipelines run unchanged on either.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_connect_morphlines_spark import record as R
@@ -33,7 +35,9 @@ def _try(fn):
     try:
         return fn()
     except Exception as e:  # AnalysisException: Failed to find data source: kafka
-        if "kafka" in str(e).lower() or "data source" in str(e).lower():
+        # only the lookup failure; a failed write job also mentions "kafka"
+        # (the package name is in every Python worker traceback)
+        if re.search(r"failed to find (the )?data source", str(e), re.IGNORECASE):
             raise KafkaUnavailableError() from e
         raise
 
@@ -89,57 +93,3 @@ def write_kafka_batch(df: DataFrame, bootstrap: str, topic: str | None = None, o
         writer.save()
 
     return _try(go)
-
-
-def read_topic_files(
-    spark: SparkSession,
-    path: str,
-    topic: str | None = None,
-    streaming: bool = False,
-) -> DataFrame:
-    """Consume a ``kafkaProducer {transport: files}`` directory back into the
-    canonical envelope frame — the jar-less produce->consume loop.
-
-    The files transport persists (key?, value, topic?) JSON rows; this reads
-    them (batch or as a file stream for micro-batch consumption), filters to
-    ``topic`` when given, and rebuilds the envelope: ``_kafkaOffset`` is a
-    per-file monotonic id (files are the commit unit, like segment files),
-    ``_kafkaPartition`` 0, ``_timestamp`` the ingestion clock.  On a real
-    cluster the same pipeline swaps this for read_kafka_batch/stream — the
-    envelope is identical, which is the point.
-    """
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F, types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.StringType()),
-            T.StructField("value", T.StringType()),
-            T.StructField("topic", T.StringType()),
-        ]
-    )
-    if streaming:
-        df = spark.readStream.schema(schema).json(path)
-    else:
-        df = spark.read.schema(schema).json(path)
-    if topic is not None:
-        df = df.filter(F.col("topic") == topic)
-    # streaming plans reject monotonically_increasing_id; there the offset is
-    # a per-file id derived from the source file path (files are the commit
-    # unit here), so the envelope carries the same column in both modes and a
-    # pipeline referencing _kafkaOffset runs unchanged as a stream.
-    offset = (
-        F.monotonically_increasing_id()
-        if not streaming
-        else F.abs(F.xxhash64(F.col("_metadata.file_path")))
-    )
-    return df.select(
-        F.coalesce(F.col("topic"), F.lit("files")).alias(R.TOPIC),
-        F.lit(0).alias(R.PARTITION),
-        F.col("key").alias(R.KEY),
-        F.col("value").alias(R.VALUE),
-        (F.unix_timestamp(F.current_timestamp()) * 1000).alias(R.TIMESTAMP),
-        offset.alias(R.OFFSET),
-    )

@@ -8,6 +8,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafka_connect_morphlines_spark import get_spark  # noqa: E402
 from kafka_connect_morphlines_spark.record import wrap_value  # noqa: E402
+from kafka_connect_morphlines_spark.sources import embedded_broker  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -23,6 +24,17 @@ FIXED_TS = 1484897702123
 def spark():
     s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture()
+def broker(spark, tmp_path):
+    """The embedded file-backed Kafka broker for one test; yields its log
+    directory, which is the ``bootstrap-servers`` value."""
+    embedded_broker.install(spark)
+    try:
+        yield str(tmp_path / "broker")
+    finally:
+        embedded_broker.uninstall()
 
 
 @pytest.fixture(scope="session")

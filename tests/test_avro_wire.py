@@ -22,7 +22,6 @@ from kafka_connect_morphlines_spark.avro_codec import (
     encode_confluent,
     split_confluent,
 )
-from kafka_connect_morphlines_spark.sources import embedded_broker
 from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
 
 SCHEMA = json.dumps(
@@ -80,37 +79,32 @@ def test_read_avro_registry_binding(spark):
         schema_registry.ID_OVERRIDES.clear()
 
 
-def test_kafka_producer_avro_key_wire_format(spark, tmp_path):
+def test_kafka_producer_avro_key_wire_format(spark, broker):
     """keyFormat=avro wire-frames the record key too (the reference's
     default key.serializer is also KafkaAvroSerializer)."""
-    embedded_broker.install(spark)
-    try:
-        broker = str(tmp_path / "broker")
-        key_schema = '{"type":"record","name":"K","fields":[{"name":"k","type":"string"}]}'
-        p = compile_pipeline(
-            [
-                {"sqlExpr": {"_value": "struct(name, n)", "kcol": "named_struct('k', name)"}},
-                {
-                    "kafkaProducer": {
-                        "topic": "wk",
-                        "format": "avro",
-                        "schemaString": SCHEMA,
-                        "schemaId": 9,
-                        "keyField": "kcol",
-                        "keyFormat": "avro",
-                        "keySchemaString": key_schema,
-                        "keySchemaId": 4,
-                        "properties": {"bootstrap-servers": broker},
-                    }
-                },
-            ]
-        )
-        p(spark.createDataFrame([("a", 1)], "name string, n long"))
-        [row] = read_kafka_batch(spark, broker, "wk").collect()
-        assert decode_confluent(bytes(row["_key"]), key_schema) == (4, {"k": "a"})
-        assert decode_confluent(bytes(row["_value"]), SCHEMA) == (9, {"name": "a", "n": 1})
-    finally:
-        embedded_broker.uninstall()
+    key_schema = '{"type":"record","name":"K","fields":[{"name":"k","type":"string"}]}'
+    p = compile_pipeline(
+        [
+            {"sqlExpr": {"_value": "struct(name, n)", "kcol": "named_struct('k', name)"}},
+            {
+                "kafkaProducer": {
+                    "topic": "wk",
+                    "format": "avro",
+                    "schemaString": SCHEMA,
+                    "schemaId": 9,
+                    "keyField": "kcol",
+                    "keyFormat": "avro",
+                    "keySchemaString": key_schema,
+                    "keySchemaId": 4,
+                    "properties": {"bootstrap-servers": broker},
+                }
+            },
+        ]
+    )
+    p(spark.createDataFrame([("a", 1)], "name string, n long"))
+    [row] = read_kafka_batch(spark, broker, "wk").collect()
+    assert decode_confluent(bytes(row["_key"]), key_schema) == (4, {"k": "a"})
+    assert decode_confluent(bytes(row["_value"]), SCHEMA) == (9, {"name": "a", "n": 1})
 
 
 def test_read_avro_wire_format_rejects_bad_magic(spark):
@@ -152,34 +146,29 @@ def test_read_avro_wire_format_on_stream(spark, tmp_path):
     assert got == [("a", 0), ("b", 1), ("c", 2)]
 
 
-def test_kafka_producer_wire_format_through_broker(spark, tmp_path):
+def test_kafka_producer_wire_format_through_broker(spark, broker):
     """kafkaProducer {format: avro, schemaId}: the raw bytes on the broker
     are Confluent wire format — an external consumer's split+decode reads
     them back without touching this engine's produce path."""
-    embedded_broker.install(spark)
-    try:
-        broker = str(tmp_path / "broker")
-        p = compile_pipeline(
-            [
-                {"sqlExpr": {"_value": "struct(name, n)"}},
-                {
-                    "kafkaProducer": {
-                        "topic": "wire",
-                        "format": "avro",
-                        "schemaString": SCHEMA,
-                        "schemaId": 9,
-                        "properties": {"bootstrap-servers": broker},
-                    }
-                },
-            ]
-        )
-        src = spark.createDataFrame([("a", 1), ("b", 2)], "name string, n long")
-        assert p(src).count() == 2  # pass-through frame survives
-        raw = [bytes(r["_value"]) for r in read_kafka_batch(spark, broker, "wire").collect()]
-        decoded = sorted((decode_confluent(v, SCHEMA) for v in raw), key=lambda t: t[1]["name"])
-        assert decoded == [(9, {"name": "a", "n": 1}), (9, {"name": "b", "n": 2})]
-    finally:
-        embedded_broker.uninstall()
+    p = compile_pipeline(
+        [
+            {"sqlExpr": {"_value": "struct(name, n)"}},
+            {
+                "kafkaProducer": {
+                    "topic": "wire",
+                    "format": "avro",
+                    "schemaString": SCHEMA,
+                    "schemaId": 9,
+                    "properties": {"bootstrap-servers": broker},
+                }
+            },
+        ]
+    )
+    src = spark.createDataFrame([("a", 1), ("b", 2)], "name string, n long")
+    assert p(src).count() == 2  # pass-through frame survives
+    raw = [bytes(r["_value"]) for r in read_kafka_batch(spark, broker, "wire").collect()]
+    decoded = sorted((decode_confluent(v, SCHEMA) for v in raw), key=lambda t: t[1]["name"])
+    assert decoded == [(9, {"name": "a", "n": 1}), (9, {"name": "b", "n": 2})]
 
 
 def test_from_connect_data_avro_roundtrip_jarless(spark):

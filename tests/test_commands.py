@@ -222,19 +222,6 @@ def test_pandas_batch_command(spark):
     assert sorted((r["x"], r["double"]) for r in out.collect()) == [(5, 10), (6, 12)]
 
 
-def test_kafka_producer_files_transport(spark, tmp_path):
-    out_dir = str(tmp_path / "kafka_out")
-    p = compile_pipeline(
-        [{"kafkaProducer": {"transport": "files", "path": out_dir, "topic": "t1", "valueField": "v", "format": "json"}}]
-    )
-    df = spark.createDataFrame([("a",), ("b",)], "v string")
-    result = p(df)  # pass-through publisher
-    assert result.count() == 2
-    written = spark.read.json(out_dir)
-    assert sorted(r["value"] for r in written.collect()) == ["a", "b"]
-    assert written.select("topic").distinct().collect()[0]["topic"] == "t1"
-
-
 def test_load_solr_mock_client(spark):
     """Mirrors the reference's mocked-SolrClient test strategy
     (MorphlineSinkTaskTest.java:59-91)."""

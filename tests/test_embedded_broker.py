@@ -14,21 +14,12 @@ from __future__ import annotations
 import pytest
 
 from kafka_connect_morphlines_spark import compile_pipeline
-from kafka_connect_morphlines_spark.sources import embedded_broker
 from kafka_connect_morphlines_spark.sources.kafka import (
+    KafkaUnavailableError,
     read_kafka_batch,
     read_kafka_stream,
     write_kafka_batch,
 )
-
-
-@pytest.fixture()
-def broker(spark, tmp_path):
-    embedded_broker.install(spark)
-    try:
-        yield str(tmp_path / "broker")
-    finally:
-        embedded_broker.uninstall()
 
 
 def test_batch_roundtrip_envelope(spark, broker):
@@ -60,6 +51,31 @@ def test_kafka_producer_native_transport(spark, broker):
     assert p(src).count() == 2  # pass-through frame survives
     got = sorted(bytes(r["_value"]).decode() for r in read_kafka_batch(spark, broker, "out").collect())
     assert got == ['{"n":1,"name":"a"}', '{"n":2,"name":"b"}'] or got == ['{"name":"a","n":1}', '{"name":"b","n":2}']
+
+    # valueField names the payload column; a string value is published as-is
+    p = compile_pipeline(
+        [{"kafkaProducer": {"topic": "t1", "valueField": "v", "format": "json", "properties": {"bootstrap-servers": broker}}}]
+    )
+    assert p(spark.createDataFrame([("a",), ("b",)], "v string")).count() == 2
+    rows = read_kafka_batch(spark, broker, "t1").collect()
+    assert sorted(bytes(r["_value"]).decode() for r in rows) == ["a", "b"]
+    assert {r["_topic"] for r in rows} == {"t1"}
+
+
+def test_kafka_producer_job_failure_keeps_its_error(spark, broker):
+    """A publish job that fails surfaces its own error: only a missing kafka
+    data source is reported as KafkaUnavailableError, although every Python
+    worker traceback names this package."""
+    schema = '{"type":"record","name":"E","fields":[{"name":"n","type":"long"}]}'
+    p = compile_pipeline(
+        [
+            {"sqlExpr": {"_value": "struct(n)"}},
+            {"kafkaProducer": {"topic": "bad", "format": "avro", "schemaString": schema, "properties": {"bootstrap-servers": broker}}},
+        ]
+    )
+    with pytest.raises(Exception) as err:
+        p(spark.createDataFrame([(None,)], "n long"))
+    assert not isinstance(err.value, KafkaUnavailableError)
 
 
 def test_per_record_topic_and_key_partitioning(spark, broker):
@@ -128,10 +144,11 @@ def test_streaming_consume_with_incremental_publish(spark, broker, tmp_path):
     write_kafka_batch(
         spark.createDataFrame([(None, '{"n":1}', "t")], "key string, value string, topic string"), broker
     )
+    stream = read_kafka_stream(spark, broker, "t")
+    assert stream.columns == read_kafka_batch(spark, broker, "t").columns  # identical envelope
     seen = []
     q = (
-        read_kafka_stream(spark, broker, "t")
-        .writeStream.foreachBatch(lambda b, e: seen.extend(b.collect()))
+        stream.writeStream.foreachBatch(lambda b, e: seen.extend(b.collect()))
         .option("checkpointLocation", str(tmp_path / "ck"))
         .start()
     )

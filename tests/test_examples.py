@@ -25,7 +25,7 @@ def test_cloudsolr_like_pipeline(spark):
     assert "#" in doc["id"] and doc["ts"].endswith("Z")
 
 
-def test_heterogeneous_topic_branching(spark, tmp_path):
+def test_heterogeneous_topic_branching(spark, broker):
     """Mixed-schema topic -> branch_by_schema -> per-schema pipelines ->
     union: the frame-wide analog of the reference's per-record _valueSchema
     dispatch (SURVEY §7.3.1), driven end-to-end through the embedded
@@ -33,58 +33,57 @@ def test_heterogeneous_topic_branching(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka_connect_morphlines_spark import branch_by_schema
-    from kafka_connect_morphlines_spark.sources import embedded_broker
     from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch, write_kafka_batch
 
-    embedded_broker.install(spark)
-    try:
-        broker = str(tmp_path / "broker")
-        records = [
-            (None, '{"type":"order","order_id":1,"amount":9.5}', "mixed"),
-            (None, '{"type":"user","user_id":7,"name":"ada"}', "mixed"),
-            (None, '{"type":"order","order_id":2,"amount":1.25}', "mixed"),
-            (None, '{"type":"mystery","x":1}', "mixed"),
-        ]
-        write_kafka_batch(spark.createDataFrame(records, "key string, value string, topic string"), broker)
+    records = [
+        (None, '{"type":"order","order_id":1,"amount":9.5}', "mixed"),
+        (None, '{"type":"user","user_id":7,"name":"ada"}', "mixed"),
+        (None, '{"type":"order","order_id":2,"amount":1.25}', "mixed"),
+        (None, '{"type":"mystery","x":1}', "mixed"),
+    ]
+    write_kafka_batch(spark.createDataFrame(records, "key string, value string, topic string"), broker)
 
-        env = read_kafka_batch(spark, broker, "mixed").withColumn("_value", F.col("_value").cast("string"))
-        conf = os.path.join(EXAMPLES, "heterogeneous_topic.conf")
-        orders = Pipeline.from_file(conf, morphline_id="orders_branch")
-        users = Pipeline.from_file(conf, morphline_id="users_branch")
-        unknown = Pipeline.from_file(conf, morphline_id="unknown_branch")
-        disc = F.get_json_object(F.col("_value"), "$.type")
-        out = branch_by_schema(
-            env,
-            [(disc == "order", orders), (disc == "user", users)],
-            otherwise=unknown,
-        )
-        rows = out.select("kind", "order_id", "amount", "user_id", "name").collect()
-        by_kind = {}
-        for r in rows:
-            by_kind.setdefault(r["kind"], []).append(r)
-        assert len(by_kind["order"]) == 2 and len(by_kind["user"]) == 1 and len(by_kind["unknown"]) == 1
-        o = {r["order_id"]: r["amount"] for r in by_kind["order"]}
-        assert o == {"1": 9.5, "2": 1.25}  # toString'd ids, typed amounts
-        u = by_kind["user"][0]
-        assert (u["user_id"], u["name"]) == ("7", "ada")
-        assert u["order_id"] is None and u["amount"] is None  # null-filled union
-    finally:
-        embedded_broker.uninstall()
+    env = read_kafka_batch(spark, broker, "mixed").withColumn("_value", F.col("_value").cast("string"))
+    conf = os.path.join(EXAMPLES, "heterogeneous_topic.conf")
+    orders = Pipeline.from_file(conf, morphline_id="orders_branch")
+    users = Pipeline.from_file(conf, morphline_id="users_branch")
+    unknown = Pipeline.from_file(conf, morphline_id="unknown_branch")
+    disc = F.get_json_object(F.col("_value"), "$.type")
+    out = branch_by_schema(
+        env,
+        [(disc == "order", orders), (disc == "user", users)],
+        otherwise=unknown,
+    )
+    rows = out.select("kind", "order_id", "amount", "user_id", "name").collect()
+    by_kind = {}
+    for r in rows:
+        by_kind.setdefault(r["kind"], []).append(r)
+    assert len(by_kind["order"]) == 2 and len(by_kind["user"]) == 1 and len(by_kind["unknown"]) == 1
+    o = {r["order_id"]: r["amount"] for r in by_kind["order"]}
+    assert o == {"1": 9.5, "2": 1.25}  # toString'd ids, typed amounts
+    u = by_kind["user"][0]
+    assert (u["user_id"], u["name"]) == ("7", "ada")
+    assert u["order_id"] is None and u["amount"] is None  # null-filled union
 
 
-def test_producer_like_pipeline(spark, tmp_path, monkeypatch):
-    out_dir = str(tmp_path / "produced")
-    monkeypatch.setenv("PRODUCER_OUT_DIR", out_dir)
+def test_producer_like_pipeline(spark, broker, monkeypatch):
+    """examples/producer_like.conf republishes each event to
+    enriched-<event_type> through the native transport."""
+    from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
+
+    monkeypatch.setenv("PRODUCER_BOOTSTRAP", broker)
     pipe = Pipeline.from_file(os.path.join(EXAMPLES, "producer_like.conf"), morphline_id="republish")
-    events = load_table(spark, "/root/testdata/sf0.001", "events").limit(20)
-    result = pipe(events)
+    events = load_table(spark, "/root/testdata/sf0.001", "events")
+    result = pipe(events.limit(20))
     assert result.count() == 20  # pass-through publisher
-    written = spark.read.json(out_dir)
-    assert written.count() == 20
-    row = written.collect()[0]
-    assert row["topic"].startswith("enriched-")
-    payload = json.loads(row["value"])
-    assert set(payload) >= {"event_id", "uid", "user_id"}
+    event_type = {r["event_id"]: r["event_type"] for r in events.select("event_id", "event_type").collect()}
+    topics = ",".join(sorted({f"enriched-{t}" for t in event_type.values()}))
+    written = read_kafka_batch(spark, broker, topics).collect()
+    assert len(written) == 20
+    for row in written:
+        payload = json.loads(bytes(row["_value"]))
+        assert set(payload) >= {"event_id", "uid", "user_id"}
+        assert row["_topic"] == f"enriched-{event_type[payload['event_id']]}"
 
 
 def test_salted_aggregate_matches_plain(spark):
@@ -137,25 +136,26 @@ def test_session_window_stream(spark, tmp_path):
     assert batch_face == stream_sessions
 
 
-def test_streaming_dlq_example(spark, tmp_path):
-    """The full jar-less loop: kafkaProducer files transport -> streaming
-    consume (read_topic_files) -> examples/streaming_dlq.conf pipeline ->
+def test_streaming_dlq_example(spark, broker, tmp_path):
+    """The full jar-less loop: kafkaProducer -> embedded broker -> streaming
+    consume (read_kafka_stream) -> examples/streaming_dlq.conf pipeline ->
     good rows to the sink, bad payloads to the quarantine DLQ."""
+    from pyspark.sql import functions as F
+
     from kafka_connect_morphlines_spark import compile_pipeline
-    from kafka_connect_morphlines_spark.sources.kafka import read_topic_files
+    from kafka_connect_morphlines_spark.sources.kafka import read_kafka_stream
     from kafka_connect_morphlines_spark.streaming import runner
 
-    topic_dir = str(tmp_path / "topic")
     # produce: two valid JSON payloads and one broken one
     src = spark.createDataFrame(
         [('{"name":"a","n":1}',), ('{"name":"b","n":2}',), ("broken",)], "_value string"
     )
-    produce = compile_pipeline([{"kafkaProducer": {"transport": "files", "path": topic_dir, "topic": "demo"}}])
+    produce = compile_pipeline([{"kafkaProducer": {"topic": "demo", "properties": {"bootstrap-servers": broker}}}])
     produce(src).count()
 
     pipe = Pipeline.from_file(os.path.join(EXAMPLES, "streaming_dlq.conf"), morphline_id="consume_clean")
     good, bad = [], []
-    stream = read_topic_files(spark, topic_dir, topic="demo", streaming=True)
+    stream = read_kafka_stream(spark, broker, "demo").withColumn("_value", F.col("_value").cast("string"))
     q = runner.run_stream(
         stream,
         pipe,

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pytest
 
-from kafka_connect_morphlines_spark import record as R
+from kafka_connect_morphlines_spark import compile_pipeline, record as R
 from kafka_connect_morphlines_spark.sources import kafka as K
 
 
@@ -35,7 +35,7 @@ def test_jar_kafka_batch_and_stream_plan(spark):
         pytest.skip("spark-sql-kafka jar not on the classpath")
     env = K.read_kafka_batch(spark, "localhost:1", "t1,t2")
     # canonical envelope schema, straight from the real connector's plan
-    for col in (R.TOPIC, R.KAFKA_PARTITION, R.KAFKA_OFFSET, R.KEY, R.VALUE, R.TIMESTAMP):
+    for col in (R.TOPIC, R.PARTITION, R.OFFSET, R.KEY, R.VALUE, R.TIMESTAMP):
         assert col in env.columns, env.columns
     assert not env.isStreaming
 
@@ -46,14 +46,20 @@ def test_jar_kafka_batch_and_stream_plan(spark):
 
 def test_jarless_paths_raise_kafka_unavailable(spark):
     """The inverse gate: without the jar (this sandbox), the real-connector
-    entry points must fail with the actionable KafkaUnavailableError, not
-    an opaque AnalysisException."""
+    entry points, and kafkaProducer which writes through them, must fail
+    with the actionable KafkaUnavailableError, not an opaque
+    AnalysisException."""
     if K.KAFKA_FORMAT != "kafka" or _jar_present(spark):
         pytest.skip("spark-sql-kafka jar IS present; the error path is moot")
     with pytest.raises(K.KafkaUnavailableError):
         K.read_kafka_batch(spark, "localhost:1", "t")
     with pytest.raises(K.KafkaUnavailableError):
         K.read_kafka_stream(spark, "localhost:1", "t")
+    produce = compile_pipeline(
+        [{"kafkaProducer": {"transport": "kafka", "topic": "t", "properties": {"bootstrap-servers": "localhost:1"}}}]
+    )
+    with pytest.raises(K.KafkaUnavailableError):
+        produce(spark.createDataFrame([("v",)], "_value string"))
 
 
 @pytest.mark.kafka_jar
@@ -93,5 +99,5 @@ def test_jar_kafka_data_roundtrip(spark):
     }
     assert got == {(f"k{i}", f"v{i}") for i in range(50)}
     # envelope metadata really came from the broker
-    meta = env.select(R.TOPIC, R.KAFKA_PARTITION, R.KAFKA_OFFSET).limit(1).collect()[0]
-    assert meta[R.TOPIC] == topic and meta[R.KAFKA_OFFSET] >= 0
+    meta = env.select(R.TOPIC, R.PARTITION, R.OFFSET).limit(1).collect()[0]
+    assert meta[R.TOPIC] == topic and meta[R.OFFSET] >= 0

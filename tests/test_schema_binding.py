@@ -11,8 +11,8 @@ import pytest
 
 from kafka_connect_morphlines_spark import Pipeline, compile_pipeline, schema_registry
 from kafka_connect_morphlines_spark.avro_codec import decode_confluent, decode_datum
-from kafka_connect_morphlines_spark.commands import sinks
 from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
+from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
 from kafka_connect_morphlines_spark.streaming.runner import quarantine_split
 
 SCHEMA = json.dumps(
@@ -36,26 +36,27 @@ def _conf_pipeline(tmp_path, monkeypatch, commands: str) -> Pipeline:
     return Pipeline.from_file(str(conf), morphline_id="p")
 
 
-def test_kafka_producer_relative_schema_file_from_other_cwd(spark, tmp_path, monkeypatch):
+def test_kafka_producer_relative_schema_file_from_other_cwd(spark, broker, tmp_path, monkeypatch):
     p = _conf_pipeline(
         tmp_path,
         monkeypatch,
         """
         { sqlExpr { _value : "struct(name, n)", kcol : "named_struct('k', name)" } }
         { kafkaProducer {
-            transport : memory, name : rel_schema, format : avro, schemaFile : "schemas/ev.avsc", schemaId : 5
+            topic : rel_schema, format : avro, schemaFile : "schemas/ev.avsc", schemaId : 5
             keyField : kcol, keyFormat : avro, keySchemaFile : "schemas/key.avsc"
+            properties { bootstrap-servers : "%s" }
         } }
-        """,
+        """
+        % broker,
     )
-    sinks.MEMORY_SINKS.pop("rel_schema", None)
     p(spark.createDataFrame([("a", 1), ("b", 2)], "name string, n long")).count()
-    rows = sinks.MEMORY_SINKS.pop("rel_schema")
-    assert sorted((decode_confluent(bytes(r["value"]), SCHEMA) for r in rows), key=lambda t: t[1]["name"]) == [
+    rows = read_kafka_batch(spark, broker, "rel_schema").collect()
+    assert sorted((decode_confluent(bytes(r["_value"]), SCHEMA) for r in rows), key=lambda t: t[1]["name"]) == [
         (5, {"name": "a", "n": 1}),
         (5, {"name": "b", "n": 2}),
     ]
-    assert sorted(decode_datum(bytes(r["key"]), KEY_SCHEMA)["k"] for r in rows) == ["a", "b"]
+    assert sorted(decode_datum(bytes(r["_key"]), KEY_SCHEMA)["k"] for r in rows) == ["a", "b"]
 
 
 def test_from_connect_data_relative_schema_file_from_other_cwd(spark, tmp_path, monkeypatch):
@@ -71,7 +72,7 @@ def test_from_connect_data_relative_schema_file_from_other_cwd(spark, tmp_path, 
     assert [decode_datum(bytes(r["_attachment_body"]), SCHEMA) for r in rows] == [{"name": "a", "n": 1}]
 
 
-def test_kafka_producer_registry_schema_resolves_once(spark, monkeypatch):
+def test_kafka_producer_registry_schema_resolves_once(spark, broker, monkeypatch):
     """The registry lookup happens when the pipeline compiles, not once per
     applied micro-batch."""
     calls = []
@@ -86,10 +87,9 @@ def test_kafka_producer_registry_schema_resolves_once(spark, monkeypatch):
             {"sqlExpr": {"_value": "struct(name, n)"}},
             {
                 "kafkaProducer": {
-                    "transport": "memory",
-                    "name": "reg_once",
+                    "topic": "reg_once",
                     "format": "avro",
-                    "properties": {"schema-registry-url": "http://registry.invalid"},
+                    "properties": {"bootstrap-servers": broker, "schema-registry-url": "http://registry.invalid"},
                     "subject": "ev-value",
                 }
             },
@@ -98,9 +98,9 @@ def test_kafka_producer_registry_schema_resolves_once(spark, monkeypatch):
     df = spark.createDataFrame([("a", 1)], "name string, n long")
     p(df).count()
     p(df).count()
-    rows = sinks.MEMORY_SINKS.pop("reg_once")
+    rows = read_kafka_batch(spark, broker, "reg_once").collect()
     assert calls == ["ev-value"]
-    assert [decode_datum(bytes(r["value"]), SCHEMA) for r in rows] == [{"name": "a", "n": 1}] * 2
+    assert [decode_datum(bytes(r["_value"]), SCHEMA) for r in rows] == [{"name": "a", "n": 1}] * 2
 
 
 def test_enrich_json_binds_registry_schema_id(spark):

@@ -1,4 +1,5 @@
-"""Sink paths: HTTP bulk loader against a live local server, memory sinks."""
+"""Sink paths: HTTP bulk loader against a live local server, memory sinks,
+and kafkaProducer's two transports (kafka through the embedded broker, rest)."""
 
 import json
 import threading
@@ -8,6 +9,7 @@ import pytest
 
 from kafka_connect_morphlines_spark import compile_pipeline
 from kafka_connect_morphlines_spark.commands.sinks import MEMORY_SINKS
+from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
 
 
 @pytest.fixture()
@@ -66,7 +68,6 @@ def test_load_solr_zkhost_locator(spark, http_collector):
 
 def test_load_solr_zkhost_unresolvable(spark):
     from kafka_connect_morphlines_spark.commands.schema import resolve_zk_host
-    from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
 
     with pytest.raises(PipelineSpecError, match="no ZooKeeper resolver"):
         resolve_zk_host("nowhere:2181")
@@ -119,58 +120,50 @@ def test_load_solr_drops_reserved_fields(spark):
     assert MEMORY_SINKS["solr"] == [{"field": "keep"}]
 
 
-def test_kafka_files_transport_roundtrip(spark, tmp_path):
-    """kafkaProducer {transport: files} -> read_topic_files: the jar-less
-    produce/consume loop preserves values and per-record topics, and the
-    consumed frame is a canonical envelope a pipeline can process."""
-    from kafka_connect_morphlines_spark import compile_pipeline
-    from kafka_connect_morphlines_spark.sources.kafka import read_topic_files
+def test_kafka_producer_topic_field_roundtrip(spark, broker):
+    """kafkaProducer {topicField} -> read_kafka_batch: each record lands on
+    the topic its row names, values survive, and the consumed frame is a
+    canonical envelope a pipeline can process."""
+    from pyspark.sql import functions as F
 
-    out_dir = str(tmp_path / "topic_files")
+    from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
+
     df = spark.createDataFrame(
         [("a", 1, "t1"), ("b", 2, "t2"), ("c", 3, "t1")], "name string, n int, dest string"
     )
     produce = compile_pipeline(
         [
             {"sqlExpr": {"_value": "struct(name, n)"}},
-            {"kafkaProducer": {"transport": "files", "path": out_dir, "topicField": "dest"}},
+            {"kafkaProducer": {"topicField": "dest", "properties": {"bootstrap-servers": broker}}},
         ]
     )
     produce(df).count()  # executes the pass-through publish
 
-    env = read_topic_files(spark, out_dir, topic="t1")
+    env = read_kafka_batch(spark, broker, "t1").withColumn("_value", F.col("_value").cast("string"))
     consume = compile_pipeline([{"readJson": {"inputField": "_value", "schemaDdl": "name string, n int"}}])
     rows = sorted((r["name"], r["n"]) for r in consume(env).select("_json.name", "_json.n").collect())
     assert rows == [("a", 1), ("c", 3)]
-    offsets = [r["_kafkaOffset"] for r in env.collect()]
-    assert len(set(offsets)) == len(offsets)  # distinct offsets
+    assert sorted(r["_kafkaOffset"] for r in env.collect()) == [0, 1]
+    assert [r["_topic"] for r in read_kafka_batch(spark, broker, "t2").collect()] == ["t2"]
 
 
-def test_kafka_files_streaming_envelope_has_offset(spark, tmp_path):
-    """The streaming consume face carries _kafkaOffset too (per-file id —
-    files are the commit unit), so a pipeline referencing it runs unchanged
-    in batch and stream modes."""
-    from kafka_connect_morphlines_spark import compile_pipeline
-    from kafka_connect_morphlines_spark.sources.kafka import read_topic_files
-
-    topic_dir = str(tmp_path / "topic")
-    df = spark.createDataFrame([('{"n":1}',), ('{"n":2}',)], "_value string")
-    produce = compile_pipeline([{"kafkaProducer": {"transport": "files", "path": topic_dir, "topic": "demo"}}])
-    produce(df).count()
-
-    stream = read_topic_files(spark, topic_dir, topic="demo", streaming=True)
-    batch = read_topic_files(spark, topic_dir, topic="demo")
-    assert stream.columns == batch.columns  # identical envelope
-    seen = []
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda b, e: seen.extend(r["_kafkaOffset"] for r in b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert len(seen) == 2 and all(o is not None and o >= 0 for o in seen)
+@pytest.mark.parametrize(
+    "config",
+    [
+        {"transport": "files", "path": "out", "topic": "t"},
+        {"transport": "memory", "name": "sink", "topic": "t"},
+        {"transport": "noop", "topic": "t"},
+        {"transport": "bogus", "topic": "t"},
+        {"transport": "kafka", "topic": "t"},
+        {"transport": "rest", "topic": "t"},
+    ],
+    ids=["files", "memory", "noop", "bogus", "kafka-without-bootstrap", "rest-without-url"],
+)
+def test_kafka_producer_rejects_bad_transport_at_compile(config):
+    """kafkaProducer has the reference's two transports, kafka and rest, and
+    a transport it cannot run fails when the pipeline compiles."""
+    with pytest.raises(PipelineSpecError):
+        compile_pipeline([{"kafkaProducer": config}])
 
 
 def test_kafka_producer_rest_transport_plain_string_value(spark):
