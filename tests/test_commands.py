@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from kafka_connect_morphlines_spark import compile_pipeline
 from kafka_connect_morphlines_spark.commands.sinks import LOAD_CLIENTS, MEMORY_SINKS
+from kafka_connect_morphlines_spark.sources.kafka import read_kafka_batch
 
 
 def run(spark, commands, rows, schema):
@@ -220,6 +221,20 @@ def test_pandas_batch_command(spark):
         "x long",
     )
     assert sorted((r["x"], r["double"]) for r in out.collect()) == [(5, 10), (6, 12)]
+
+
+def test_kafka_producer_files_transport(spark, broker):
+    """valueField + format json through the native transport, published to
+    the embedded broker's file-backed log: a string value goes out as-is."""
+    p = compile_pipeline(
+        [{"kafkaProducer": {"topic": "t1", "valueField": "v", "format": "json", "properties": {"bootstrap-servers": broker}}}]
+    )
+    df = spark.createDataFrame([("a",), ("b",)], "v string")
+    result = p(df)  # pass-through publisher
+    assert result.count() == 2
+    rows = read_kafka_batch(spark, broker, "t1").collect()
+    assert sorted(bytes(r["_value"]).decode() for r in rows) == ["a", "b"]
+    assert {r["_topic"] for r in rows} == {"t1"}
 
 
 def test_load_solr_mock_client(spark):

@@ -52,15 +52,6 @@ def test_kafka_producer_native_transport(spark, broker):
     got = sorted(bytes(r["_value"]).decode() for r in read_kafka_batch(spark, broker, "out").collect())
     assert got == ['{"n":1,"name":"a"}', '{"n":2,"name":"b"}'] or got == ['{"name":"a","n":1}', '{"name":"b","n":2}']
 
-    # valueField names the payload column; a string value is published as-is
-    p = compile_pipeline(
-        [{"kafkaProducer": {"topic": "t1", "valueField": "v", "format": "json", "properties": {"bootstrap-servers": broker}}}]
-    )
-    assert p(spark.createDataFrame([("a",), ("b",)], "v string")).count() == 2
-    rows = read_kafka_batch(spark, broker, "t1").collect()
-    assert sorted(bytes(r["_value"]).decode() for r in rows) == ["a", "b"]
-    assert {r["_topic"] for r in rows} == {"t1"}
-
 
 def test_kafka_producer_job_failure_keeps_its_error(spark, broker):
     """A publish job that fails surfaces its own error: only a missing kafka
