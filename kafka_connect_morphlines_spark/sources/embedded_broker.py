@@ -29,13 +29,25 @@ there.
 
 Log layout: ``<dir>/<topic>/p<partition>/<monotonic-name>.jsonl`` with one
 base64 (key, value, ts) record per line; offsets are record positions in
-filename order — files are the commit unit, append-only, no rewrites.
+filename order — files are the commit unit, append-only, no rewrites.  A
+writer task writes a hidden temp file and renames it into place under the
+partition's lock, taking the name at rename time, so a reader sees a whole
+file or none of it and files become visible in name order.
+
+Because a visible file never changes, the streaming reader counts each file
+once (non-blank lines, no JSON parse) and keeps the count; a micro-batch's
+slice names only the files holding its offsets.  A trigger therefore costs
+O(new files + slice), not O(everything ever published).  A file that
+appears sorting before one already counted would shift offsets that were
+already handed out, so the reader raises instead.
 """
 
 from __future__ import annotations
 
 import base64
+import bisect
 import datetime
+import fcntl
 import hashlib
 import json
 import os
@@ -81,17 +93,14 @@ def _partition_dirs(root: str, topics: list[str] | None) -> list[tuple[str, int,
     return out
 
 
-def _read_partition(pdir: str) -> list[dict]:
-    """All records of one partition in offset order (filename order)."""
-    records: list[dict] = []
-    for fname in sorted(os.listdir(pdir)):
-        if not fname.endswith(".jsonl"):
-            continue
-        with open(os.path.join(pdir, fname), encoding="utf-8") as fh:
-            for line in fh:
-                if line.strip():
-                    records.append(json.loads(line))
-    return records
+def _log_files(pdir: str) -> list[str]:
+    """The visible log files of one partition, in offset (filename) order."""
+    return sorted(f for f in os.listdir(pdir) if f.endswith(".jsonl"))
+
+
+def _count_records(path: str) -> int:
+    with open(path, "rb") as fh:
+        return sum(1 for line in fh if line.strip())
 
 
 def _row(topic: str, partition: int, offset: int, rec: dict) -> tuple:
@@ -102,12 +111,20 @@ def _row(topic: str, partition: int, offset: int, rec: dict) -> tuple:
 
 
 class _PartitionSlice(InputPartition):
-    def __init__(self, topic: str, partition: int, pdir: str, start: int, end: int | None):
+    """Offsets ``[start, end)`` of one partition (``end`` None: to its last
+    record), held in ``files``, whose first record has offset ``first``."""
+
+    def __init__(self, topic: str, partition: int, pdir: str, files: list[str], first: int, start: int, end: int | None):
         self.topic = topic
         self.partition = partition
         self.pdir = pdir
+        self.files = files
+        self.first = first
         self.start = start
         self.end = end
+
+
+_EMPTY_SCAN = _PartitionSlice("", -1, "", [], 0, 0, 0)
 
 
 class _BrokerScan:
@@ -120,25 +137,50 @@ class _BrokerScan:
         self.topics = [t.strip() for t in subscribe.split(",")] if subscribe else None
 
     def read(self, part: _PartitionSlice) -> Iterator[tuple]:
-        if part.partition < 0:
-            return
-        for offset, rec in enumerate(_read_partition(part.pdir)):
-            if offset >= part.start and (part.end is None or offset < part.end):
-                yield _row(part.topic, part.partition, offset, rec)
+        offset = part.first
+        for fname in part.files:
+            with open(os.path.join(part.pdir, fname), encoding="utf-8") as fh:
+                for line in fh:
+                    if not line.strip():
+                        continue
+                    if part.end is not None and offset >= part.end:
+                        return
+                    if offset >= part.start:
+                        yield _row(part.topic, part.partition, offset, json.loads(line))
+                    offset += 1
 
 
 class _BrokerReader(_BrokerScan, DataSourceReader):
     def partitions(self) -> list[InputPartition]:
-        parts = [_PartitionSlice(t, p, d, 0, None) for t, p, d in _partition_dirs(self.root, self.topics)]
-        return parts or [_PartitionSlice("", -1, "", 0, 0)]  # empty scan
+        parts = [_PartitionSlice(t, p, d, _log_files(d), 0, 0, None) for t, p, d in _partition_dirs(self.root, self.topics)]
+        return parts or [_EMPTY_SCAN]
 
 
 class _BrokerStreamReader(_BrokerScan, DataSourceStreamReader):
+    def __init__(self, options: dict):
+        super().__init__(options)
+        # per "topic/partition": the counted log files in offset order and
+        # the offset one past each one's last record
+        self.files: dict[str, list[str]] = {}
+        self.ends: dict[str, list[int]] = {}
+
     def _counts(self) -> dict[str, int]:
-        return {
-            f"{t}/{p}": len(_read_partition(d))
-            for t, p, d in _partition_dirs(self.root, self.topics)
-        }
+        """Record count per partition, counting only files not counted yet."""
+        out = {}
+        for t, p, d in _partition_dirs(self.root, self.topics):
+            key = f"{t}/{p}"
+            files, ends = self.files.setdefault(key, []), self.ends.setdefault(key, [])
+            names = _log_files(d)
+            if names[: len(files)] != files:
+                raise ValueError(
+                    f"embedded kafka broker: the log of {key} changed below offset "
+                    f"{ends[-1]} (a file appeared out of name order or was removed)"
+                )
+            for name in names[len(files) :]:
+                ends.append((ends[-1] if ends else 0) + _count_records(os.path.join(d, name)))
+                files.append(name)
+            out[key] = ends[-1] if ends else 0
+        return out
 
     def initialOffset(self) -> dict:
         # earliest: every known partition starts at 0
@@ -148,14 +190,23 @@ class _BrokerStreamReader(_BrokerScan, DataSourceStreamReader):
         return self._counts()
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        if any(hi > (self.ends.get(key) or [0])[-1] for key, hi in end.items()):
+            self._counts()  # a restarted query plans its last batch before it polls
         out = []
         for key, hi in end.items():
             lo = start.get(key, 0)
-            if hi > lo:
-                topic, p = key.rsplit("/", 1)
-                pdir = os.path.join(self.root, topic, f"p{p}")
-                out.append(_PartitionSlice(topic, int(p), pdir, lo, hi))
-        return out or [_PartitionSlice("", -1, "", 0, 0)]
+            if hi <= lo:
+                continue
+            ends = self.ends.get(key) or [0]
+            if hi > ends[-1]:
+                raise ValueError(f"embedded kafka broker: offset {hi} of {key} is past its log ({ends[-1]} records)")
+            first = bisect.bisect_right(ends, lo)  # the file holding offset lo
+            last = bisect.bisect_left(ends, hi)  # the file holding offset hi - 1
+            topic, p = key.rsplit("/", 1)
+            pdir = os.path.join(self.root, topic, f"p{p}")
+            files = self.files[key][first : last + 1]
+            out.append(_PartitionSlice(topic, int(p), pdir, files, ends[first - 1] if first else 0, lo, hi))
+        return out or [_EMPTY_SCAN]
 
     def commit(self, end: dict) -> None:
         pass  # the log is append-only; nothing to release
@@ -202,12 +253,18 @@ class _BrokerWriter(DataSourceWriter):
             }
             by_dest.setdefault((topic, self._partition_for(key)), []).append(json.dumps(rec))
         # one file per (topic, partition) per task — files are the commit unit
-        name = f"{time.time_ns():020d}-{uuid.uuid4().hex}.jsonl"
+        task = uuid.uuid4().hex
         for (topic, part), lines in by_dest.items():
             pdir = os.path.join(self.root, topic, f"p{part}")
             os.makedirs(pdir, exist_ok=True)
-            with open(os.path.join(pdir, name), "w", encoding="utf-8") as fh:
+            tmp = os.path.join(pdir, f".{task}.tmp")
+            with open(tmp, "w", encoding="utf-8") as fh:
                 fh.write("\n".join(lines) + "\n")
+            # named and renamed under the partition lock, so visibility
+            # order is name order (offsets already handed out never shift)
+            with open(os.path.join(pdir, ".lock"), "a") as lock:
+                fcntl.flock(lock, fcntl.LOCK_EX)
+                os.rename(tmp, os.path.join(pdir, f"{time.time_ns():020d}-{task}.jsonl"))
         return _BrokerCommit()
 
 

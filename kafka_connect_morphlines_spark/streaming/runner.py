@@ -60,28 +60,37 @@ def run_stream(
     routed whole to the quarantine sink instead of the main sink — the
     batch-level analog of the per-record DLQ, so one poisoned producer
     can't leak partial garbage into the sink's transaction.
+
+    Each micro-batch reads its source once: the input is persisted (storage
+    memory, spilling to disk) before the pipeline runs, so the quarantine
+    sink, the gate and the main sink all read the cached input, each pruned
+    to the columns its plan needs; it is released once they return.
     """
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = pipeline(batch_df)
-        good, bad = quarantine_split(out)
-        if constraints:
-            from kafka_connect_morphlines_spark.functions import validation
+        batch_df.persist()
+        try:
+            out = pipeline(batch_df)
+            good, bad = quarantine_split(out)
+            if constraints:
+                from kafka_connect_morphlines_spark.functions import validation
 
-            verdict = validation.check(good, constraints)
-            if verdict.filter(~F.col("passed")).count() > 0:
-                bad = bad.unionByName(good, allowMissingColumns=True)
-                good = good.filter(F.lit(False))
-        if quarantine_sink is not None:
-            quarantine_sink(bad, epoch_id)
-        if sink is not None:
-            sink(good, epoch_id)
-        # per-batch metrics flush (startReportingMetricsToCSV + observe):
-        # inside foreachBatch the frame is a batch frame, so observe
-        # registered real Observations; they only resolve once a sink
-        # action ran on the observed plan
-        if (sink is not None or quarantine_sink is not None) and isinstance(pipeline, Pipeline):
-            pipeline.flush_metrics()
+                verdict = validation.check(good, constraints)
+                if verdict.filter(~F.col("passed")).count() > 0:
+                    bad = bad.unionByName(good, allowMissingColumns=True)
+                    good = good.filter(F.lit(False))
+            if quarantine_sink is not None:
+                quarantine_sink(bad, epoch_id)
+            if sink is not None:
+                sink(good, epoch_id)
+            # per-batch metrics flush (startReportingMetricsToCSV + observe):
+            # inside foreachBatch the frame is a batch frame, so observe
+            # registered real Observations; they only resolve once a sink
+            # action ran on the observed plan
+            if (sink is not None or quarantine_sink is not None) and isinstance(pipeline, Pipeline):
+                pipeline.flush_metrics()
+        finally:
+            batch_df.unpersist()
 
     writer = source.writeStream.queryName(query_name).outputMode(output_mode).foreachBatch(process_batch)
     if checkpoint:

@@ -11,9 +11,14 @@ round-trip without the spark-sql-kafka jar."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+from pyspark.sql import Row
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 from kafka_connect_morphlines_spark import compile_pipeline
+from kafka_connect_morphlines_spark.sources import embedded_broker
 from kafka_connect_morphlines_spark.sources.kafka import (
     KafkaUnavailableError,
     read_kafka_batch,
@@ -126,6 +131,8 @@ def test_sink_connector_loop_kafka_to_pipeline_to_sink(spark, broker, tmp_path):
     q.stop()
     assert sorted(good) == [("a", 1), ("b", 2)]
     assert bad == ["broken"]
+    # both sinks read the micro-batch's cached input: one source read
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(records)
 
 
 def test_streaming_consume_with_incremental_publish(spark, broker, tmp_path):
@@ -153,3 +160,220 @@ def test_streaming_consume_with_incremental_publish(spark, broker, tmp_path):
     values = sorted(bytes(r["_value"]).decode() for r in seen)
     assert values == ['{"n":1}', '{"n":2}']
     assert [r["_kafkaOffset"] for r in sorted(seen, key=lambda r: r["_kafkaOffset"])] == [0, 1]
+
+
+def _publish(root: str, values: list[bytes]) -> None:
+    """One writer task: one log file of topic ``t``."""
+    schema = StructType([StructField("value", BinaryType())])
+    writer = embedded_broker._BrokerWriter({"kafka.bootstrap.servers": root, "topic": "t"}, schema)
+    writer.write(iter(Row(value=v) for v in values))
+
+
+def _scan(reader, parts) -> list[tuple]:
+    return [row for part in parts for row in reader.read(part)]
+
+
+def test_stream_reader_parses_only_the_slice(tmp_path, monkeypatch):
+    """Offsets come from cached per-file line counts and a slice opens only
+    the files holding its offsets: no trigger re-parses the whole log."""
+    root = str(tmp_path / "broker")
+    options = {"kafka.bootstrap.servers": root, "subscribe": "t"}
+    for i in range(2):
+        _publish(root, [f"{i}-{j}".encode() for j in range(3)])
+    reader = embedded_broker._BrokerStreamReader(options)
+    start = reader.latestOffset()
+    _publish(root, [f"2-{j}".encode() for j in range(3)])
+
+    parsed = []
+    loads = embedded_broker.json.loads
+    monkeypatch.setattr(embedded_broker.json, "loads", lambda s: parsed.append(s) or loads(s))
+    end = reader.latestOffset()
+    assert (start, end) == ({"t/0": 6}, {"t/0": 9})
+    assert reader.latestOffset() == end and parsed == []  # counting parses nothing
+    parts = reader.partitions(start, end)
+    assert [len(p.files) for p in parts] == [1]
+    rows = _scan(reader, parts)
+    assert len(parsed) == 3
+
+    batch = embedded_broker._BrokerReader(options)
+    full = _scan(batch, batch.partitions())
+    assert rows == full[6:]
+    assert [(r[4], r[1]) for r in rows] == [(6, b"2-0"), (7, b"2-1"), (8, b"2-2")]
+    # a slice starting and ending inside files, read by a fresh reader
+    fresh = embedded_broker._BrokerStreamReader(options)
+    assert _scan(fresh, fresh.partitions({"t/0": 4}, {"t/0": 8})) == full[4:8]
+
+
+def test_stream_reader_rejects_a_file_out_of_name_order(tmp_path):
+    root = str(tmp_path / "broker")
+    _publish(root, [b"a"])
+    reader = embedded_broker._BrokerStreamReader({"kafka.bootstrap.servers": root, "subscribe": "t"})
+    assert reader.latestOffset() == {"t/0": 1}
+    pdir = os.path.join(root, "t", "p0")
+    with open(os.path.join(pdir, "0-late.jsonl"), "w") as fh:
+        fh.write('{"key": null, "value": "Yg==", "ts": 0}\n')
+    with pytest.raises(ValueError, match="out of name order"):
+        reader.latestOffset()
+
+
+def test_broker_write_is_one_rename(tmp_path, monkeypatch):
+    """A log file becomes visible whole: nothing named ``*.jsonl`` exists
+    until the written temp file is renamed into place."""
+    root = str(tmp_path / "broker")
+    pdir = os.path.join(root, "t", "p0")
+    renames = []
+    rename = embedded_broker.os.rename
+
+    def checked_rename(src, dst):
+        assert embedded_broker._log_files(pdir) == []
+        with open(src) as fh:
+            renames.append(fh.read().count("\n"))
+        rename(src, dst)
+
+    monkeypatch.setattr(embedded_broker.os, "rename", checked_rename)
+    _publish(root, [b"a", b"b"])
+    assert renames == [2]
+    assert len(embedded_broker._log_files(pdir)) == 1
+    assert [f for f in os.listdir(pdir) if f.endswith(".tmp")] == []
+
+
+def test_concurrent_writers_never_shift_counted_offsets(tmp_path):
+    """Writer tasks racing a polling reader: files become visible in name
+    order, so no poll ever sees one land below a file it already counted,
+    and the final offsets cover every record once."""
+    import sys
+    import threading
+
+    root = str(tmp_path / "broker")
+    _publish(root, [b"seed"])
+    reader = embedded_broker._BrokerStreamReader({"kafka.bootstrap.servers": root, "subscribe": "t"})
+    errors, done = [], threading.Event()
+
+    def poll():
+        while not done.is_set():
+            try:
+                reader.latestOffset()
+            except ValueError as e:
+                errors.append(e)
+                return
+
+    def write(w):
+        for i in range(20):
+            _publish(root, [f"{w}-{i}".encode()])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        poller = threading.Thread(target=poll)
+        writers = [threading.Thread(target=write, args=(w,)) for w in range(8)]
+        for t in [poller, *writers]:
+            t.start()
+        for t in writers:
+            t.join(timeout=60)
+        done.set()
+        poller.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not poller.is_alive() and not any(t.is_alive() for t in writers)
+    assert errors == []
+    end = reader.latestOffset()
+    assert end == {"t/0": 161}
+    rows = _scan(reader, reader.partitions({}, end))
+    assert [r[4] for r in rows] == list(range(161))
+    assert sorted(r[1] for r in rows) == sorted([b"seed"] + [f"{w}-{i}".encode() for w in range(8) for i in range(20)])
+
+
+def _write_values(spark, broker, values):
+    df = spark.createDataFrame([(None, v, "in") for v in values], "key string, value string, topic string")
+    write_kafka_batch(df, broker)
+
+
+def _json_pipe():
+    return compile_pipeline(
+        [
+            {"readJson": {"inputField": "_value", "schemaDdl": "name string, n int", "flagInvalid": True}},
+            {"extractJsonPaths": {"paths": {"name": "/name", "n": "/n"}}},
+        ]
+    )
+
+
+def test_run_stream_gate_reads_each_record_once(spark, broker, tmp_path):
+    """The constraint gate's count and both sinks read the micro-batch's
+    cached input, over two micro-batches: the source reads each published
+    record once."""
+    from pyspark.sql import functions as F
+
+    from kafka_connect_morphlines_spark.functions import validation as V
+    from kafka_connect_morphlines_spark.streaming import runner
+
+    _write_values(spark, broker, ['{"name":"a","n":1}', "broken", '{"name":"b","n":2}'])
+    env = read_kafka_stream(spark, broker, "in").withColumn("_value", F.col("_value").cast("string"))
+    good, bad = [], []
+    q = runner.run_stream(
+        env,
+        _json_pipe(),
+        sink=lambda df, epoch: good.extend(r["name"] for r in df.collect()),
+        quarantine_sink=lambda df, epoch: bad.extend(r["_value"] for r in df.collect()),
+        checkpoint=str(tmp_path / "ck"),
+        constraints=[V.NotNull("name")],
+    )
+    q.processAllAvailable()
+    _write_values(spark, broker, ['{"name":"c","n":3}'])
+    q.processAllAvailable()
+    q.stop()
+    assert sorted(good) == ["a", "b", "c"] and bad == ["broken"]
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 4
+
+
+@pytest.mark.parametrize("fail", [False, True], ids=["ok", "sink-raises"])
+def test_run_stream_releases_the_batch_cache(spark, broker, tmp_path, fail):
+    from pyspark.sql import functions as F
+
+    from kafka_connect_morphlines_spark.streaming import runner
+
+    def sink(df, epoch):
+        df.collect()
+        if fail:
+            raise RuntimeError("sink failed")
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    _write_values(spark, broker, ['{"name":"a","n":1}', "broken"])
+    env = read_kafka_stream(spark, broker, "in").withColumn("_value", F.col("_value").cast("string"))
+    q = runner.run_stream(
+        env, _json_pipe(), sink=sink, quarantine_sink=lambda df, epoch: df.collect(), checkpoint=str(tmp_path / "ck")
+    )
+    if fail:
+        with pytest.raises(Exception, match="sink failed"):
+            q.processAllAvailable()
+    else:
+        q.processAllAvailable()
+    q.stop()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def test_stream_restart_reads_only_new_records(spark, broker, tmp_path):
+    """A stream restarted on its checkpoint — a fresh reader with nothing
+    counted — continues at the checkpointed offsets: it sees only the
+    records published while it was stopped."""
+    ckpt = str(tmp_path / "ck")
+
+    def run() -> list[tuple[str, int]]:
+        seen = []
+        q = (
+            read_kafka_stream(spark, broker, "in")
+            .writeStream.foreachBatch(
+                lambda b, e: seen.extend((bytes(r["_value"]).decode(), r["_kafkaOffset"]) for r in b.collect())
+            )
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        return sorted(seen, key=lambda r: r[1])
+
+    _write_values(spark, broker, ["v0", "v1"])
+    assert [o for _, o in run()] == [0, 1]
+    _write_values(spark, broker, ["v2"])
+    _write_values(spark, broker, ["v3"])
+    assert run() == [("v2", 2), ("v3", 3)]
+    assert run() == []
