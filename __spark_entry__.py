@@ -23,59 +23,58 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["join_revenue_by_nation"].build(spark, "/root/testdata/sf0.001")
 
 
-# Round-11 certification prefix.  The driver samples a bounded (50-entry)
-# prefix of queries() per round; across rounds the union of CORRECTNESS_r*
-# files must cover the whole corpus.  Slots 1-6 are the queries CHANGED
-# in round 11 (optimization round 2): weighted_median_price_by_flag (the
-# two-round driver hash-FAIL, root-caused to its DECIMAL output columns
-# — the only ones in the corpus — and fixed by casting the output
-# boundary to DOUBLE on both engines), ssl_prototype_prune +
-# kmeans_cluster_stats (literal centroid map -> broadcast centroid-frame
-# join), pagerank_trade_graph + textrank_keywords (pair-frame
-# materialization, lazy per-round rank checkpoints, compact-decimal
-# contribution sums), and icws_weighted_near_dupes (per-vocabulary-token
-# CWS draws behind a scale-adaptive gate; inline plan at bench scale).
-# The remaining 44 slots rotate the STALEST driver certifications
-# (computed from the CORRECTNESS_r01..r10 files: the 28 queries last
-# hash-certified in r03 — including revenue_concentration, whose r10
-# _rank2 rework never re-entered a driver prefix — then the alphabetical
-# head of the r04 cohort), guarding long-untouched operators against
-# silent drift.  Exactly 50 slots, zero fall-through.  Nothing is ever
-# dropped: certified queries stay registered.
-_ROUND11_PREFIX = [
-    # ---- slots 1-6: changed in round 11 ----
-    "weighted_median_price_by_flag", "ssl_prototype_prune",
-    "kmeans_cluster_stats", "pagerank_trade_graph", "textrank_keywords",
-    "icws_weighted_near_dupes",
-    # ---- slots 7-34: the r03-stale cohort (last driver-green r03) ----
-    "dau_wau_stickiness", "encode_documents_ids", "fuzzy_join_part_names",
-    "grouped_regression_hourly", "latest_state_per_user",
-    "map_functions_props", "normalize_tokenize_text", "psi_value_drift",
-    "quality_classifier_score", "repeat_purchase_intervals",
-    "revenue_concentration", "score_decile_lift", "score_pct_by_source",
-    "semantic_centroid_assign", "semantic_dedup", "session_duration_stats",
-    "session_window_agg", "snapshot_diff_docs", "span_dedup_clean",
-    "stratified_sample_exact_k", "tfidf_top_terms", "top_event_paths",
-    "udtf_split_sentences", "url_canonical_dedup",
-    "value_histogram_by_type", "weighted_sample_docs", "zorder_values",
-    "zscore_hourly_anomalies",
-    # ---- slots 35-50: the alphabetical head of the r04-stale cohort ----
-    "chunk_documents_windows", "cms_heavy_hitters",
-    "cohort_retention_weekly", "confluent_wire_roundtrip",
-    "cross_dedup_benchmark", "decontaminate_ngrams", "dup_ngram_stats",
-    "enrich_json_wrap_unions", "extract_avro_tree_flatten",
-    "funnel_conversion", "global_shuffle_order", "hash_split_assign",
-    "inverted_index_stats", "k_anonymity_audit", "levenshtein_pairs",
-    "mixture_sample_deterministic",
+# Certification prefix.  Each certification round samples a bounded
+# (50-entry) prefix of queries(); across rounds the union of CORRECTNESS_r*
+# files must cover the whole corpus.  This rotation leads with the queries whose
+# build() reaches the one shared whitespace tokenizer ``textstats.tokens``
+# (it replaced ``tokens_codegen``, evalmetrics' lowercased copy and the
+# inline split(trim(text)) copies) or the unigram-LM skeleton both twins
+# share.  A build() trace at sf0.001 finds 57 such queries, more than the
+# 50 slots: the two unigram-LM queries come first, then the other
+# tokenizer users stalest first (last hash-certified round in the
+# CORRECTNESS_r01..r11 files, then name).  The 7 left out were all
+# certified in r11: encode_documents_ids, icws_weighted_near_dupes,
+# inverted_index_stats, quality_classifier_score, span_dedup_clean,
+# textrank_keywords, tfidf_top_terms.  So no slot goes to the unchanged
+# stale cohort this time (the 13 other queries last certified in r04).
+# Exactly 50 slots.  Nothing is ever dropped: certified queries stay registered.
+_CERT_PREFIX = [
+    # ---- slots 1-2: the unigram-LM skeleton (fit + encoder) ----
+    "unigram_lm_vocab", "unigram_lm_encode_sample",
+    # ---- slots 3-6: tokenizer users last certified in r04 ----
+    "pack_sequences_bins", "temperature_mixture_rates", "unigram_logprob",
+    "word_entropy",
+    # ---- slot 7: tokenizer users last certified in r05 ----
+    "cohens_kappa_langid",
+    # ---- slots 8-18: tokenizer users last certified in r07 ----
+    "chi2_token_lang", "collocations_pmi", "dataset_card_by_source",
+    "domain_cap_sample", "dsir_gumbel_topk", "dsir_importance_weights",
+    "lang_confusion_matrix", "lang_prf_report", "line_dedup_within_doc",
+    "rrf_hybrid_fusion", "vocab_growth_curve",
+    # ---- slots 19-29: tokenizer users last certified in r08 ----
+    "bigram_logprob", "bm25_topk_search", "bpe_encode_sample",
+    "bpe_merge_rules", "cdc_chunk_stats", "chunk_sliding_windows",
+    "dedup_minhash_lsh", "dedup_simhash", "krippendorff_alpha_langid",
+    "source_overlap_matrix", "tokenizer_fertility_by_lang",
+    # ---- slots 30-46: tokenizer users last certified in r10 ----
+    "ccnet_perplexity_buckets", "dedup_cc_clusters", "dedup_keep_best",
+    "doc_fingerprint", "dolma_attribute_tags", "gopher_filter_verdicts",
+    "js_divergence_sources", "kn_bigram_logprob", "lang_id_pred",
+    "leakage_safe_split", "line_boilerplate_clean", "nb_predict_lang",
+    "nb_train_lang", "ngram_jaccard_pairs", "text_quality",
+    "token_frequencies", "zipf_slope",
+    # ---- slots 47-50: tokenizer users last certified in r11 ----
+    "chunk_documents_windows", "cross_dedup_benchmark",
+    "decontaminate_ngrams", "dup_ngram_stats",
 ]
-_ROUND11_RANK = {name: i for i, name in enumerate(_ROUND11_PREFIX)}
+_CERT_RANK = {name: i for i, name in enumerate(_CERT_PREFIX)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     ordered = sorted(
         QUERIES,
-        key=lambda name: (_ROUND11_RANK.get(name, len(_ROUND11_PREFIX)), name),
+        key=lambda name: (_CERT_RANK.get(name, len(_CERT_PREFIX)), name),
     )
     return {name: QUERIES[name].build for name in ordered}
 

@@ -615,10 +615,8 @@ def icws_signatures(
     one K-slot row per doc per partition, never text.  2K xxhash64 calls
     per tf row is the map-side cost — linear, embarrassingly parallel.
     """
-    from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
-
     tf = (
-        df.select(F.col(id_col).alias("_id"), F.explode(tokens_codegen(F.col(text_col))).alias("_t"))
+        df.select(F.col(id_col).alias("_id"), F.explode(tokens(F.col(text_col))).alias("_t"))
         .groupBy("_id", "_t")
         .agg(F.count(F.lit(1)).alias("_w"))
     )
@@ -761,13 +759,11 @@ def cdc_chunks(
     """
     from pyspark.sql import Window
 
-    from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
-
     carry = list(carry_cols or [])
     toks = df.select(
         F.col(id_col),
         *[F.col(c) for c in carry],
-        F.posexplode(tokens_codegen(F.col(text_col))).alias("_pos", "_t"),
+        F.posexplode(tokens(F.col(text_col))).alias("_pos", "_t"),
     )
     w = Window.partitionBy(id_col).orderBy("_pos")
     trailing = F.concat_ws("|", F.lag("_t", 2).over(w), F.lag("_t", 1).over(w), F.col("_t"))

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .textstats import tokens_codegen
+from .textstats import tokens
 
 
 def _bucket(gram: Column, dim: int, seed: str) -> Column:
@@ -58,7 +58,7 @@ def hashed_features_exploded(
     toks[i-n+1]`` — the DSIR paper's hashed unigram+bigram feature space.
     """
     carry = [F.col(c) for c in (carry_cols or [])]
-    base = df.select(F.col(id_col), *carry, tokens_codegen(F.col(text_col)).alias("_t"))
+    base = df.select(F.col(id_col), *carry, tokens(F.col(text_col)).alias("_t"))
     n = F.size("_t")
     grams = base.filter(n >= 1).select(
         F.col(id_col),

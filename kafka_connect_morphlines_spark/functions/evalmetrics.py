@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_connect_morphlines_spark.functions.textstats import tokens
+
 __all__ = [
     "binary_rank_auc",
     "calibration_table",
@@ -735,16 +737,6 @@ def spearman_rho(df: DataFrame, x: Column, y: Column) -> DataFrame:
     )
 
 
-def _tokens(text: Column) -> Column:
-    """Lowercased whitespace tokens — the corpus-wide convention
-    (textstats.tokens + lower), mirrored by DuckDB
-    ``list_transform(list_filter(string_split(trim(text),' '),..), lower)``."""
-    return F.transform(
-        F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != ""),
-        lambda t: F.lower(t),
-    )
-
-
 def nb_train(
     docs: DataFrame,
     text: Column,
@@ -774,7 +766,7 @@ def nb_train(
     three corpus passes per model execution, and nb_predict executed
     the model twice more — ~6 corpus scans for one bounded grid).
     """
-    tok = docs.select(cls.alias("cls"), F.explode(_tokens(text)).alias("token"))
+    tok = docs.select(cls.alias("cls"), F.explode(tokens(F.lower(text))).alias("token"))
     counts = tok.groupBy("cls", "token").agg(F.count(F.lit(1)).alias("cnt"))
     corpus = counts.groupBy("token").agg(F.sum("cnt").alias("tf"))
     # Two-phase rank (traindata.build_vocab shape): orderBy().limit() is
@@ -837,7 +829,7 @@ def nb_predict(docs: DataFrame, doc_id: Column, text: Column, model: DataFrame) 
         .cast(_DEC)
         .alias("prior"),
     )
-    tok = docs.select(doc_id.alias("doc_id"), F.explode(_tokens(text)).alias("token"))
+    tok = docs.select(doc_id.alias("doc_id"), F.explode(tokens(F.lower(text))).alias("token"))
     scored = (
         tok.join(F.broadcast(model.select("token", "cls", "loglik")), "token")
         .groupBy("doc_id", "cls")
@@ -931,7 +923,7 @@ def chi2_tokens(
     class, ties broken by token.
     """
     pres = docs.select(
-        cls.alias("cls"), F.explode(F.array_distinct(_tokens(text))).alias("token")
+        cls.alias("cls"), F.explode(F.array_distinct(tokens(F.lower(text)))).alias("token")
     )
     n_total = docs.count()
     a = pres.groupBy("cls", "token").agg(F.count(F.lit(1)).alias("a"))

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
+from kafka_connect_morphlines_spark.functions.textstats import tokens
 
 
 def term_postings(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -34,7 +34,7 @@ def term_postings(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     One codegen explode + groupBy; the shuffle carries (term, id, count)
     only.  This is the map phase of every index build below.
     """
-    ex = df.select(F.col(id_col), F.explode(tokens_codegen(F.col(text_col))).alias("term"))
+    ex = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
     return ex.groupBy("term", id_col).agg(F.count(F.lit(1)).alias("tf"))
 
 
@@ -108,14 +108,14 @@ def bm25_topk(
     — a deterministic total order — limited to k.
     """
     terms = [t for t in query_terms if t]
-    ex = df.select(F.col(id_col), F.explode(tokens_codegen(F.col(text_col))).alias("term"))
+    ex = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
 
     # corpus stats: one row — N docs and average doc length.  dl feeds both
     # the stats aggregate and the per-doc score join; without materializing
     # it the full-corpus tokenization runs once per consumer (SCALE.md
     # lesson 7).  The checkpointed frame is two numbers per doc — tiny
     # relative to the text it replaces.
-    dl = df.select(F.col(id_col), F.size(tokens_codegen(F.col(text_col))).alias("dl"))
+    dl = df.select(F.col(id_col), F.size(tokens(F.col(text_col))).alias("dl"))
     if not dl.isStreaming:
         dl = dl.localCheckpoint()
     stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))

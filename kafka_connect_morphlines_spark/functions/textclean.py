@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
+from kafka_connect_morphlines_spark.functions.textstats import tokens
 
 # (pattern, replacement) chain, applied in order.  SSN before phone (3-2-4
 # vs 3-3-4 grouping), email first (its local part may contain digits that
@@ -51,7 +51,7 @@ def _grams_exploded(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFr
     """(id, _g): one row per word n-gram, fully codegen (explode the start
     index, build the gram with array_join(slice(...)); docs shorter than n
     tokens yield no rows)."""
-    toks = tokens_codegen(F.col(text_col))
+    toks = tokens(F.col(text_col))
     base = df.select(F.col(id_col), toks.alias("_t"), (F.size(toks) - (n - 1)).alias("_k"))
     return (
         base.filter(F.col("_k") > 0)
@@ -79,7 +79,7 @@ def word_entropy_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
     """(id, entropy): Shannon entropy of the token distribution in nats,
     computed as ln(n) - sum(c*ln(c))/n so the whole thing is ONE pass over
     the (doc, token) counts — no per-token probability join back."""
-    ex = df.select(F.col(id_col), F.explode(tokens_codegen(F.col(text_col))).alias("_t"))
+    ex = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_t"))
     lvl1 = ex.groupBy(id_col, "_t").agg(F.count(F.lit(1)).cast("double").alias("_c"))
     n = F.sum("_c")
     s = F.sum(F.col("_c") * F.log(F.col("_c")))

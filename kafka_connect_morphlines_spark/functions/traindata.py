@@ -30,10 +30,15 @@ Scale design:
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+from collections.abc import Callable
+from itertools import groupby
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from kafka_connect_morphlines_spark.functions import ensure_parallelism
-from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
+from kafka_connect_morphlines_spark.functions.textstats import tokens
 
 
 def word_ngrams_exploded(
@@ -45,7 +50,7 @@ def word_ngrams_exploded(
     concat the n window tokens — every expression whole-stage codegen.
     Documents with fewer than ``n`` tokens produce no rows.
     """
-    d = df.select(F.col(id_col), tokens_codegen(F.col(text_col)).alias("_w"))
+    d = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_w"))
     d = d.filter(F.size("_w") >= n).select(
         id_col, "_w", F.explode(F.sequence(F.lit(1), F.size("_w") - (n - 1))).alias("_i")
     )
@@ -207,7 +212,7 @@ def build_vocab(
     to vocab_size rows — a single-partition sort of ≤vocab_size rows is the
     intended plan, not a scale hazard (the 100 TB side never sees a window).
     """
-    toks = df.select(F.explode(tokens_codegen(F.col(text_col))).alias("tok"))
+    toks = df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     top = counts.orderBy(F.desc("cnt"), "tok").limit(vocab_size)
     w = Window.orderBy(F.desc("cnt"), "tok")
@@ -231,7 +236,7 @@ def encode_documents(
     encode) — union them back upstream if empty sequences must survive.
     """
     toks = df.select(
-        F.col(id_col), F.posexplode(tokens_codegen(F.col(text_col))).alias("pos", "tok")
+        F.col(id_col), F.posexplode(tokens(F.col(text_col))).alias("pos", "tok")
     )
     enc = toks.join(F.broadcast(vocab), "tok", "left").select(
         id_col, "pos", F.coalesce("token_id", F.lit(unk_id)).alias("tid")
@@ -264,7 +269,7 @@ def pack_sequences(
     (chunk first with :func:`chunk_documents` if hard caps are required).
     """
     w = Window.partitionBy(group_col).orderBy(id_col)
-    tc = F.size(tokens_codegen(F.col(text_col)))
+    tc = F.size(tokens(F.col(text_col)))
     d = df.select(F.col(group_col), F.col(id_col), tc.alias("n_tokens"))
     d = d.withColumn("_end", F.sum("n_tokens").over(w))
     return d.select(
@@ -281,23 +286,13 @@ def chunk_documents(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Split each document into fixed-size token windows (1→N explode).
+    """Split each document into fixed-size token windows (1→N explode):
+    :func:`sliding_window_chunks` with ``stride == window``.
 
-    Output: (id, chunk_id, n_tokens, chunk_text).  The sequence bound is
-    guarded so zero-token documents emit no rows (Spark's ``sequence``
-    infers step -1 when start > stop — an empty doc would otherwise yield
-    [0, -1]).  All codegen: split, explode(sequence), slice, concat.
+    Output: (id, chunk_id, n_tokens, chunk_text).  Zero-token documents
+    emit no rows.  All codegen: split, explode(sequence), slice, concat.
     """
-    d = df.select(F.col(id_col), tokens_codegen(F.col(text_col)).alias("_w")).filter(F.size("_w") > 0)
-    nchunks = F.ceil(F.size("_w") / F.lit(window))
-    d = d.select(id_col, "_w", F.explode(F.sequence(F.lit(0), nchunks - 1)).alias("chunk_id"))
-    chunk = F.slice(F.col("_w"), F.col("chunk_id") * window + 1, window)
-    return d.select(
-        id_col,
-        "chunk_id",
-        F.size(chunk).alias("n_tokens"),
-        F.concat_ws(" ", chunk).alias("chunk_text"),
-    )
+    return sliding_window_chunks(df, window, window, text_col, id_col).drop("start_pos")
 
 
 def stratified_sample_exact(
@@ -348,7 +343,7 @@ def remove_duplicate_spans(
     - reassembly groups by doc id (array_sort over (pos, span) structs —
       spans-per-doc bounded, per-row codegen).
     """
-    d = df.select(F.col(id_col), tokens_codegen(F.col(text_col)).alias("_w")).filter(F.size("_w") > 0)
+    d = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_w")).filter(F.size("_w") > 0)
     nspans = F.ceil(F.size("_w") / F.lit(span_tokens))
     d = d.select(id_col, "_w", F.explode(F.sequence(F.lit(0), nspans - 1)).alias("_pos"))
     span = F.concat_ws(" ", F.slice(F.col("_w"), F.col("_pos") * span_tokens + 1, span_tokens))
@@ -508,11 +503,9 @@ def temperature_rates(
     deterministic downsample.  One groupBy on the source key (map-side
     combine); the rate table is source-count-sized.
     """
-    from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
-
     counts = (
         df.groupBy(source_col)
-        .agg(F.sum(F.size(tokens_codegen(F.col(text_col)))).alias("n_tokens"))
+        .agg(F.sum(F.size(tokens(F.col(text_col)))).alias("n_tokens"))
     )
     z = counts.agg(F.sum(F.pow("n_tokens", F.lit(alpha))).alias("_z"))
     p = F.pow("n_tokens", F.lit(alpha)) / F.col("_z")
@@ -687,6 +680,20 @@ def weighted_sample(
     )
 
 
+def _word_freqs(df: DataFrame, text_col: str, max_words: int | None) -> DataFrame:
+    """(w, freq): the distinct-word table BPE and unigram-LM training
+    iterate over, ONE corpus-wide shuffle.  ``max_words`` keeps the most
+    frequent words (freq desc, word asc) via TakeOrderedAndProject
+    (per-partition top-k, then one k-row merge) — a global row_number
+    window would funnel the whole table through one partition."""
+    words = df.select(F.explode(tokens(F.col(text_col))).alias("w")).groupBy("w").agg(
+        F.count(F.lit(1)).alias("freq")
+    )
+    if max_words is None:
+        return words
+    return words.orderBy(F.col("freq").desc(), F.col("w")).limit(max_words)
+
+
 def bpe_train(
     df: DataFrame,
     n_merges: int = 20,
@@ -721,19 +728,8 @@ def bpe_train(
     import pandas as pd
 
     spark = df.sparkSession
-    words = (
-        df.select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    if max_words is not None:
-        # top-k via TakeOrderedAndProject (per-partition top-k + k-row
-        # driver merge) — a global row_number window would funnel the whole
-        # distinct-word table through one partition
-        words = words.orderBy(F.col("freq").desc(), F.col("w")).limit(max_words)
     # symbols: characters plus an end-of-word marker on the last char
-    syms = words.select(
+    syms = _word_freqs(df, text_col, max_words).select(
         "freq",
         F.concat(
             F.split(F.col("w"), ""), F.array(F.lit(end_token))
@@ -1180,8 +1176,28 @@ def leakage_safe_split(
 
 
 # ---------------------------------------------------------------------------
-# Unigram-LM (SentencePiece-style) tokenizer: Viterbi-EM training + encode
+# Unigram-LM (SentencePiece-style) tokenizer: Viterbi-EM training + encode.
+# Two twins differ only in the segmenter and the count->score map.  The log
+# twin scores a path as sum(ln(c/T)); libm ln is not guaranteed identical
+# across engines, so it is rows-only.  The *_prob twin (r08) scores it as
+# prod(c/T) in plain doubles: int->double (exact below 2^53), division and
+# multiplication are correctly rounded IEEE-754 ops that Python, the JVM
+# and DuckDB perform bit-identically, and the DP fixes the association
+# order, so a SQL oracle replays the whole fit, float ties included (the
+# kmeans_fit vs kmeans_fit_int split).  No underflow: words are short and
+# probs >= 1/T.  One distributed fit, one Arrow encoder and one pure-Python
+# reference serve both twins; the reference runs its own EM loop, not the
+# Spark fit's, so it stays an independent pin of the distributed skeleton.
 # ---------------------------------------------------------------------------
+
+
+def _backtrack(word: str, back: list[int]) -> list[str]:
+    """The pieces of ``word`` along a Viterbi DP's back-pointers."""
+    out, i = [], len(word)
+    while i > 0:
+        out.append(word[back[i] : i])
+        i = back[i]
+    return out[::-1]
 
 
 def _viterbi_segment(
@@ -1206,29 +1222,49 @@ def _viterbi_segment(
             # strictly-greater OR equal-with-smaller-j: longer last piece wins
             if score > best[i] or (score == best[i] and j < back[i]):
                 best[i], back[i] = score, j
-    if best[n] == float("-inf"):
-        return None
-    out, i = [], n
-    while i > 0:
-        j = back[i]
-        out.append(word[j:i])
-        i = j
-    return out[::-1]
+    return None if best[n] == float("-inf") else _backtrack(word, back)
 
 
-def unigram_lm_reference(
+def _viterbi_segment_prob(
+    word: str, probs: dict, max_len: int
+) -> list[str] | None:
+    """Best segmentation under probability products — same DP and
+    tie-break as ``_viterbi_segment`` (longer last piece at equal score)
+    with scores multiplied instead of log-summed."""
+    n = len(word)
+    best = [1.0] + [0.0] * n  # 0.0 = unreachable (true scores are > 0)
+    back = [0] * (n + 1)
+    for i in range(1, n + 1):
+        for j in range(max(0, i - max_len), i):
+            p = probs.get(word[j:i])
+            if p is None or best[j] == 0.0:
+                continue
+            score = best[j] * p
+            if score > best[i] or (score == best[i] and j < back[i]):
+                best[i], back[i] = score, j
+    return None if best[n] == 0.0 else _backtrack(word, back)
+
+
+def _log_score(count: int, total: int) -> float:
+    return math.log(count / total)
+
+
+def _prob_score(count: int, total: int) -> float:
+    return count / total
+
+
+def _unigram_reference(
     word_freqs: list[tuple[str, int]],
-    vocab_size: int = 64,
-    n_iter: int = 3,
-    max_piece_len: int = 4,
-    seed_mult: int = 4,
+    segment: Callable,
+    score: Callable[[int, int], float],
+    vocab_size: int,
+    n_iter: int,
+    max_piece_len: int,
+    seed_mult: int,
 ) -> list[tuple[str, int, float]]:
-    """Pure-Python single-process reference for ``unigram_lm_train`` — the
-    exact algorithm on a (word, freq) list, used by pytest to pin the
-    distributed implementation.  Returns (piece, count, logprob)."""
-    import math
-    from collections import Counter
-
+    """The exact Viterbi-EM algorithm on a (word, freq) list in one
+    process, shared by both reference twins: (piece, count, score) sorted
+    by (count desc, piece)."""
     # seed: every substring up to max_piece_len, weighted by word freq
     cand: Counter[str] = Counter()
     chars: set[str] = set()
@@ -1246,18 +1282,16 @@ def unigram_lm_reference(
 
     def em_round(vocab_counts: dict[str, int]) -> dict[str, int]:
         total = sum(vocab_counts.values())
-        lps = {p: math.log(c / total) for p, c in vocab_counts.items() if c > 0}
+        scores = {p: score(c, total) for p, c in vocab_counts.items() if c > 0}
         counts: Counter[str] = Counter()
         for w, f in word_freqs:
-            seg = _viterbi_segment(w, lps, max_piece_len)
-            for p in seg or []:
+            for p in segment(w, scores, max_piece_len) or []:
                 counts[p] += f
         # chars never die (coverage guarantee, as in SentencePiece)
         return {p: max(counts.get(p, 0), 1 if len(p) == 1 else 0) for p in vocab_counts}
 
     for _ in range(n_iter):
-        pieces = em_round(pieces)
-        pieces = {p: c for p, c in pieces.items() if c > 0}
+        pieces = {p: c for p, c in em_round(pieces).items() if c > 0}
     # prune to vocab_size: all chars + best multi-char by (count desc, piece)
     multi_kept = sorted(
         ((p, c) for p, c in pieces.items() if len(p) > 1),
@@ -1265,15 +1299,110 @@ def unigram_lm_reference(
     )[: max(0, vocab_size - len(chars))]
     pruned = {p: c for p, c in pieces.items() if len(p) == 1}
     pruned.update(dict(multi_kept))
-    final = em_round(pruned)
-    final = {p: c for p, c in final.items() if c > 0}
-    import math as _m
-
+    final = {p: c for p, c in em_round(pruned).items() if c > 0}
     tot = sum(final.values())
     return sorted(
-        ((p, c, _m.log(c / tot)) for p, c in final.items()),
+        ((p, c, score(c, tot)) for p, c in final.items()),
         key=lambda x: (-x[1], x[0]),
     )
+
+
+def unigram_lm_reference(
+    word_freqs: list[tuple[str, int]],
+    vocab_size: int = 64,
+    n_iter: int = 3,
+    max_piece_len: int = 4,
+    seed_mult: int = 4,
+) -> list[tuple[str, int, float]]:
+    """Pure-Python single-process reference for ``unigram_lm_train`` — the
+    exact algorithm on a (word, freq) list, used by pytest to pin the
+    distributed implementation.  Returns (piece, count, logprob)."""
+    return _unigram_reference(
+        word_freqs, _viterbi_segment, _log_score, vocab_size, n_iter,
+        max_piece_len, seed_mult,
+    )
+
+
+def unigram_lm_reference_prob(
+    word_freqs: list,
+    vocab_size: int = 64,
+    n_iter: int = 3,
+    max_piece_len: int = 4,
+    seed_mult: int = 4,
+) -> list:
+    """Pure-Python single-process reference for ``unigram_lm_train_prob``
+    (the pytest pin).  Returns (piece, count, prob)."""
+    return _unigram_reference(
+        word_freqs, _viterbi_segment_prob, _prob_score, vocab_size, n_iter,
+        max_piece_len, seed_mult,
+    )
+
+
+def _unigram_fit(
+    df: DataFrame,
+    segment: Callable,
+    score: Callable[[int, int], float],
+    vocab_size: int,
+    n_iter: int,
+    max_piece_len: int,
+    seed_mult: int,
+    text_col: str,
+    max_words: int | None,
+) -> list[tuple[str, int]]:
+    """The distributed Viterbi-EM fit both train twins run: the final
+    (piece, count) rows sorted by (count desc, piece)."""
+    import pandas as pd
+
+    words = _word_freqs(df, text_col, max_words).localCheckpoint()
+
+    # --- seed candidates: every substring (start i, length l <= max_piece_len)
+    # by two codegen explodes, codegen sum, bounded top-k ---
+    starts = words.select("w", "freq", F.explode(F.sequence(F.lit(1), F.length("w"))).alias("i"))
+    lens = F.sequence(F.lit(1), F.least(F.lit(max_piece_len), F.length("w") - F.col("i") + 1))
+    subs = (
+        starts.select("w", "freq", "i", F.explode(lens).alias("l"))
+        .groupBy(F.substring("w", "i", "l").alias("p"))
+        .agg(F.sum("freq").alias("cnt"))
+    )
+    chars = {r["p"]: int(r["cnt"]) for r in subs.filter(F.length("p") == 1).collect()}
+    multi_rows = (
+        subs.filter(F.length("p") > 1)
+        .orderBy(F.col("cnt").desc(), F.col("p"))
+        .limit(seed_mult * vocab_size)
+        .collect()
+    )
+    pieces = {**chars, **{r["p"]: int(r["cnt"]) for r in multi_rows}}
+
+    def em_round(vocab_counts: dict[str, int]) -> dict[str, int]:
+        total = sum(vocab_counts.values())
+        scores = {p: score(c, total) for p, c in vocab_counts.items() if c > 0}
+
+        def estep(batches, _scores=scores, _seg=segment, _ml=max_piece_len):
+            for pdf in batches:
+                pairs = [
+                    (p, int(f)) for w, f in zip(pdf["w"], pdf["freq"]) for p in _seg(w, _scores, _ml) or []
+                ]
+                yield pd.DataFrame(pairs, columns=["p", "c"])
+
+        counted = {
+            r["p"]: int(r["cnt"])
+            for r in words.mapInPandas(estep, schema="p string, c long")
+            .groupBy("p")
+            .agg(F.sum("c").alias("cnt"))
+            .collect()
+        }
+        return {p: max(counted.get(p, 0), 1 if len(p) == 1 else 0) for p in vocab_counts}
+
+    for _ in range(n_iter):
+        pieces = {p: c for p, c in em_round(pieces).items() if c > 0}
+    multi_kept = sorted(
+        ((p, c) for p, c in pieces.items() if len(p) > 1),
+        key=lambda pc: (-pc[1], pc[0]),
+    )[: max(0, vocab_size - len(chars))]
+    pruned = {p: c for p, c in pieces.items() if len(p) == 1}
+    pruned.update(dict(multi_kept))
+    final = {p: c for p, c in em_round(pruned).items() if c > 0}
+    return sorted(final.items(), key=lambda x: (-x[1], x[0]))
 
 
 def unigram_lm_train(
@@ -1308,100 +1437,97 @@ def unigram_lm_train(
     Returns (rank, piece, piece_len, count, logprob) — logprob rounded 6dp.
     Pinned in pytest against ``unigram_lm_reference`` on the same corpus.
     """
-    import math
-
-    import pandas as pd
-
-    spark = df.sparkSession
-    words = (
-        df.select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
+    rows = _unigram_fit(
+        df, _viterbi_segment, _log_score, vocab_size, n_iter, max_piece_len,
+        seed_mult, text_col, max_words,
     )
-    if max_words is not None:
-        words = words.orderBy(F.col("freq").desc(), F.col("w")).limit(max_words)
-    words = words.localCheckpoint()
-
-    # --- seed candidates: substring explode, codegen sum, bounded top-k ---
-    subs = words.select(
-        "freq",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("w")),
-                    lambda i: F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.least(F.lit(max_piece_len), F.length("w") - i + 1),
-                        ),
-                        lambda l: F.substring(F.col("w"), i, l),
-                    ),
-                )
-            )
-        ).alias("p"),
-    ).groupBy("p").agg(F.sum("freq").alias("cnt"))
-    chars = {
-        r["p"]: int(r["cnt"])
-        for r in subs.filter(F.length("p") == 1).collect()
-    }
-    multi_rows = (
-        subs.filter(F.length("p") > 1)
-        .orderBy(F.col("cnt").desc(), F.col("p"))
-        .limit(seed_mult * vocab_size)
-        .collect()
-    )
-    pieces: dict[str, int] = dict(chars)
-    pieces.update({r["p"]: int(r["cnt"]) for r in multi_rows})
-
-    def em_round(vocab_counts: dict[str, int]) -> dict[str, int]:
-        total = sum(vocab_counts.values())
-        lps = {p: math.log(c / total) for p, c in vocab_counts.items() if c > 0}
-
-        def estep(batches, _lps=lps, _ml=max_piece_len):
-            for pdf in batches:
-                out_p: list[str] = []
-                out_c: list[int] = []
-                for w, f in zip(pdf["w"], pdf["freq"]):
-                    seg = _viterbi_segment(w, _lps, _ml)
-                    for p in seg or []:
-                        out_p.append(p)
-                        out_c.append(int(f))
-                yield pd.DataFrame({"p": out_p, "c": out_c})
-
-        counted = {
-            r["p"]: int(r["cnt"])
-            for r in words.mapInPandas(estep, schema="p string, c long")
-            .groupBy("p")
-            .agg(F.sum("c").alias("cnt"))
-            .collect()
-        }
-        return {
-            p: max(counted.get(p, 0), 1 if len(p) == 1 else 0)
-            for p in vocab_counts
-        }
-
-    for _ in range(n_iter):
-        pieces = {p: c for p, c in em_round(pieces).items() if c > 0}
-    multi_kept = sorted(
-        ((p, c) for p, c in pieces.items() if len(p) > 1),
-        key=lambda pc: (-pc[1], pc[0]),
-    )[: max(0, vocab_size - len(chars))]
-    pruned = {p: c for p, c in pieces.items() if len(p) == 1}
-    pruned.update(dict(multi_kept))
-    final = {p: c for p, c in em_round(pruned).items() if c > 0}
-    tot = sum(final.values())
-    rows = sorted(
-        ((p, c, math.log(c / tot)) for p, c in final.items()),
-        key=lambda x: (-x[1], x[0]),
-    )
-    return spark.createDataFrame(
+    tot = sum(c for _, c in rows)
+    return df.sparkSession.createDataFrame(
         [
-            (i, p, len(p), c, round(lp, 6))
-            for i, (p, c, lp) in enumerate(rows)
+            (i, p, len(p), c, round(_log_score(c, tot), 6))
+            for i, (p, c) in enumerate(rows)
         ],
         "rank int, piece string, piece_len int, count long, logprob double",
     )
+
+
+def unigram_lm_train_prob(
+    df: DataFrame,
+    vocab_size: int = 64,
+    n_iter: int = 3,
+    max_piece_len: int = 4,
+    seed_mult: int = 4,
+    text_col: str = "text",
+    max_words: int | None = 50000,
+) -> DataFrame:
+    """``unigram_lm_train`` with product-domain Viterbi scoring — the
+    certifiable twin (see the section banner above).  Same distributed
+    fit.  Returns (rank, piece, piece_len, count, prob) with
+    prob = count/total rounded 6dp IN SPARK (half-up parity with the
+    oracle's round())."""
+    rows = _unigram_fit(
+        df, _viterbi_segment_prob, _prob_score, vocab_size, n_iter,
+        max_piece_len, seed_mult, text_col, max_words,
+    )
+    tot = sum(c for _, c in rows)
+    base = df.sparkSession.createDataFrame(
+        [(i, p, len(p), c, tot) for i, (p, c) in enumerate(rows)],
+        "rank int, piece string, piece_len int, count long, _tot long",
+    )
+    return base.select(
+        "rank",
+        "piece",
+        "piece_len",
+        "count",
+        F.round(F.col("count").cast("double") / F.col("_tot").cast("double"), 6).alias("prob"),
+    )
+
+
+def _unigram_encode(
+    df: DataFrame,
+    segment: Callable,
+    scores: dict[str, float],
+    text_col: str,
+    id_col: str,
+    unk_token: str,
+) -> DataFrame:
+    """The Arrow encoder both encode twins run: per word, ``segment``'s
+    best piece sequence under ``scores``; characters outside the
+    vocabulary become ``unk_token``."""
+    import pandas as pd
+
+    max_len = max((len(p) for p in scores), default=1)
+
+    def encode(batches, _scores=scores, _seg=segment, _ml=max_len, _unk=unk_token):
+        for pdf in batches:
+            memo: dict[str, list[str]] = {}
+            ids, ns, toks = [], [], []
+            for rid, text in zip(pdf["_id"], pdf["_text"]):
+                out: list[str] = []
+                # NULL text must yield 0 pieces (matches the SQL oracle's
+                # semantics); str(None) would segment the literal 'None'.
+                for w in (text.split() if isinstance(text, str) else []):
+                    seg = memo.get(w)
+                    if seg is None:
+                        seg = _seg(w, _scores, _ml)
+                        if seg is None:
+                            # cover unknown chars: segment maximal known runs
+                            seg = []
+                            for known, run in groupby(w, _scores.__contains__):
+                                run = "".join(run)
+                                seg.extend(
+                                    (_seg(run, _scores, _ml) or [_unk]) if known else [_unk] * len(run)
+                                )
+                        memo[w] = seg
+                    out.extend(seg)
+                ids.append(rid)
+                ns.append(len(out))
+                toks.append(out)
+            yield pd.DataFrame({"_id": ids, "n_pieces": ns, "pieces": toks})
+
+    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
+    out = src.mapInPandas(encode, schema="_id long, n_pieces int, pieces array<string>")
+    return out.withColumnRenamed("_id", id_col)
 
 
 def unigram_lm_encode(
@@ -1421,47 +1547,25 @@ def unigram_lm_encode(
 
     Output: (id, n_pieces, pieces array<string>).
     """
-    import pandas as pd
-
     lps = {r["piece"]: float(r["logprob"]) for r in vocab.collect()}
-    max_len = max((len(p) for p in lps), default=1)
+    return _unigram_encode(df, _viterbi_segment, lps, text_col, id_col, unk_token)
 
-    def encode(batches, _lps=lps, _ml=max_len, _unk=unk_token):
-        for pdf in batches:
-            memo: dict[str, list[str]] = {}
-            ids, ns, toks = [], [], []
-            for rid, text in zip(pdf["_id"], pdf["_text"]):
-                out: list[str] = []
-                # NULL text must yield 0 pieces (matches the SQL oracle's
-                # semantics); str(None) would segment the literal 'None'.
-                for w in (text.split() if isinstance(text, str) else []):
-                    seg = memo.get(w)
-                    if seg is None:
-                        seg = _viterbi_segment(w, _lps, _ml)
-                        if seg is None:
-                            # cover unknown chars: segment maximal known runs
-                            seg = []
-                            run = ""
-                            for ch in w:
-                                if ch in _lps:
-                                    run += ch
-                                else:
-                                    if run:
-                                        seg.extend(_viterbi_segment(run, _lps, _ml) or [_unk])
-                                        run = ""
-                                    seg.append(_unk)
-                            if run:
-                                seg.extend(_viterbi_segment(run, _lps, _ml) or [_unk])
-                        memo[w] = seg
-                    out.extend(seg)
-                ids.append(rid)
-                ns.append(len(out))
-                toks.append(out)
-            yield pd.DataFrame({"_id": ids, "n_pieces": ns, "pieces": toks})
 
-    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-    out = src.mapInPandas(encode, schema="_id long, n_pieces int, pieces array<string>")
-    return out.withColumnRenamed("_id", id_col)
+def unigram_lm_encode_prob(
+    df: DataFrame,
+    vocab: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    unk_token: str = "<unk>",
+) -> DataFrame:
+    """``unigram_lm_encode`` against a prob-twin vocabulary: Viterbi in
+    the product domain with probs reconstructed EXACTLY as count/total
+    from the vocab's integer counts (never from the rounded prob column).
+    Same map-only Arrow shape and unknown-char fallback."""
+    counts = {r["piece"]: int(r["count"]) for r in vocab.select("piece", "count").collect()}
+    total = sum(counts.values())
+    ps = {p: _prob_score(c, total) for p, c in counts.items()}
+    return _unigram_encode(df, _viterbi_segment_prob, ps, text_col, id_col, unk_token)
 
 
 def phrase_scan(
@@ -1583,7 +1687,7 @@ def sliding_window_chunks(
     < n_tokens, so every token lands in at least one chunk and trailing
     text keeps window-worth of left context.  stride < window gives
     (window - stride) tokens of overlap between neighbors — the standard
-    retrieval-chunking recipe; stride == window degrades to
+    retrieval-chunking recipe; stride == window is
     :func:`chunk_documents`.
 
     Output: (id, chunk_id, start_pos, n_tokens, chunk_text), chunk_id
@@ -1593,11 +1697,10 @@ def sliding_window_chunks(
     """
     if stride <= 0 or window <= 0:
         raise ValueError("sliding_window_chunks requires window > 0 and stride > 0")
-    from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
 
-    d = df.select(F.col(id_col), tokens_codegen(F.col(text_col)).alias("_w")).filter(
-        F.size("_w") > 0
-    )
+    # the size guard keeps zero-token documents out: Spark's ``sequence``
+    # infers step -1 when start > stop, so an empty doc would yield [0, -1]
+    d = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_w")).filter(F.size("_w") > 0)
     nchunks = F.ceil(F.size("_w") / F.lit(stride))
     d = d.select(
         id_col, "_w", F.explode(F.sequence(F.lit(0), nchunks - 1)).alias("chunk_id")
@@ -1610,257 +1713,3 @@ def sliding_window_chunks(
         F.size(chunk).alias("n_tokens"),
         F.concat_ws(" ", chunk).alias("chunk_text"),
     )
-
-
-# --------------------------------------------------------------------------
-# Probability-product unigram-LM twin (r08): the certifiable variant of
-# unigram_lm_train/encode, same float-production/certified-twin split as
-# kmeans_fit vs kmeans_fit_int.  The log-domain Viterbi above compares
-# sums of ln(c/T) — and libm ln is NOT guaranteed identical across
-# engines, which is why the family was rows-only.  This twin scores in
-# the PRODUCT domain: path score = prod(c_i/T) with plain doubles.  Every
-# operation in that chain — int->double conversion (exact below 2^53),
-# division, multiplication — is a correctly-rounded IEEE-754 op that
-# Python, the JVM and DuckDB all perform bit-identically, and the DP
-# fixes the association order, so a SQL oracle replays the ENTIRE
-# Viterbi-EM fit including float ties.  No underflow: words are short
-# (len <= ~50) and probs >= 1/T, so scores stay far above the subnormal
-# range for any T below ~1e60^(1/len).
-# --------------------------------------------------------------------------
-
-
-def _viterbi_segment_prob(
-    word: str, probs: dict, max_len: int
-) -> list[str] | None:
-    """Best segmentation under probability products — same DP and
-    tie-break as ``_viterbi_segment`` (longer last piece at equal score)
-    with scores multiplied instead of log-summed."""
-    n = len(word)
-    best = [1.0] + [0.0] * n  # 0.0 = unreachable (true scores are > 0)
-    back = [0] * (n + 1)
-    for i in range(1, n + 1):
-        for j in range(max(0, i - max_len), i):
-            p = probs.get(word[j:i])
-            if p is None or best[j] == 0.0:
-                continue
-            score = best[j] * p
-            if score > best[i] or (score == best[i] and j < back[i]):
-                best[i], back[i] = score, j
-    if best[n] == 0.0:
-        return None
-    out, i = [], n
-    while i > 0:
-        j = back[i]
-        out.append(word[j:i])
-        i = j
-    return out[::-1]
-
-
-def unigram_lm_reference_prob(
-    word_freqs: list,
-    vocab_size: int = 64,
-    n_iter: int = 3,
-    max_piece_len: int = 4,
-    seed_mult: int = 4,
-) -> list:
-    """Pure-Python single-process reference for ``unigram_lm_train_prob``
-    (the pytest pin).  Returns (piece, count, prob)."""
-    from collections import Counter
-
-    cand: Counter = Counter()
-    chars: set = set()
-    for w, f in word_freqs:
-        chars.update(w)
-        for i in range(len(w)):
-            for l in range(1, min(max_piece_len, len(w) - i) + 1):
-                cand[w[i : i + l]] += f
-    multi = sorted(
-        ((p, c) for p, c in cand.items() if len(p) > 1),
-        key=lambda pc: (-pc[1], pc[0]),
-    )[: seed_mult * vocab_size]
-    pieces = {p: cand[p] for p in chars}
-    pieces.update(dict(multi))
-
-    def em_round(vocab_counts: dict) -> dict:
-        total = sum(vocab_counts.values())
-        ps = {p: c / total for p, c in vocab_counts.items() if c > 0}
-        counts: Counter = Counter()
-        for w, f in word_freqs:
-            seg = _viterbi_segment_prob(w, ps, max_piece_len)
-            for p in seg or []:
-                counts[p] += f
-        return {p: max(counts.get(p, 0), 1 if len(p) == 1 else 0) for p in vocab_counts}
-
-    for _ in range(n_iter):
-        pieces = {p: c for p, c in em_round(pieces).items() if c > 0}
-    multi_kept = sorted(
-        ((p, c) for p, c in pieces.items() if len(p) > 1),
-        key=lambda pc: (-pc[1], pc[0]),
-    )[: max(0, vocab_size - len(chars))]
-    pruned = {p: c for p, c in pieces.items() if len(p) == 1}
-    pruned.update(dict(multi_kept))
-    final = {p: c for p, c in em_round(pruned).items() if c > 0}
-    tot = sum(final.values())
-    return sorted(
-        ((p, c, c / tot) for p, c in final.items()),
-        key=lambda x: (-x[1], x[0]),
-    )
-
-
-def unigram_lm_train_prob(
-    df: DataFrame,
-    vocab_size: int = 64,
-    n_iter: int = 3,
-    max_piece_len: int = 4,
-    seed_mult: int = 4,
-    text_col: str = "text",
-    max_words: int | None = 50000,
-) -> DataFrame:
-    """``unigram_lm_train`` with product-domain Viterbi scoring — the
-    certifiable twin (see module banner above).  Identical distributed
-    skeleton: one corpus shuffle to (word, freq), bounded substring
-    seeding, per-round Arrow E-step emitting integer counts, vocab-sized
-    driver state.  Returns (rank, piece, piece_len, count, prob) with
-    prob = count/total rounded 6dp IN SPARK (half-up parity with the
-    oracle's round())."""
-    import pandas as pd
-
-    spark = df.sparkSession
-    words = (
-        df.select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    if max_words is not None:
-        words = words.orderBy(F.col("freq").desc(), F.col("w")).limit(max_words)
-    words = words.localCheckpoint()
-
-    subs = words.select(
-        "freq",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("w")),
-                    lambda i: F.transform(
-                        F.sequence(
-                            F.lit(1),
-                            F.least(F.lit(max_piece_len), F.length("w") - i + 1),
-                        ),
-                        lambda l: F.substring(F.col("w"), i, l),
-                    ),
-                )
-            )
-        ).alias("p"),
-    ).groupBy("p").agg(F.sum("freq").alias("cnt"))
-    chars = {r["p"]: int(r["cnt"]) for r in subs.filter(F.length("p") == 1).collect()}
-    multi_rows = (
-        subs.filter(F.length("p") > 1)
-        .orderBy(F.col("cnt").desc(), F.col("p"))
-        .limit(seed_mult * vocab_size)
-        .collect()
-    )
-    pieces: dict[str, int] = dict(chars)
-    pieces.update({r["p"]: int(r["cnt"]) for r in multi_rows})
-
-    def em_round(vocab_counts: dict) -> dict:
-        total = sum(vocab_counts.values())
-        ps = {p: c / total for p, c in vocab_counts.items() if c > 0}
-
-        def estep(batches, _ps=ps, _ml=max_piece_len):
-            for pdf in batches:
-                out_p: list[str] = []
-                out_c: list[int] = []
-                for w, f in zip(pdf["w"], pdf["freq"]):
-                    seg = _viterbi_segment_prob(w, _ps, _ml)
-                    for p in seg or []:
-                        out_p.append(p)
-                        out_c.append(int(f))
-                yield pd.DataFrame({"p": out_p, "c": out_c})
-
-        counted = {
-            r["p"]: int(r["cnt"])
-            for r in words.mapInPandas(estep, schema="p string, c long")
-            .groupBy("p")
-            .agg(F.sum("c").alias("cnt"))
-            .collect()
-        }
-        return {p: max(counted.get(p, 0), 1 if len(p) == 1 else 0) for p in vocab_counts}
-
-    for _ in range(n_iter):
-        pieces = {p: c for p, c in em_round(pieces).items() if c > 0}
-    multi_kept = sorted(
-        ((p, c) for p, c in pieces.items() if len(p) > 1),
-        key=lambda pc: (-pc[1], pc[0]),
-    )[: max(0, vocab_size - len(chars))]
-    pruned = {p: c for p, c in pieces.items() if len(p) == 1}
-    pruned.update(dict(multi_kept))
-    final = {p: c for p, c in em_round(pruned).items() if c > 0}
-    tot = sum(final.values())
-    rows = sorted(((p, c) for p, c in final.items()), key=lambda x: (-x[1], x[0]))
-    base = spark.createDataFrame(
-        [(i, p, len(p), c, tot) for i, (p, c) in enumerate(rows)],
-        "rank int, piece string, piece_len int, count long, _tot long",
-    )
-    return base.select(
-        "rank",
-        "piece",
-        "piece_len",
-        "count",
-        F.round(F.col("count").cast("double") / F.col("_tot").cast("double"), 6).alias("prob"),
-    )
-
-
-def unigram_lm_encode_prob(
-    df: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    unk_token: str = "<unk>",
-) -> DataFrame:
-    """``unigram_lm_encode`` against a prob-twin vocabulary: Viterbi in
-    the product domain with probs reconstructed EXACTLY as count/total
-    from the vocab's integer counts (never from the rounded prob column).
-    Same map-only Arrow shape and unknown-char fallback."""
-    import pandas as pd
-
-    counts = {r["piece"]: int(r["count"]) for r in vocab.select("piece", "count").collect()}
-    total = sum(counts.values())
-    ps = {p: c / total for p, c in counts.items()}
-    max_len = max((len(p) for p in ps), default=1)
-
-    def encode(batches, _ps=ps, _ml=max_len, _unk=unk_token):
-        for pdf in batches:
-            memo: dict[str, list] = {}
-            ids, ns, toks = [], [], []
-            for rid, text in zip(pdf["_id"], pdf["_text"]):
-                out: list = []
-                # NULL text must yield 0 pieces (matches the SQL oracle's
-                # semantics); str(None) would segment the literal 'None'.
-                for w in (text.split() if isinstance(text, str) else []):
-                    seg = memo.get(w)
-                    if seg is None:
-                        seg = _viterbi_segment_prob(w, _ps, _ml)
-                        if seg is None:
-                            seg = []
-                            run = ""
-                            for ch in w:
-                                if ch in _ps:
-                                    run += ch
-                                else:
-                                    if run:
-                                        seg.extend(_viterbi_segment_prob(run, _ps, _ml) or [_unk])
-                                        run = ""
-                                    seg.append(_unk)
-                            if run:
-                                seg.extend(_viterbi_segment_prob(run, _ps, _ml) or [_unk])
-                        memo[w] = seg
-                    out.extend(seg)
-                ids.append(rid)
-                ns.append(len(out))
-                toks.append(out)
-            yield pd.DataFrame({"_id": ids, "n_pieces": ns, "pieces": toks})
-
-    src = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-    out = src.mapInPandas(encode, schema="_id long, n_pieces int, pieces array<string>")
-    return out.withColumnRenamed("_id", id_col)

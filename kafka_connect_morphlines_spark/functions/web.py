@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from kafka_connect_morphlines_spark.functions.textstats import tokens
+
 # Query parameters that never identify content — ad/campaign trackers.
 TRACKING_PARAMS = r"(utm_[^=&]*|gclid|fbclid|msclkid)"
 
@@ -269,9 +271,7 @@ def textrank_keywords(
 
     toks = docs.select(
         F.col(doc_id_col).alias("_doc"),
-        F.posexplode(
-            F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != "")
-        ).alias("pos", "token"),
+        F.posexplode(tokens(F.col(text_col))).alias("pos", "token"),
     ).select("_doc", "pos", F.lower(F.col("token")).alias("token"))
     kept = toks.filter(F.length("token") >= min_len)
     w = Window.partitionBy("_doc").orderBy("pos")

@@ -7049,10 +7049,9 @@ def line_boilerplate_clean(spark, sf_dir):
     certified, so the whole reassembly (order, delimiter, empty-doc
     handling) is pinned, while only 32-byte digests cross to the driver."""
     from kafka_connect_morphlines_spark.functions import textclean
-    from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
 
     docs = t(spark, sf_dir, "documents")
-    toks = tokens_codegen(F.col("text"))
+    toks = textstats.tokens(F.col("text"))
     nlines = F.ceil(F.size(toks) / F.lit(4)).cast("int")
     pseudo = docs.select(
         "doc_id",
@@ -7366,10 +7365,9 @@ def line_dedup_within_doc(spark, sf_dir):
     pseudo-line survives, repeats inside the same doc are dropped; the
     rebuilt text digest is certified so reassembly order is pinned."""
     from kafka_connect_morphlines_spark.functions import textclean
-    from kafka_connect_morphlines_spark.functions.textstats import tokens_codegen
 
     docs = t(spark, sf_dir, "documents")
-    toks = tokens_codegen(F.col("text"))
+    toks = textstats.tokens(F.col("text"))
     nlines = F.ceil(F.size(toks) / F.lit(4)).cast("int")
     pseudo = docs.select(
         "doc_id",
@@ -9375,10 +9373,11 @@ def compression_ratio_quality(spark, sf_dir):
     SQL analogue, but its output at the pinned level is deterministic for
     a given zlib build, so the gate is a committed GOLDEN PARQUET
     generated at sf0.01 (the driver's correctness SF by contract) via
-    tools/make_compression_golden.py; the oracle reads it back with
-    read_parquet().  This pins the full Spark-side pipeline — schema,
-    Arrow batching, null handling, 6dp rounding — while zlib's own
-    semantics stay pinned by the known-string exact values in pytest.
+    ``tools/make_golden_oracle.py compression_ratio_quality``; the oracle
+    reads it back with read_parquet().  This pins the full Spark-side
+    pipeline — schema, Arrow batching, null handling, 6dp rounding — while
+    zlib's own semantics stay pinned by the known-string exact values in
+    pytest.
     Honest limits, documented: the pin is (a) sf0.01-specific and (b)
     zlib-build-specific (this container); a zlib upgrade that changes
     compressed sizes requires regenerating the golden, exactly like the
@@ -10391,7 +10390,7 @@ def user_agent_parse(spark, sf_dir):
 # over the input tables (ADVICE r09): running their oracle at any other
 # scale factor mismatches by construction, so tools/check_correctness.py
 # downgrades them to rows-only checks unless sf_dir is sf0.01.  Regenerate
-# with tools/make_golden_oracle.py (or tools/make_compression_golden.py).
+# with tools/make_golden_oracle.py QUERY_NAME.
 GOLDEN_SF001_ORACLES = frozenset(
     {"compression_ratio_quality", "icws_weighted_near_dupes"}
 )

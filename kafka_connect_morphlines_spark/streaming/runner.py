@@ -55,6 +55,10 @@ def run_stream(
     begin/commit notifications (MorphlineSinkTask.java:132,148).  Exactly-once
     is the sink's contract (idempotent write keyed on epoch_id + checkpoint).
 
+    ``quarantine_sink(df, epoch_id)`` receives the records the pipeline
+    flagged ``_invalid``; it is not called for a micro-batch whose output
+    has no ``_invalid`` column and that no constraint routed to it.
+
     ``constraints`` (validation.Constraint list) adds a per-batch quality
     gate AFTER the pipeline: a micro-batch that violates any constraint is
     routed whole to the quarantine sink instead of the main sink — the
@@ -72,6 +76,9 @@ def run_stream(
         try:
             out = pipeline(batch_df)
             good, bad = quarantine_split(out)
+            # without a flag column ``bad`` is statically empty: skip its
+            # sink call unless the gate below routes the batch there
+            may_quarantine = QUARANTINE_FLAG in out.columns
             if constraints:
                 from kafka_connect_morphlines_spark.functions import validation
 
@@ -79,7 +86,8 @@ def run_stream(
                 if verdict.filter(~F.col("passed")).count() > 0:
                     bad = bad.unionByName(good, allowMissingColumns=True)
                     good = good.filter(F.lit(False))
-            if quarantine_sink is not None:
+                    may_quarantine = True
+            if quarantine_sink is not None and may_quarantine:
                 quarantine_sink(bad, epoch_id)
             if sink is not None:
                 sink(good, epoch_id)

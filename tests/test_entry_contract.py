@@ -28,7 +28,8 @@ def test_uncertified_queries_registered_first():
     fixed queries) must lead the registration order, in its exact order,
     with everything already certified after it and nothing dropped."""
     names = list(e.queries())
-    prefix = e._ROUND11_PREFIX
+    prefix = e._CERT_PREFIX
+    assert len(prefix) == 50
     assert names[: len(prefix)] == prefix
     assert set(prefix) <= set(names)
     # prefix entries must be unique (a duplicate silently burns a slot)

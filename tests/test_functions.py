@@ -226,6 +226,27 @@ def test_lang_id_markers(spark):
     assert out == {1: "en", 2: "es", 3: "und"}
 
 
+def test_tokens_contract(spark):
+    """Java ``\\s`` separators on both ends and inside, empty tokens
+    dropped, NULL stays NULL — all in codegen, no lambda function."""
+    cases = [
+        ("\talpha beta\n", ["alpha", "beta"]),
+        ("\n", []),
+        ("", []),
+        (" \t\r\n\f\x0b ", []),
+        ("a  \t\n b\r\nc", ["a", "b", "c"]),
+        ("  lead and trail  ", ["lead", "and", "trail"]),
+        ("\xa0nbsp\xa0", ["\xa0nbsp\xa0"]),  # not in Java \s
+        (None, None),
+    ]
+    df = spark.createDataFrame([(i, t) for i, (t, _) in enumerate(cases)], "i int, t string")
+    proj = df.select("i", textstats.tokens(F.col("t")).alias("toks"))
+    got = {r["i"]: r["toks"] for r in proj.collect()}
+    assert [got[i] for i in range(len(cases))] == [want for _, want in cases]
+    plan = proj._jdf.queryExecution().executedPlan().toString().lower()
+    assert "lambdafunction" not in plan
+
+
 def test_bpe_ish_tokens(spark):
     df = spark.createDataFrame([("hello, world42!",)], "t string")
     out = df.select(textstats.bpe_ish_tokens(F.col("t")).alias("toks")).collect()[0]["toks"]

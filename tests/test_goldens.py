@@ -17,26 +17,10 @@ import os
 import pytest
 
 from kafka_connect_morphlines_spark.plans.queries import QUERIES
+from tools.make_goldens import canonical_rows
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "resources", "goldens")
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def _canonical_rows(df) -> list[list]:
-    from decimal import Decimal
-
-    cols = sorted(df.columns)
-    rows = []
-    for r in df.collect():
-        d = r.asDict(recursive=True)
-        rows.append([
-            d[c].hex() if isinstance(d[c], (bytes, bytearray))
-            else str(d[c]) if isinstance(d[c], Decimal)
-            else d[c]
-            for c in cols
-        ])
-    rows.sort(key=lambda row: json.dumps(row, sort_keys=True, default=str))
-    return rows
 
 
 @pytest.mark.parametrize("name", sorted(f[: -len(".json")] for f in os.listdir(GOLDEN_DIR) if f.endswith(".json")))
@@ -45,7 +29,7 @@ def test_golden_exact_output(spark, name):
         golden = json.load(fh)
     df = QUERIES[name].build(spark, golden["sf_dir"])
     assert sorted(df.columns) == golden["columns"]
-    got = _canonical_rows(df)
+    got = canonical_rows(df)
     assert len(got) == len(golden["rows"]), f"{name}: row count {len(got)} != golden {len(golden['rows'])}"
     # integer-valued cells may deserialize as int vs float through JSON; the
     # queries round their own floats, so plain equality is the contract

@@ -65,6 +65,27 @@ def test_quarantine_dlq(spark, tmp_path):
     assert bad_batches == ["not json"]
 
 
+def test_unflagged_pipeline_never_calls_the_quarantine_sink(spark, tmp_path):
+    """A pipeline without flagInvalid has nothing to quarantine: every row
+    reaches the main sink and the quarantine sink (a DLQ write job per
+    call) is never invoked."""
+    src_dir = str(tmp_path / "plain_src" / "data")
+    spark.createDataFrame([(1,), (2,), (3,)], "k long").coalesce(1).write.parquet(src_dir)
+    pipe = compile_pipeline([{"setValues": {"tag": "row-@{k}"}}])
+    good, quarantine_calls = [], []
+    stream = spark.readStream.schema(spark.read.parquet(src_dir).schema).parquet(src_dir)
+    q = runner.run_stream(
+        stream,
+        pipe,
+        sink=lambda df, epoch: good.extend(r["k"] for r in df.collect()),
+        quarantine_sink=lambda df, epoch: quarantine_calls.append(epoch),
+    )
+    q.processAllAvailable()
+    q.stop()
+    assert sorted(good) == [1, 2, 3]
+    assert quarantine_calls == []
+
+
 def test_windowed_aggregation_stream(spark, events_stream_dir):
     """Watermarked tumbling windows over the stream (complete mode for a
     bounded fixture)."""

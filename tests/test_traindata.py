@@ -73,6 +73,17 @@ def test_chunk_documents_roundtrip(spark):
     assert " ".join(r.chunk_text for r in out) == text
 
 
+def test_edge_whitespace_is_not_a_token(spark):
+    """Leading/trailing tabs and newlines are separators, never empty
+    tokens: ``"\talpha beta\n"`` has 2 tokens and ``"\n"`` none, in every
+    operator that tokenizes."""
+    df = _docs(spark, [(1, "\talpha beta\n", "s"), (2, "\n", "s")])
+    chunks = traindata.sliding_window_chunks(df, window=4, stride=4).collect()
+    assert [(r.doc_id, r.n_tokens, r.chunk_text) for r in chunks] == [(1, 2, "alpha beta")]
+    rates = traindata.temperature_rates(df, alpha=1.0).collect()
+    assert [r.n_tokens for r in rates] == [2]
+
+
 def test_connected_components_transitive(spark):
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (6, 7)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id long")

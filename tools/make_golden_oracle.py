@@ -1,6 +1,6 @@
 """Regenerate a pinned golden parquet that serves as the DuckDB oracle
 for a query whose semantics are deterministic but not SQL-expressible
-(VERDICT r09 next-round #2, generalizing tools/make_compression_golden.py).
+(VERDICT r09 next-round #2; compression_ratio_quality was the first).
 
 The gate runs the Spark query at sf0.01 (the driver's correctness SF by
 contract) and writes the result as ONE parquet file that the oracle SQL
