@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kafka_connect_morphlines_spark.functions.textstats import tokens
+from kafka_connect_morphlines_spark.functions.textstats import split_words, tokens
 
 __all__ = [
     "binary_rank_auc",
@@ -1028,7 +1028,7 @@ def rouge_l(
     def _score(batches):
         for pdf in batches:
             res = [
-                rouge_l_py((a or "").split(), (b or "").split(), decimals)
+                rouge_l_py(split_words(a), split_words(b), decimals)
                 for a, b in zip(pdf[text_a_col], pdf[text_b_col])
             ]
             pdf = pdf.copy()

@@ -8,6 +8,8 @@ means only ``text`` is read.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, functions as F
 
 # Tiny per-language stopword marker sets for the n-gram/stopword heuristic
@@ -26,6 +28,7 @@ EN_STOPWORDS = LANG_MARKERS["en"] + ["on", "with", "as", "at", "by", "an", "be",
 
 # Java regex ``\s``: the characters ``tokens()`` separates on and strips.
 _JAVA_WS = " \t\n\x0b\f\r"
+_JAVA_WS_RUN = re.compile(f"[{_JAVA_WS}]+")
 
 
 def tokens(text: Column) -> Column:
@@ -47,6 +50,13 @@ def tokens(text: Column) -> Column:
     """
     tt = F.btrim(text, F.lit(_JAVA_WS))
     return F.when(F.length(tt) == 0, F.array().cast("array<string>")).otherwise(F.split(tt, r"\s+"))
+
+
+def split_words(text: str | None) -> list[str]:
+    """``tokens`` for Python-worker code: the runs between Java ``\\s``
+    separators, empty pieces dropped; ``[]`` for None or non-string text.
+    ``str.split()`` would also split on Unicode spaces such as U+00A0."""
+    return [w for w in _JAVA_WS_RUN.split(text) if w] if isinstance(text, str) else []
 
 
 def bpe_ish_tokens(text: Column) -> Column:

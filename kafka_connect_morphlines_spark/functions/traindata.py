@@ -38,7 +38,7 @@ from itertools import groupby
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from kafka_connect_morphlines_spark.functions import ensure_parallelism
-from kafka_connect_morphlines_spark.functions.textstats import tokens
+from kafka_connect_morphlines_spark.functions.textstats import split_words, tokens
 
 
 def word_ngrams_exploded(
@@ -895,7 +895,7 @@ def bpe_encode(
             toks_out, n_out = [], []
             for text in pdf["_text"]:
                 toks: list[str] = []
-                for w in (text or "").split():
+                for w in split_words(text):
                     if w not in cache:
                         cache[w] = encode_word(w)
                     toks.extend(cache[w])
@@ -1506,7 +1506,7 @@ def _unigram_encode(
                 out: list[str] = []
                 # NULL text must yield 0 pieces (matches the SQL oracle's
                 # semantics); str(None) would segment the literal 'None'.
-                for w in (text.split() if isinstance(text, str) else []):
+                for w in split_words(text):
                     seg = memo.get(w)
                     if seg is None:
                         seg = _seg(w, _scores, _ml)

@@ -5021,7 +5021,8 @@ def benford_first_digit_prices(spark, sf_dir):
     log10(1+1/d) are embedded as shared LITERALS (computed once in
     Python), so neither engine evaluates its own log and every
     chi-square term is an identical double chain.  One map-side-combined
-    groupBy over first digits; the 9-row expectation table broadcasts."""
+    groupBy over first digits.  The 9-row expectation table is the
+    preserved side of the left join, so the per-digit counts broadcast."""
     orders = t(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1)
     obs = (
         orders.select(
@@ -5038,11 +5039,7 @@ def benford_first_digit_prices(spark, sf_dir):
         [(d, _BENFORD_P[d]) for d in range(1, 10)], "digit int, p double"
     )
     tot = obs.agg(F.sum("n").alias("nt"))
-    j = (
-        F.broadcast(exp)
-        .join(obs, "digit", "left")
-        .crossJoin(F.broadcast(tot))
-    )
+    j = exp.join(obs, "digit", "left").crossJoin(F.broadcast(tot))
     dev = F.coalesce(F.col("n"), F.lit(0)).cast("double") - F.col("nt").cast("double") * F.col("p")
     return j.select(
         "digit",

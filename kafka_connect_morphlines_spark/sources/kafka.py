@@ -18,8 +18,8 @@ from kafka_connect_morphlines_spark import record as R
 
 # The format seam: "kafka" (the real connector) by default;
 # sources.embedded_broker.install() flips it to the jar-less embedded broker
-# so the same reader/writer call sites run end-to-end in environments
-# without spark-sql-kafka (this sandbox, unit tests).
+# so the same call sites run end-to-end without spark-sql-kafka (unit tests,
+# perfbench): reads through its DataSource, writes through its publish().
 KAFKA_FORMAT = "kafka"
 
 
@@ -81,6 +81,10 @@ def write_kafka_batch(df: DataFrame, bootstrap: str, topic: str | None = None, o
     Per-record topic comes from a ``topic`` column when no fixed topic is
     given, matching the reference's topic/topicField pair (ref :129-134).
     """
+    if KAFKA_FORMAT != "kafka":
+        from kafka_connect_morphlines_spark.sources import embedded_broker
+
+        return embedded_broker.publish(df, {"kafka.bootstrap.servers": bootstrap, "topic": topic, **(options or {})})
 
     def go():
         # append is the kafka publish semantic (and the only save mode the

@@ -1,21 +1,21 @@
 """The native kafka transport, executed end-to-end against the embedded
-file-backed broker (sources/embedded_broker.py — a Python DataSource).
+file-backed broker (sources/embedded_broker.py — a Python DataSource reader
+and a driver-side publish).
 
 The reference's primary loop is a real Kafka consumer/producer
 (MorphlineSinkTask.java:129-149, KafkaDataProducerCommandBuilder.java:251-331);
 the engine's analogs are read_kafka_batch/stream + kafkaProducer
 {transport: kafka}.  These tests run those call sites' REAL
-``.format(...).option(...)`` reader/writer code — only the provider behind
-the format name differs — proving the option plumbing and the envelope
+``.format(...).option(...)`` reader code and write_kafka_batch's option
+plumbing — only the provider behind the seam differs — proving the envelope
 round-trip without the spark-sql-kafka jar."""
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import Row
-from pyspark.sql.types import BinaryType, StructField, StructType
 
 from kafka_connect_morphlines_spark import compile_pipeline
 from kafka_connect_morphlines_spark.sources import embedded_broker
@@ -86,9 +86,8 @@ def test_per_record_topic_and_key_partitioning(spark, broker):
     for r in rows:
         parts.setdefault(bytes(r["_key"]).decode(), set()).add(r["_kafkaPartition"])
     assert len(parts["same"]) == 1  # identical keys land on one partition
-    # offsets are dense record positions within each partition (cross-key:
-    # "same" and "other" may share a partition; writer-task completion order
-    # decides interleaving, density is the contract)
+    # offsets are dense record positions within each partition ("same" and
+    # "other" may share a partition)
     by_part = {}
     for r in rows:
         by_part.setdefault(r["_kafkaPartition"], []).append(r["_kafkaOffset"])
@@ -162,27 +161,26 @@ def test_streaming_consume_with_incremental_publish(spark, broker, tmp_path):
     assert [r["_kafkaOffset"] for r in sorted(seen, key=lambda r: r["_kafkaOffset"])] == [0, 1]
 
 
-def _publish(root: str, values: list[bytes]) -> None:
-    """One writer task: one log file of topic ``t``."""
-    schema = StructType([StructField("value", BinaryType())])
-    writer = embedded_broker._BrokerWriter({"kafka.bootstrap.servers": root, "topic": "t"}, schema)
-    writer.write(iter(Row(value=v) for v in values))
+def _publish(spark, root: str, values: list[bytes]) -> None:
+    """One publish of unkeyed rows: one log file of topic ``t``."""
+    df = spark.createDataFrame(pa.table({"value": pa.array(values, pa.binary())}))  # a local relation: no Python tasks
+    embedded_broker.publish(df, {"kafka.bootstrap.servers": root, "topic": "t"})
 
 
 def _scan(reader, parts) -> list[tuple]:
     return [row for part in parts for row in reader.read(part)]
 
 
-def test_stream_reader_parses_only_the_slice(tmp_path, monkeypatch):
+def test_stream_reader_parses_only_the_slice(spark, tmp_path, monkeypatch):
     """Offsets come from cached per-file line counts and a slice opens only
     the files holding its offsets: no trigger re-parses the whole log."""
     root = str(tmp_path / "broker")
     options = {"kafka.bootstrap.servers": root, "subscribe": "t"}
     for i in range(2):
-        _publish(root, [f"{i}-{j}".encode() for j in range(3)])
+        _publish(spark, root, [f"{i}-{j}".encode() for j in range(3)])
     reader = embedded_broker._BrokerStreamReader(options)
     start = reader.latestOffset()
-    _publish(root, [f"2-{j}".encode() for j in range(3)])
+    _publish(spark, root, [f"2-{j}".encode() for j in range(3)])
 
     parsed = []
     loads = embedded_broker.json.loads
@@ -204,9 +202,9 @@ def test_stream_reader_parses_only_the_slice(tmp_path, monkeypatch):
     assert _scan(fresh, fresh.partitions({"t/0": 4}, {"t/0": 8})) == full[4:8]
 
 
-def test_stream_reader_rejects_a_file_out_of_name_order(tmp_path):
+def test_stream_reader_rejects_a_file_out_of_name_order(spark, tmp_path):
     root = str(tmp_path / "broker")
-    _publish(root, [b"a"])
+    _publish(spark, root, [b"a"])
     reader = embedded_broker._BrokerStreamReader({"kafka.bootstrap.servers": root, "subscribe": "t"})
     assert reader.latestOffset() == {"t/0": 1}
     pdir = os.path.join(root, "t", "p0")
@@ -216,7 +214,7 @@ def test_stream_reader_rejects_a_file_out_of_name_order(tmp_path):
         reader.latestOffset()
 
 
-def test_broker_write_is_one_rename(tmp_path, monkeypatch):
+def test_broker_write_is_one_rename(spark, tmp_path, monkeypatch):
     """A log file becomes visible whole: nothing named ``*.jsonl`` exists
     until the written temp file is renamed into place."""
     root = str(tmp_path / "broker")
@@ -231,21 +229,21 @@ def test_broker_write_is_one_rename(tmp_path, monkeypatch):
         rename(src, dst)
 
     monkeypatch.setattr(embedded_broker.os, "rename", checked_rename)
-    _publish(root, [b"a", b"b"])
+    _publish(spark, root, [b"a", b"b"])
     assert renames == [2]
     assert len(embedded_broker._log_files(pdir)) == 1
     assert [f for f in os.listdir(pdir) if f.endswith(".tmp")] == []
 
 
-def test_concurrent_writers_never_shift_counted_offsets(tmp_path):
-    """Writer tasks racing a polling reader: files become visible in name
+def test_concurrent_writers_never_shift_counted_offsets(spark, tmp_path):
+    """Publishing threads racing a polling reader: files become visible in name
     order, so no poll ever sees one land below a file it already counted,
     and the final offsets cover every record once."""
     import sys
     import threading
 
     root = str(tmp_path / "broker")
-    _publish(root, [b"seed"])
+    _publish(spark, root, [b"seed"])
     reader = embedded_broker._BrokerStreamReader({"kafka.bootstrap.servers": root, "subscribe": "t"})
     errors, done = [], threading.Event()
 
@@ -259,7 +257,7 @@ def test_concurrent_writers_never_shift_counted_offsets(tmp_path):
 
     def write(w):
         for i in range(20):
-            _publish(root, [f"{w}-{i}".encode()])
+            _publish(spark, root, [f"{w}-{i}".encode()])
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
@@ -281,6 +279,57 @@ def test_concurrent_writers_never_shift_counted_offsets(tmp_path):
     rows = _scan(reader, reader.partitions({}, end))
     assert [r[4] for r in rows] == list(range(161))
     assert sorted(r[1] for r in rows) == sorted([b"seed"] + [f"{w}-{i}".encode() for w in range(8) for i in range(20)])
+
+
+def test_publish_writes_one_file_per_partition_in_row_order(spark, broker):
+    """One publish of keyed rows over 4 partitions: one log file per
+    partition, no temp file left, and offsets within each partition follow
+    the frame's row order."""
+    rows = [(f"k{i % 20}", f"v{i}") for i in range(200)]
+    df = spark.createDataFrame(rows, "key string, value string")
+    assert df.rdd.getNumPartitions() > 1
+    embedded_broker.publish(df, {"kafka.bootstrap.servers": broker, "topic": "t", "numPartitions": "4"})
+    for p in range(4):
+        pdir = os.path.join(broker, "t", f"p{p}")
+        assert len(embedded_broker._log_files(pdir)) == 1
+        assert [f for f in os.listdir(pdir) if f.endswith(".tmp")] == []
+    env = read_kafka_batch(spark, broker, "t").collect()
+    part_of = {bytes(r["_key"]).decode(): r["_kafkaPartition"] for r in env}
+    assert set(part_of.values()) == {0, 1, 2, 3}
+    for p in range(4):
+        got = [bytes(r["_value"]).decode() for r in sorted(env, key=lambda r: r["_kafkaOffset"]) if r["_kafkaPartition"] == p]
+        assert got == [v for k, v in rows if part_of[k] == p]
+
+
+def test_zero_row_publish_creates_nothing(spark, broker):
+    """An empty frame, static or filtered to nothing, publishes no file and
+    creates no topic directory."""
+    options = {"kafka.bootstrap.servers": broker, "topic": "t"}
+    embedded_broker.publish(spark.createDataFrame([], "key string, value string"), options)
+    embedded_broker.publish(spark.range(4).filter("id < 0").selectExpr("CAST(id AS STRING) AS value"), options)
+    assert not os.path.exists(broker)
+
+
+def test_failed_publish_publishes_nothing(spark, broker):
+    """A publish whose job fails in one task, after the other tasks have
+    finished, raises its own error and leaves the topic without records."""
+    from pyspark.sql import functions as F
+
+    @F.udf("string")
+    def value(i):
+        if i == 0:
+            import time
+
+            time.sleep(2)
+            raise ValueError("unpublishable record")
+        return f"v{i}"
+
+    df = spark.range(0, 8, numPartitions=4).select(value("id").alias("value"))
+    with pytest.raises(Exception, match="unpublishable record") as err:
+        write_kafka_batch(df, broker, "t")
+    assert not isinstance(err.value, KafkaUnavailableError)
+    assert read_kafka_batch(spark, broker, "t").count() == 0
+    assert not os.path.exists(os.path.join(broker, "t"))
 
 
 def _write_values(spark, broker, values):

@@ -247,6 +247,16 @@ def test_tokens_contract(spark):
     assert "lambdafunction" not in plan
 
 
+def test_split_words_matches_tokens(spark):
+    """The Python-worker splitter cuts where ``tokens`` does: on Java
+    ``\\s`` only, never on Unicode spaces such as U+00A0 or U+3000."""
+    texts = ["\talpha beta\n", "\n", "", " \t\r\n\f\x0b ", "a  \t\n b\r\nc", "a\xa0b c", "\u3000x\u2003y\x1c"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = {r["i"]: r["toks"] for r in df.select("i", textstats.tokens(F.col("t")).alias("toks")).collect()}
+    assert [textstats.split_words(t) for t in texts] == [got[i] for i in range(len(texts))]
+    assert textstats.split_words(None) == []
+
+
 def test_bpe_ish_tokens(spark):
     df = spark.createDataFrame([("hello, world42!",)], "t string")
     out = df.select(textstats.bpe_ish_tokens(F.col("t")).alias("toks")).collect()[0]["toks"]

@@ -232,6 +232,19 @@ def test_bpe_encode_applies_merges_greedily(spark):
     assert enc[0]["n_tokens"] < raw_syms
 
 
+def test_bpe_encode_splits_words_like_tokens(spark):
+    """Encoding splits words where training does (``textstats.tokens``,
+    Java ``\\s``): a no-break space stays inside its word."""
+    from kafka_connect_morphlines_spark.functions import textstats
+
+    df = spark.createDataFrame([(0, "a\xa0b c")], "doc_id long, text string")
+    rules = traindata.bpe_train(df, n_merges=8)
+    toks = traindata.bpe_encode(df, rules).collect()[0]["tokens"]
+    words = df.select(textstats.tokens(F.col("text"))).first()[0]
+    assert words == ["a\xa0b", "c"]
+    assert "".join(toks).split("</w>")[:-1] == words
+
+
 def test_normalize_scores_rank_semantics(spark):
     from kafka_connect_morphlines_spark.functions import traindata
 
