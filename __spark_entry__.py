@@ -25,40 +25,36 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Certification prefix.  Each certification round samples a bounded
 # (50-entry) prefix of queries(); across rounds the union of CORRECTNESS_r*
-# files must cover the whole corpus.  This rotation leads with the queries
-# whose build() reaches code this change touched: the Python word splitter
-# now shared with ``textstats.tokens`` (``bpe_encode``, the unigram-LM
-# encoder ``_unigram_encode`` and ROUGE-L; a build() trace at sf0.001 finds
-# one query each) and benford_first_digit_prices, whose ignored broadcast
-# hint is gone.  Then the 13 queries last hash-certified in r04, then the
-# stalest cohort outside the previous rotation: all 28 last certified in
-# r05, and the first 5 by name of those last certified in r07 (staleness =
-# last hash-certified round in the CORRECTNESS_r01..r11 files).
+# files must cover the whole corpus.  This rotation changes no query plan
+# (only how Python workers start), so it is stalest-first: the 18 queries
+# last certified in r07 outside the two previous rotations, all 24 last
+# certified in r08, and the first 8 by name of those last certified in r09
+# (staleness = last hash-certified round in the CORRECTNESS_r01..r11 files).
 # Exactly 50 slots.  Nothing is ever dropped: certified queries stay registered.
 _CERT_PREFIX = [
-    # ---- slots 1-4: reach the shared splitter or lost the broadcast hint ----
-    "benford_first_digit_prices", "bpe_encode_sample", "rouge_l_pairs",
-    "unigram_lm_encode_sample",
-    # ---- slots 5-17: last certified in r04 ----
-    "multimodal_binary_meta", "normalized_dedup_keys", "pit_join_ship_state",
-    "range_join_bucketed", "remove_fields_projection", "resample_ffill_hourly",
-    "rolling_event_stats", "salted_agg_event_totals", "scd2_order_versions",
-    "string_codec_roundtrip", "winnow_containment_pairs",
-    "winnow_fingerprint_index", "winnow_overlap_pairs",
-    # ---- slots 18-45: last certified in r05 ----
-    "calibration_bins_purchase", "cube_order_counts", "customer_order_histogram",
-    "decayed_engagement_users", "disjunctive_part_revenue",
-    "exists_orders_by_priority", "filter_agg_revenue", "hard_negative_mining",
-    "idle_rich_customers", "jaro_winkler_linkage", "km_retention_curve",
-    "lag_daily_revenue_delta", "large_order_customers", "local_supplier_volume",
-    "nation_market_share", "pmi_type_value", "pr_threshold_metrics",
-    "profit_by_nation_year", "promo_revenue_share", "returned_items_topk",
-    "shipping_priority_topk", "small_quantity_revenue", "stats_by_returnflag",
-    "supplier_part_variety", "top_revenue_supplier",
-    "touch_attribution_channels", "volume_shipping_pairs", "waiting_suppliers",
-    # ---- slots 46-50: last certified in r07 ----
-    "control_char_stats", "embedding_ann_lsh", "embedding_binary_hamming_topk",
-    "embedding_int8_quantize", "embedding_int8_topk",
+    # ---- slots 1-18: last certified in r07 ----
+    "embedding_ivf_topk", "embedding_near_dupes",
+    "embedding_random_projection", "event_time_hopping_window",
+    "gini_value_by_type", "gumbel_stratified_sample",
+    "interleave_sources_order", "map_user_rankings", "mmr_diverse_topk",
+    "mrr_user_rankings", "ndcg_user_rankings", "permutation_test_values",
+    "phrase_contamination_scan", "pii_scan_summary",
+    "priority_counts_by_linestatus", "quantile_normalize_chars",
+    "route_by_schema_docs", "url_blocklist_filter",
+    # ---- slots 19-42: last certified in r08 ----
+    "acf_daily_revenue", "add_values_array", "approx_sketches",
+    "argmin_supplier_per_nation", "asof_join_events",
+    "avro_container_roundtrip", "bootstrap_purchase_mean_ci",
+    "bradley_terry_events", "brier_score_purchase",
+    "cusum_changepoint_revenue", "detect_mime_type", "embedding_pca_whiten",
+    "hll_audience_overlap", "hll_rolling_distinct_users", "hll_sketch_rollup",
+    "kmv_distinct_users", "multimodal_features", "pq_encode_codes",
+    "pq_topk_adc", "read_xml_roundtrip", "sample_seeded",
+    "temperature_quota_sample", "triangle_count_cosupply", "user_agent_parse",
+    # ---- slots 43-50: last certified in r09 ----
+    "agg_pricing_summary", "anova_value_by_type", "anti_join_customers",
+    "brown_forsythe_values", "compression_ratio_quality", "contains_filter",
+    "convert_timestamp_millis", "dedup_exact",
 ]
 _CERT_RANK = {name: i for i, name in enumerate(_CERT_PREFIX)}
 

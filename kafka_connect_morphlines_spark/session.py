@@ -86,6 +86,11 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
     )
+    if master.startswith("local"):
+        # Workers then skip re-reading unchanged pyspark.zip before each
+        # task (pyworker.py).  Local only: the PYTHONPATH edit above is
+        # what lets the daemon import this package.
+        builder = builder.config("spark.python.daemon.module", "kafka_connect_morphlines_spark.pyworker")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

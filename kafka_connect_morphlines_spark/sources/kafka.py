@@ -87,8 +87,7 @@ def write_kafka_batch(df: DataFrame, bootstrap: str, topic: str | None = None, o
         return embedded_broker.publish(df, {"kafka.bootstrap.servers": bootstrap, "topic": topic, **(options or {})})
 
     def go():
-        # append is the kafka publish semantic (and the only save mode the
-        # Python-DataSource-backed embedded broker accepts)
+        # append is the kafka publish semantic
         writer = df.write.format(KAFKA_FORMAT).mode("append").option("kafka.bootstrap.servers", bootstrap)
         if topic:
             writer = writer.option("topic", topic)
