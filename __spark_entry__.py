@@ -25,36 +25,38 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Certification prefix.  Each certification round samples a bounded
 # (50-entry) prefix of queries(); across rounds the union of CORRECTNESS_r*
-# files must cover the whole corpus.  This rotation changes no query plan
-# (only how Python workers start), so it is stalest-first: the 18 queries
-# last certified in r07 outside the two previous rotations, all 24 last
-# certified in r08, and the first 8 by name of those last certified in r09
-# (staleness = last hash-certified round in the CORRECTNESS_r01..r11 files).
-# Exactly 50 slots.  Nothing is ever dropped: certified queries stay registered.
+# files must cover the whole corpus.  This rotation leads with the 10
+# queries whose build() reaches the rewritten bucketed-prefix order
+# statistics (found by tracing every build() under sys.setprofile), then
+# takes the rest of the r09 cohort (the 36 queries last certified in r09
+# from distinct_count_by_nation on), then stalest-first: the first 4 by
+# name of those last certified in r10 outside the previous rotations
+# (staleness = last hash-certified round in the CORRECTNESS_r01..r11
+# files).  Exactly 50 slots.  Nothing is ever dropped: certified queries
+# stay registered.
 _CERT_PREFIX = [
-    # ---- slots 1-18: last certified in r07 ----
-    "embedding_ivf_topk", "embedding_near_dupes",
-    "embedding_random_projection", "event_time_hopping_window",
-    "gini_value_by_type", "gumbel_stratified_sample",
-    "interleave_sources_order", "map_user_rankings", "mmr_diverse_topk",
-    "mrr_user_rankings", "ndcg_user_rankings", "permutation_test_values",
-    "phrase_contamination_scan", "pii_scan_summary",
-    "priority_counts_by_linestatus", "quantile_normalize_chars",
-    "route_by_schema_docs", "url_blocklist_filter",
-    # ---- slots 19-42: last certified in r08 ----
-    "acf_daily_revenue", "add_values_array", "approx_sketches",
-    "argmin_supplier_per_nation", "asof_join_events",
-    "avro_container_roundtrip", "bootstrap_purchase_mean_ci",
-    "bradley_terry_events", "brier_score_purchase",
-    "cusum_changepoint_revenue", "detect_mime_type", "embedding_pca_whiten",
-    "hll_audience_overlap", "hll_rolling_distinct_users", "hll_sketch_rollup",
-    "kmv_distinct_users", "multimodal_features", "pq_encode_codes",
-    "pq_topk_adc", "read_xml_roundtrip", "sample_seeded",
-    "temperature_quota_sample", "triangle_count_cosupply", "user_agent_parse",
-    # ---- slots 43-50: last certified in r09 ----
-    "agg_pricing_summary", "anova_value_by_type", "anti_join_customers",
-    "brown_forsythe_values", "compression_ratio_quality", "contains_filter",
-    "convert_timestamp_millis", "dedup_exact",
+    # ---- slots 1-10: build() reaches the bucketed-prefix rewrite ----
+    "kruskal_wallis_values", "ks_drift_value", "mann_whitney_values",
+    "percentiles_by_status", "revenue_concentration", "roc_auc_purchase",
+    "spearman_spend_vs_orders", "trimmed_mean_by_type",
+    "weighted_median_price_by_flag", "zipf_slope",
+    # ---- slots 11-46: rest of the r09 cohort ----
+    "distinct_count_by_nation", "enrich_json_conform",
+    "event_time_tumbling_window", "except_low_priority",
+    "extract_json_paths", "extract_uri", "find_replace",
+    "from_connect_data_json", "generate_uuid_deterministic", "grok_extract",
+    "head_sorted", "if_then_else", "join_revenue_by_nation",
+    "math_functions", "not_equals_filter", "orders_by_month",
+    "pca_power_component", "pivot_event_counts", "read_csv_lines",
+    "read_json_typed", "read_line_explode", "read_multi_line",
+    "rollup_counts", "semi_join_intersect", "sessionize",
+    "set_values_template", "sort_topn_lineitems", "split_field",
+    "split_key_value", "string_functions", "to_connect_data_projection",
+    "translate_dict", "trend_daily_revenue_fast", "try_rules",
+    "window_running_sum", "window_topk_orders",
+    # ---- slots 47-50: last certified in r10 ----
+    "ab_test_event_values", "audience_overlap_matrix",
+    "bloom_incremental_dedup", "bloom_semi_join_orders",
 ]
 _CERT_RANK = {name: i for i, name in enumerate(_CERT_PREFIX)}
 

@@ -329,7 +329,9 @@ _SPECIAL_TS_FORMATS = {"unixTimeInMillis", "unixTimeInSeconds", "unixTimeInNanos
 
 def _validate_datetime_pattern(fmt: str) -> None:
     """Surface bad datetime patterns at compile time (config typos would
-    otherwise fail mid-job with a Spark execution error)."""
+    otherwise fail mid-job with a Spark execution error).  Optimizing a
+    literal ``date_format`` constant-folds it, which builds the formatter
+    and rejects a bad pattern, without running a Spark job."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
@@ -337,7 +339,9 @@ def _validate_datetime_pattern(fmt: str) -> None:
         return  # no session yet; the error will surface at first execution
     try:
         escaped = _sdf_to_spark(fmt).replace("'", "''")
-        spark.sql(f"SELECT date_format(timestamp'2020-01-02 03:04:05', '{escaped}')").collect()
+        spark.sql(
+            f"SELECT date_format(timestamp'2020-01-02 03:04:05', '{escaped}')"
+        )._jdf.queryExecution().optimizedPlan()
     except Exception as e:
         from kafka_connect_morphlines_spark.pipeline import PipelineSpecError
 

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_connect_morphlines_spark.functions import orderstats
 from kafka_connect_morphlines_spark.functions.textstats import split_words, tokens
 
 __all__ = [
@@ -83,16 +84,12 @@ def binary_rank_auc(df: DataFrame, score: Column, label: Column) -> DataFrame:
     group is a multiple of 1/2), so the only division is the final exact
     DECIMAL one — no floating-point accumulation anywhere.
 
-    Scale shape (late r10): the distinct-score frame is checkpointed and
-    counted, and the cumulative pass runs through
-    orderstats.bucketed_cumsum — one plain window while the frame fits a
-    partition, the deterministic-bucket distributed path beyond
-    SMALL_ROWS — so a CONTINUOUS unquantized score no longer concentrates
-    the ranking on one task (the old docstring demanded pre-quantization;
-    that contract is gone).
+    Scale shape: the distinct-score frame is checkpointed and counted,
+    and the cumulative pass runs through orderstats.bucketed_cumsum — one
+    plain window while the frame fits a partition, the bucketed path
+    beyond SMALL_ROWS — so a CONTINUOUS unquantized score does not
+    concentrate the ranking on one task.
     """
-    from kafka_connect_morphlines_spark.functions import orderstats
-
     per_score = df.groupBy(score.alias("s")).agg(
         F.sum(F.when(label, 1).otherwise(0)).alias("np_s"),
         F.sum(F.when(label, 0).otherwise(1)).alias("nn_s"),
@@ -249,12 +246,10 @@ def mann_whitney_u(
     (integer-exact), z > 0 means ``a`` ranks higher.  Shape at 100 TB:
     one distinct-value aggregate, the adaptive bucketed cumulative pass
     (orderstats.bucketed_cumsum — plain window while the distinct frame
-    fits one partition, the deterministic-bucket distributed path for
-    continuous values beyond SMALL_ROWS), one final aggregate.
+    fits one partition, the bucketed path for continuous values beyond
+    SMALL_ROWS), one final aggregate.
     """
     dec0 = "decimal(38,0)"
-    from kafka_connect_morphlines_spark.functions import orderstats
-
     per_v = (
         df.filter(group.isin([group_a, group_b]))
         .groupBy(value.alias("v"))
@@ -263,9 +258,6 @@ def mann_whitney_u(
             F.sum(F.when(group == group_b, 1).otherwise(0)).alias("nb_v"),
         )
     )
-    # late r10: cumulative ranks through the adaptive bucketed primitive —
-    # a continuous unquantized value column no longer single-partitions
-    # the ordered pass (the old "should be pre-quantized" contract is gone)
     per_v = per_v.localCheckpoint()  # count below is then ~free
     ranked = orderstats.bucketed_cumsum(
         per_v.withColumn("_n_v", F.col("na_v") + F.col("nb_v")),
@@ -579,38 +571,13 @@ def bradley_terry_strengths(
     ).orderBy("item")
 
 
-# below this many input rows the distinct-value frame trivially fits one
-# partition and the distributed machinery (range shuffle + checkpoint +
-# two bounded driver jobs) is pure overhead (~1.1s measured at sf0.1)
-_RANK2_SMALL_ROWS = 5_000_000
-
-
 def _rank2(
     df: DataFrame, col: str, out: str, n_rows: int | None = None
 ) -> DataFrame:
     """(value -> 2*average-rank) as an exact-integer map over DISTINCT
-    values: 2*avg_rank(v) = 2*#less(v) + #equal(v) + 1.
-
-    Distributed global ranking (r09 ADVICE fix; r10 determinism rework):
-    continuous metrics (per-customer spend sums) have ~n distinct values,
-    so an un-partitioned ordered window is a single-partition O(n) sort.
-    The scale path buckets the distinct frame with one codegen
-    ``monotone_log_bucket`` expression (bucket id = pure DATA-INDEPENDENT
-    function of the value — no spark_partition_id, no checkpoint freeze,
-    and no edges job at all since the r10 optimization round), runs the
-    cumulative count PARTITIONED BY bucket (all cores busy), and
-    prefix-sums the per-bucket totals on the driver — bounded driver
-    state: one integer per non-empty bucket (octave-span bounded), the
-    kmeans_fit_int contract, NOT data-sized.
-
-    Adaptive cutover: callers that already know the input row count
-    (their reduced frame is checkpointed, so count() is ~free) pass
-    ``n_rows``; at or below _RANK2_SMALL_ROWS the classic one-window path
-    runs instead — the distributed machinery's fixed cost (~1.1s) buys
-    nothing when the distinct values fit one partition.  BOTH paths emit
-    the identical exact integers (pinned by
-    test_rank2_distributed_matches_single_partition), so certified
-    consumers hash the same either way."""
+    values: 2*avg_rank(v) = 2*#less(v) + #equal(v) + 1.  ``n_rows`` is
+    any upper bound on the distinct-value count (see
+    _rank2_from_counts)."""
     cnt = df.groupBy(F.col(col).alias("_v")).agg(F.count(F.lit(1)).alias("_c"))
     return _rank2_from_counts(cnt.withColumnRenamed("_v", col), col, out, n_distinct=n_rows)
 
@@ -618,74 +585,20 @@ def _rank2(
 def _rank2_from_counts(
     cnt: DataFrame, col: str, out: str, n_distinct: int | None = None
 ) -> DataFrame:
-    """_rank2's engine for callers that ALREADY aggregated (value ->
-    count) — e.g. kruskal_wallis, whose (group, value, count) frame
-    yields the per-value totals for free.  ``cnt`` must have columns
-    (col, _c).  ``n_distinct`` is any upper bound on the distinct-value
-    count (a raw row count or a (group, value) combo count both work);
-    at or below _RANK2_SMALL_ROWS the classic one-window path runs, else
-    the distributed range-partitioned path.  Both emit identical exact
-    integers (CI-pinned)."""
+    """_rank2 for callers that ALREADY aggregated (value -> count) —
+    e.g. kruskal_wallis, whose (group, value, count) frame yields the
+    per-value totals for free.  ``cnt`` must have columns (col, _c).
+    The cumulative count is orderstats.bucketed_cumsum, cut over at
+    ``n_distinct`` (any upper bound on the distinct-value count): one
+    plain window up to SMALL_ROWS, the bucketed path beyond it — both
+    emit identical exact integers (pinned by
+    test_rank2_distributed_matches_single_partition)."""
     cnt = cnt.select(F.col(col).alias("_v"), F.col("_c"))
-    if n_distinct is not None and n_distinct <= _RANK2_SMALL_ROWS:
-        w = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, -1)
-        return cnt.select(
-            "_v",
-            (2 * F.coalesce(F.sum("_c").over(w), F.lit(0)) + F.col("_c") + 1).alias(
-                out
-            ),
-        ).withColumnRenamed("_v", col)
-    # r10 determinism rework (same class as the weighted-median fix): the
-    # r09 path range-repartitioned and trusted spark_partition_id order,
-    # frozen by a localCheckpoint — the one surface the CORRECTNESS_r09
-    # driver mismatch implicated.  Bucket ids are a PURE FUNCTION of the
-    # value, so the ranks are independent of partitioning, scheduling
-    # and block lifetime by construction; buckets only load-balance.
-    # r10 optimization round: the data-independent monotone_log_bucket
-    # replaced the percentile_approx edges job over the checkpointed
-    # frame — one fewer scan + driver round-trip per rank map.  The
-    # checkpoint that remains is a cost optimization (two bounded jobs
-    # read the distinct frame), not a correctness freeze.
-    from kafka_connect_morphlines_spark.functions.orderstats import (
-        monotone_log_bucket,
-    )
-    from pyspark.sql.types import NumericType
-
-    cnt = cnt.localCheckpoint()
-    if not isinstance(cnt.schema["_v"].dataType, NumericType):
-        # the window orders _v natively: cast-based bucketing is only
-        # order-consistent for numeric keys — degrade to one bucket
-        # (the old percentile_approx-raises fallback)
-        bkt = F.when(F.col("_v").isNull(), F.lit(-1)).otherwise(F.lit(0))
-    else:
-        # NULL -> a rail below every finite bucket (NULLS FIRST) via an
-        # EXPLICIT isNull branch; NaN takes the helper's top rail (NaN
-        # sorts LAST in Spark's ordering)
-        bkt = F.when(F.col("_v").isNull(), F.lit(-(1 << 30))).otherwise(
-            F.coalesce(
-                monotone_log_bucket(F.col("_v").cast("double"), 256),
-                F.lit(1 << 30),
-            )
-        )
-    bucketed = cnt.withColumn("_gb", bkt.cast("int"))
-    btot = bucketed.groupBy("_gb").agg(F.sum("_c").alias("_t")).collect()
-    acc = 0
-    off_rows = []
-    for r in sorted(btot, key=lambda r: r["_gb"]):  # bucket order IS value order
-        off_rows.append((int(r["_gb"]), acc))
-        acc += int(r["_t"])
-    off_df = cnt.sparkSession.createDataFrame(
-        off_rows or [(0, 0)], "_gb int, _goff long"
-    )
-    w = Window.partitionBy("_gb").orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    local = bucketed.join(F.broadcast(off_df), "_gb", "left").withColumn(
-        "_before",
-        F.coalesce(F.col("_goff"), F.lit(0))
-        + F.coalesce(F.sum("_c").over(w), F.lit(0)),
-    )
-    return local.select(
+    if n_distinct is None or n_distinct > orderstats.SMALL_ROWS:
+        cnt = cnt.localCheckpoint()  # the bucketed path reads it twice
+    return orderstats.bucketed_cumsum(
+        cnt, "_v", {"_before": "_c"}, n_rows=n_distinct
+    ).select(
         F.col("_v").alias(col),
         (2 * F.col("_before") + F.col("_c") + 1).alias(out),
     )
@@ -702,10 +615,9 @@ def spearman_rho(df: DataFrame, x: Column, y: Column) -> DataFrame:
     five Pearson moments are exact DECIMAL sums and both engines feed
     identical numbers into the closed form; the only float ops are two
     correctly-rounded casts, two IEEE sqrts and one divide (the
-    acf_daily_revenue argument).  Scale (r09/r10): the rank maps are
-    built by the DISTRIBUTED _rank2 (width-bucketed cumulative counts +
-    driver prefix offsets), so continuous metrics with ~n distinct values no
-    longer imply a single-partition sort; the maps join back by value
+    acf_daily_revenue argument).  Scale: the rank maps are built by
+    _rank2 on orderstats.bucketed_cumsum, so continuous metrics with ~n
+    distinct values do not imply a single-partition sort; the maps join back by value
     WITHOUT a broadcast hint — for quantized metrics AQE broadcasts the
     small map at runtime, for continuous ones it picks a shuffle join
     instead of shipping an O(n) table to every executor."""

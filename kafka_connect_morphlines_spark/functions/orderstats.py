@@ -1,45 +1,54 @@
 """Distributed EXACT order statistics.
 
-Spark's built-ins offer approx_percentile (sketch, not exact) and
-percentile (exact but interpolated doubles, single-partition per group);
-neither gives an engine-portable exact weighted quantile.  This module
-computes exact weighted quantiles with a distributed-ranking discipline
-related to evalmetrics._rank2 (r09), reworked in r10 to be
-DETERMINISTIC BY CONSTRUCTION: instead of range-repartitioning and
-trusting spark_partition_id ordering (the r09 design, the suspect
-surface behind the one CORRECTNESS_r09 hash mismatch), values are
-bucketed by EXPLICIT boundary literals computed once on the driver.
-Bucket ids are then a pure function of the data value — independent of
-partitioning, task scheduling, AQE coalescing, and checkpoint block
-lifetime — and the final answer is provably identical for ANY choice of
-boundaries (they only load-balance), so no freeze/checkpoint of runtime
-state is required at all.
+Spark's built-ins offer approx_percentile (a sketch, not exact) and
+percentile (exact, but one per-group value->count buffer on one task);
+neither gives an engine-portable exact weighted quantile.
 
-Definition (lower weighted quantile, exact rational threshold): for
-weights w_v summed per distinct value v within a group, total W, and a
-rational quantile num/den, the result is the smallest v with
+Every exact order statistic here except the iterative selection of
+``global_rank_pick`` — running sums (``bucketed_cumsum``), global row
+indexes (``with_global_index``), weighted and interpolated per-group
+quantiles — runs on one bucketed-prefix mechanism:
+
+1. ``_bucket_id`` maps each value to an order-preserving bucket id, a
+   pure codegen function of the value (``monotone_log_bucket``);
+2. one bounded aggregate collects the per-bucket totals, the driver
+   prefix-sums them into exact offsets, and a broadcast local table
+   carries the offsets back (``_bucket_offsets``; grouped and restricted
+   to the buckets that cover a target: ``_covering_prefix``);
+3. a window partitioned by bucket finishes the order inside each bucket.
+
+Invariant: buckets only balance load.  The driver offsets make every
+result independent of the bucketing — any monotone bucket map, a single
+bucket included, gives the same exact numbers — and bucket ids do not
+depend on partitioning, scheduling or block lifetime (pinned by the
+path-parity tests).
+
+Weighted quantiles are LOWER quantiles with an exact rational threshold:
+for weights w_v summed per distinct value v within a group, total W, and
+a rational quantile num/den, the result is the smallest v with
 
     den * cum(v) >= num * W        (cum = inclusive cumulative weight)
 
 All comparisons are products of exact DECIMAL integers — no division, no
 interpolation — so Spark and DuckDB agree bit-for-bit and the value
-itself is an actual data value (the statistically meaningful choice for
-skewed money-like columns, and the only convention that needs no float
-contract at all).
+itself is an actual data value.
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import math
+import operator
+from fractions import Fraction
+from functools import reduce
 
-from decimal import Decimal
-
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import NumericType
 
 __all__ = [
     "weighted_quantiles_by_group",
-    "weighted_quantile_by_group",
     "global_rank_pick",
     "with_global_index",
     "interpolated_quantiles_by_group",
@@ -48,19 +57,11 @@ __all__ = [
 ]
 
 # ---------------------------------------------------------------------------
-# Deterministic order-preserving bucketing (r10 optimization round).
+# Order-preserving bucket map.
 #
-# Every distributed order-stat primitive here needs a bucket id that is a
-# monotone function of the value, purely to LOAD-BALANCE the within-bucket
-# ordered pass (offsets make the answer bucketing-invariant — pinned by the
-# path-parity tests).  The original r10 design derived [p1, p99] edges from
-# a percentile_approx job per call — one extra full scan of the input plus a
-# driver round-trip, at EVERY scale (guide §1.2: remove passes before tuning
-# anything else).  This helper replaces those edges with a DATA-INDEPENDENT
-# map: `floor(log(|v|) * S/ln 2)` slices each power-of-two octave of the
-# double range into S slots, with rails for sign/zero/NaN/±inf, so bucket id
-# is a pure codegen function of the value — no edges job, no sample, no
-# driver literal baked from data.
+# ``floor(log(|v|) * S/ln 2)`` slices each power-of-two octave of the
+# double range into S slots, with rails for sign/zero/NaN/±inf: no edges
+# job, no sample, no driver literal baked from data.
 #
 # Monotonicity: within a sign region the chain  v -> |v| -> log -> *K ->
 # floor  is monotone as COMPUTED: StrictMath/Math.log is monotone (fdlibm),
@@ -69,12 +70,10 @@ __all__ = [
 # every octave boundary of the double range (subnormals included, with
 # nextafter neighbors) plus ~60k random nextafter pairs.
 #
-# Balance: S slots per octave means data spanning k octaves spreads over
-# ~k*S buckets (uniform-[a,2a) data fills all S slots of one octave).  The
-# worst-case bucket-id range is +/- ~5*OFF (a few hundred thousand), so the
-# per-bucket collects stay bounded: at most (octaves spanned) * S non-empty
-# rows — ~2100*S for data spanning the whole double range, a few MB on the
-# driver in the absolute worst case, dozens of rows for real metric data.
+# Balance: data spanning k octaves spreads over ~k*S buckets.  The
+# bucket-id range is +/- ~5*OFF, so the per-bucket collects stay bounded:
+# at most (octaves spanned) * S non-empty rows — ~2100*S for data spanning
+# the whole double range, dozens of rows for real metric data.
 # ---------------------------------------------------------------------------
 
 
@@ -83,8 +82,7 @@ def monotone_log_bucket(v: Column, slots_per_octave: int = 64) -> Column:
     DOUBLE column: smaller value -> smaller (or equal) bucket, computed
     entirely in codegen (no edges job, no sampled literals).
 
-    NULL input yields NULL — callers decide where NULLs sort (every call
-    site wraps this in an explicit isNull branch).  NaN gets the top
+    NULL input yields NULL — ``_bucket_id`` puts NULLs on their own rail.  NaN gets the top
     bucket (Spark sorts NaN last), ±inf get rails beyond every finite
     bucket, zero (either sign) gets bucket 0.
     """
@@ -101,6 +99,115 @@ def monotone_log_bucket(v: Column, slots_per_octave: int = 64) -> Column:
         .when(v > F.lit(0.0), F.lit(off) + pos)
         .otherwise(F.lit(-off) - pos)
     ).cast("int")
+
+
+def _bucket_id(df: DataFrame, col: str, slots: int) -> Column:
+    """The bucket id of ``df[col]`` for every bucketed path: the
+    ``monotone_log_bucket`` of the value, NULL on an explicit rail below
+    every bucket (NULLS FIRST — a NULL must not fall through to the top
+    bucket), NaN on the top rail (Spark sorts NaN last).  The windows
+    order ``col`` in its native type, which a cast to double need not
+    preserve, so a non-numeric type — and ``slots < 3`` — takes one
+    bucket beside the NULL rail."""
+    v = F.col(col)
+    if slots < 3 or not isinstance(df.schema[col].dataType, NumericType):
+        return F.when(v.isNull(), F.lit(-1)).otherwise(F.lit(0))
+    # the coalesce never fires, but it proves the id non-null: without it
+    # the optimizer infers an isnotnull filter on the join key that
+    # evaluates the whole bucket expression a second time per row
+    return F.when(v.isNull(), F.lit(-(1 << 30))).otherwise(
+        F.coalesce(monotone_log_bucket(v.cast("double"), slots), F.lit(1 << 30))
+    )
+
+
+def _driver_table(spark: SparkSession, schema: pa.Schema, rows: list[dict]) -> DataFrame:
+    """Driver-computed rows as a local relation: built from an Arrow
+    table, Spark plans it as a ``LocalTableScan``, so its broadcast runs
+    no Python task (a Python list would become a Python RDD)."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+
+
+def _bucket_offsets(
+    df: DataFrame, order_col: str, totals: dict[str, Column], slots: int
+) -> tuple[DataFrame, dict[str, int]]:
+    """``df`` with its bucket id ``_obkt`` and, per ``name -> agg`` of
+    ``totals``, a long column ``name``: ``agg`` summed over every row of
+    a LOWER bucket.  The per-bucket totals are one bounded collect (a
+    row per non-empty bucket), prefix-summed on the driver.  Also returns
+    each ``agg``'s grand total."""
+    bucketed = df.withColumn("_obkt", _bucket_id(df, order_col, slots))
+    rows = (
+        bucketed.groupBy("_obkt")
+        .agg(*[a.cast("long").alias(n) for n, a in totals.items()])
+        .collect()
+    )
+    acc = dict.fromkeys(totals, 0)
+    offsets = []
+    for r in sorted(rows, key=lambda r: r["_obkt"]):  # bucket order IS value order
+        offsets.append({"_obkt": r["_obkt"], **acc})
+        for n in totals:
+            acc[n] += r[n] or 0
+    schema = pa.schema([("_obkt", pa.int32()), *[(n, pa.int64()) for n in totals]])
+    table = _driver_table(df.sparkSession, schema, offsets)
+    return bucketed.join(F.broadcast(table), "_obkt"), acc
+
+
+def _covering_prefix(raw: DataFrame, slots: int, targets, *, weighted: bool) -> DataFrame:
+    """The grouped bucketed prefix behind the per-group quantiles.
+
+    ``raw`` has a string group ``_g``, a value ``_v`` and, if
+    ``weighted``, a DECIMAL weight ``_w`` (else every row weighs 1).  One
+    bounded collect gives the per-(group, bucket) weight totals.  On the
+    driver, each target of ``targets(group_total)`` picks its COVERING
+    bucket — the first whose inclusive cumulative weight reaches the
+    target — by exact comparison.  Only those buckets are read again
+    (broadcast join on the driver table), collapsed to distinct values
+    and windowed per (group, bucket).  Returns, per distinct value of a
+    covering bucket: ``_g``, ``_v``, the group total ``_n``, and the
+    exact weight of the group's values before ``_v`` (``_before``) and
+    up to it (``_cum``).  ``raw`` is read twice: cache it upstream if
+    scans are expensive."""
+    bucketed = raw.withColumn("_obkt", _bucket_id(raw, "_v", slots))
+    if weighted:
+        wsum, wtype, ztype = F.sum("_w"), pa.decimal128(38, 6), "decimal(38,6)"
+        guard = [F.sum(F.when(F.col("_w") <= 0, 1).otherwise(0)).alias("_bad")]
+    else:
+        wsum, wtype, ztype, guard = F.count(F.lit(1)), pa.int64(), "long", []
+    totals = bucketed.groupBy("_g", "_obkt").agg(wsum.alias("_t"), *guard).collect()
+    if weighted and any(r["_bad"] for r in totals):
+        # a nonpositive weight makes the cumulative non-monotonic, so the
+        # crossing filter would match 0 or 2+ rows and drop the group
+        raise ValueError(
+            "weighted_quantiles_by_group: nonpositive weight — weights "
+            "must be positive for the crossing pick to be unique"
+        )
+    by_group: dict = {}
+    for r in sorted(totals, key=lambda r: r["_obkt"]):
+        by_group.setdefault(r["_g"], []).append((r["_obkt"], r["_t"]))
+    covering = []
+    for g, buckets in by_group.items():
+        ends = list(itertools.accumulate(t for _, t in buckets))
+        for i in sorted({bisect.bisect_left(ends, t) for t in targets(ends[-1])}):
+            b, t = buckets[i]
+            covering.append({"_g": g, "_obkt": b, "_off": ends[i] - t, "_n": ends[-1]})
+    schema = pa.schema(
+        [("_g", pa.string()), ("_obkt", pa.int32()), ("_off", wtype), ("_n", wtype)]
+    )
+    table = _driver_table(raw.sparkSession, schema, covering)
+    win = Window.partitionBy("_g", "_obkt").orderBy("_v").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    return (
+        bucketed.join(F.broadcast(table.drop("_n")), ["_g", "_obkt"])
+        .groupBy("_g", "_obkt", "_off", "_v")
+        .agg(wsum.alias("_wv"))
+        .withColumn(
+            "_before",
+            F.col("_off") + F.coalesce(F.sum("_wv").over(win), F.lit(0).cast(ztype)),
+        )
+        .withColumn("_cum", F.col("_before") + F.col("_wv"))
+        .join(F.broadcast(table.select("_g", "_obkt", "_n")), ["_g", "_obkt"])
+    )
 
 
 def global_rank_pick(
@@ -384,50 +491,23 @@ def weighted_quantiles_by_group(
 
     ``quantiles`` maps output column name -> (num, den), e.g.
     ``{"median": (1, 2), "p90": (9, 10)}``.  Returns one row per group:
-    (grp, w_total, <name>...).  Group keys are stringified (the bounded
-    driver offset tables round-trip through literal frames); weights must
-    be positive (enforced on the raw rows — a nonpositive weight would
-    make the cumulative non-monotonic and the crossing filter match 0 or
-    2+ rows, silently dropping the group).
+    (grp, w_total, <name>...).  Group keys are stringified (they
+    round-trip through the driver table); weights must be positive
+    (checked on the raw rows).
 
-    Scale shape (late-r10 covering-bucket discipline — NO materialization;
-    the first r10 cut checkpointed the full distinct (group, value) frame
-    and windowed all of it, and the 20M-row smoke showed that checkpoint
-    dominating under storage-memory pressure):
-    1. bucket id = one codegen ``monotone_log_bucket`` expression — a
-       DATA-INDEPENDENT order-preserving map (r10 optimization round:
-       the earlier percentile_approx-over-1%-sample edges job cost one
-       extra full scan + driver round-trip per call; edges affect ONLY
-       load balance — the cumulative weights, and hence the crossing
-       rows, are identical for any bucketing).  Still not a
-       per-boundary literal when-chain: a deep nested expression is
-       fine to filter on but pathological to carry through window/join
-       codegen — measured 17s to project a 63-term chain column vs
-       0.4s for a single codegen builtin;
-    3. ONE corpus pass computes per-(group, bucket) weight totals
-       straight off the RAW rows (map-side combined, no distinct) and
-       folds the weight-positivity guard into the same aggregate —
-       bounded collect: at most #groups * num_buckets rows;
-    4. offsets, W totals, and each quantile's COVERING bucket — the one
-       bucket whose cumulative crosses num*W/den, <= |quantiles| per
-       group — are found on the DRIVER with exact Decimal comparisons;
-    5. only the covering buckets are filtered from the raw rows
-       (broadcast join on the bounded bucket table), collapsed to
-       distinct values with exact DECIMAL weight sums, windowed
-       PARTITIONED BY (group, bucket) — no data-sized single partition,
-       no dependence on physical partition ids — and each crossing row
-       is picked by two exact DECIMAL-product comparisons
-       (den*cum >= num*W > den*cum_before) in ONE conditional
-       aggregation.
-    ``df`` is scanned twice (totals, covering slice) — cache it
-    upstream if scans are expensive.
+    Shape: ``_covering_prefix`` — per-(group, bucket) weight totals off
+    the RAW rows (map-side combined, no distinct), the <= |quantiles|
+    covering buckets per group found on the driver with exact rational
+    comparisons, and only those windowed — no materialization, no
+    data-sized single partition.  Each crossing row is picked by two
+    exact DECIMAL-product comparisons (den*cum >= num*W > den*cum_before)
+    in ONE conditional aggregation.  ``df`` is scanned twice.
     """
     if not quantiles:
         raise ValueError("quantiles must be a non-empty {name: (num, den)} dict")
     for name, (q_num, q_den) in quantiles.items():
         if q_den <= 0 or q_num <= 0 or q_num > q_den:
             raise ValueError(f"quantile {name!r}: need 0 < num <= den, got {q_num}/{q_den}")
-    dec = "decimal(38,6)"
     # (18,6) keeps the per-row weight long-backed through the corpus-
     # sized aggregates (a wider cast materializes a JVM BigDecimal per
     # row); Spark widens SUM types automatically, so totals stay exact
@@ -436,93 +516,12 @@ def weighted_quantiles_by_group(
         value.alias("_v"),
         weight.cast("decimal(18,6)").alias("_w"),
     )
-    # r10 optimization round: bucket ids come from the data-independent
-    # monotone_log_bucket (order-preserving pure codegen) instead of
-    # percentile_approx edges over a 1% sample — one fewer full scan and
-    # one fewer driver round-trip per call at every scale; the answer is
-    # bucketing-invariant (path-parity pinned), edges only load-balanced.
-    # NULL _v -> a rail below every finite bucket (NULLS FIRST).  The
-    # window below orders _v in its NATIVE type, so the cast("double")
-    # bucketing is only order-consistent for numeric value types; a
-    # non-numeric (but orderable) type falls back to one bucket per
-    # group — the same single-window degradation the old
-    # percentile_approx-raises path had.
-    if num_buckets < 3 or not isinstance(raw.schema["_v"].dataType, NumericType):
-        bkt = F.when(F.col("_v").isNull(), F.lit(-1)).otherwise(F.lit(0))
-    else:
-        bkt = F.when(F.col("_v").isNull(), F.lit(-(1 << 30))).otherwise(
-            F.coalesce(
-                monotone_log_bucket(F.col("_v").cast("double"), num_buckets),
-                F.lit(1 << 30),
-            )
-        )
-    bucketed = raw.withColumn("_b", bkt.cast("int"))
-    # ONE corpus pass: per-(group, bucket) weight totals + the positivity
-    # guard, as a bounded collect (<= #groups * num_buckets rows)
-    totals = (
-        bucketed.groupBy("_g", "_b")
-        .agg(
-            F.sum("_w").alias("_t"),
-            F.sum(F.when(F.col("_w") <= 0, 1).otherwise(0)).alias("_bad"),
-        )
-        .collect()
+    local = _covering_prefix(
+        raw,
+        num_buckets,
+        lambda total: [Fraction(total) * n / d for n, d in quantiles.values()],
+        weighted=True,
     )
-    if any(r["_bad"] for r in totals):
-        raise ValueError(
-            "weighted_quantiles_by_group: nonpositive weight — weights "
-            "must be positive for the crossing pick to be unique"
-        )
-    # per-group prefix offsets by ascending bucket id (bucket order IS
-    # value order within each group by construction)
-    by_group: dict = {}
-    for r in sorted(totals, key=lambda r: (str(r["_g"]), r["_b"])):
-        key = r["_g"]
-        acc, rows = by_group.setdefault(key, [Decimal(0), {}])
-        rows[r["_b"]] = acc
-        by_group[key][0] = acc + Decimal(str(r["_t"]))
-    w_total = {k: v[0] for k, v in by_group.items()}
-    # covering bucket per (group, quantile): the first bucket whose
-    # cumulative weight reaches num*W/den — exact Decimal comparisons,
-    # <= num_buckets steps per quantile on bounded driver state
-    cov_rows = []
-    for g, (tot, offs) in by_group.items():
-        bs = sorted(offs)
-        ends = [offs[b] for b in bs[1:]] + [tot]
-        covered = set()
-        for q_num, q_den in quantiles.values():
-            target = q_num * tot
-            for i, end in enumerate(ends):
-                if q_den * end >= target:
-                    covered.add(i)
-                    break
-        cov_rows.extend((g, bs[i], str(offs[bs[i]])) for i in sorted(covered))
-    tot_rows = [(k, str(v)) for k, v in w_total.items()]
-    spark = df.sparkSession
-    cov_df = spark.createDataFrame(
-        cov_rows or [("", -2, "0")], "_g string, _b int, _off string"
-    ).select("_g", "_b", F.col("_off").cast(dec).alias("_off"))
-    tot_df = spark.createDataFrame(
-        tot_rows or [("", "0")], "_g string, _wt string"
-    ).select("_g", F.col("_wt").cast(dec).alias("_wt"))
-    w_local = Window.partitionBy("_g", "_b").orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    joined = (
-        bucketed.join(F.broadcast(cov_df), ["_g", "_b"])
-        .groupBy("_g", "_b", "_off", "_v")
-        .agg(F.sum("_w").alias("_wv"))
-        .withColumn(
-            "_before_local",
-            F.coalesce(F.sum("_wv").over(w_local), F.lit(0).cast(dec)),
-        )
-        .join(F.broadcast(tot_df), "_g")
-    )
-    cum_before = F.col("_off") + F.col("_before_local")
-    cum = cum_before + F.col("_wv")
-    # ALL quantiles from ONE pass over the windowed frame: each crossing
-    # condition matches exactly one row per group (weights positive), so
-    # a conditional max picks it — no per-quantile plan branch re-running
-    # the window, no k-way join of crossing frames
     conds = {}
     for name, (q_num, q_den) in quantiles.items():
         # (4,0) x (38,6) stays within Spark's 38-precision cap (no silent
@@ -530,40 +529,20 @@ def weighted_quantiles_by_group(
         # (38,6) x (38,6) multiply would be precision-capped and rounded
         num = F.lit(q_num).cast("decimal(4,0)")
         den = F.lit(q_den).cast("decimal(4,0)")
-        conds[name] = (den * cum >= num * F.col("_wt")) & (
-            den * cum_before < num * F.col("_wt")
+        conds[name] = (den * F.col("_cum") >= num * F.col("_n")) & (
+            den * F.col("_before") < num * F.col("_n")
         )
-    any_cond = None
-    for c in conds.values():
-        any_cond = c if any_cond is None else (any_cond | c)
-    out = (
-        joined.filter(any_cond)
+    # each crossing condition matches exactly one row per group (weights
+    # positive), so a conditional max picks it
+    return (
+        local.filter(reduce(operator.or_, conds.values()))
         .groupBy("_g")
         .agg(
-            F.max("_wt").alias("w_total"),
-            *[
-                F.max(F.when(c, F.col("_v"))).alias(name)
-                for name, c in conds.items()
-            ],
+            F.max("_n").alias("w_total"),
+            *[F.max(F.when(c, F.col("_v"))).alias(name) for name, c in conds.items()],
         )
-        .select(F.col("_g").alias("grp"), "w_total", *conds.keys())
-    )
-    return out.orderBy("grp")
-
-
-def weighted_quantile_by_group(
-    df: DataFrame,
-    group: Column,
-    value: Column,
-    weight: Column,
-    q_num: int = 1,
-    q_den: int = 2,
-) -> DataFrame:
-    """Single-quantile convenience wrapper (default: weighted median).
-    Returns (grp, w_total, quantile_value); see
-    weighted_quantiles_by_group for semantics and scale shape."""
-    return weighted_quantiles_by_group(
-        df, group, value, weight, {"quantile_value": (q_num, q_den)}
+        .select(F.col("_g").alias("grp"), "w_total", *conds)
+        .orderBy("grp")
     )
 
 
@@ -575,63 +554,27 @@ def with_global_index(
     num_buckets: int = 256,
 ):
     """Attach an exact GLOBAL 1-based dense row index ordered by
-    ``(value_col, *tiebreaks)`` — distributedly: one codegen
-    ``monotone_log_bucket`` expression buckets the rows (a pure
-    DATA-INDEPENDENT order-preserving function of the value — no edges
-    job at all since the r10 optimization round), per-bucket counts are
-    collected (bounded by the octave span) and prefix-summed on the
-    driver, and the
-    within-bucket ``row_number`` runs partitioned by bucket — no
-    data-sized single-partition sort anywhere.  The classic replacement
-    for ``row_number().over(Window.orderBy(...))`` when EVERY row needs
-    its rank (Gini / Lorenz / trapezoid-AUC shapes), not just a quantile
-    crossing (use global_rank_pick for that).
+    ``(value_col, *tiebreaks)`` — distributedly: ``_bucket_offsets``
+    gives each row its bucket's offset, and a ``row_number`` partitioned
+    by bucket finishes the order — no data-sized single-partition sort.
+    The replacement for ``row_number().over(Window.orderBy(...))`` when
+    EVERY row needs its rank (Gini / Lorenz / trapezoid-AUC shapes), not
+    just a quantile crossing (use global_rank_pick for that).
 
     Ties on ``value_col`` never straddle buckets (equal values bucket
     equally), so compound ordering is exact within one bucket window.
     Returns ``(df_with_index, n_total)`` — ``n_total`` is the exact row
-    count (a free by-product of the offsets collect).  ``df`` is read
-    twice (totals + the indexed pass): checkpoint/cache it upstream.
-    ``value_col`` must be non-null numeric; NULL tiebreaks follow Spark's
-    NULLS FIRST.
+    count (a by-product of the offsets collect).  ``df`` is read twice:
+    checkpoint/cache it upstream.  NULLs follow Spark's NULLS FIRST.
     """
-    vc = F.col(value_col)
-    # r10 optimization round: data-independent monotone_log_bucket
-    # replaces the percentile_approx edges job (which here scanned the
-    # FULL frame, not even a sample) — one fewer scan + driver
-    # round-trip; ranks are bucketing-invariant (offsets absorb any
-    # monotone bucketing).  NaN takes the helper's top rail (NaN sorts
-    # last); value_col is non-null numeric by contract, but a
-    # non-numeric orderable type still degrades safely to one bucket
-    # (the window orders value_col natively, so a cast-based bucket
-    # would not be order-consistent for it).
-    if num_buckets < 3 or not isinstance(df.schema[value_col].dataType, NumericType):
-        bkt = F.lit(0)
-    else:
-        bkt = F.coalesce(
-            monotone_log_bucket(vc.cast("double"), num_buckets), F.lit(1 << 30)
-        )
-    bucketed = df.withColumn("_gb", bkt.cast("int"))
-    totals = bucketed.groupBy("_gb").agg(F.count(F.lit(1)).alias("_t")).collect()
-    off: dict[int, int] = {}
-    acc = 0
-    for r in sorted(totals, key=lambda r: r["_gb"]):
-        off[r["_gb"]] = acc
-        acc += int(r["_t"])
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        list(off.items()) or [(0, 0)], "_gb int, _goff long"
+    bucketed, totals = _bucket_offsets(
+        df, value_col, {"_ooff": F.count(F.lit(1))}, num_buckets
     )
-    w = Window.partitionBy("_gb").orderBy(value_col, *(tiebreaks or []))
-    out = (
-        bucketed.join(F.broadcast(off_df), "_gb", "left")
-        .withColumn(
-            index_col,
-            F.coalesce(F.col("_goff"), F.lit(0)) + F.row_number().over(w).cast("long"),
-        )
-        .drop("_gb", "_goff")
-    )
-    return out, acc
+    w = Window.partitionBy("_obkt").orderBy(value_col, *(tiebreaks or []))
+    out = bucketed.withColumn(
+        index_col, F.col("_ooff") + F.row_number().over(w).cast("long")
+    ).drop("_obkt", "_ooff")
+    return out, totals["_ooff"]
 
 
 def interpolated_quantiles_by_group(
@@ -647,41 +590,25 @@ def interpolated_quantiles_by_group(
     ``percentile()`` buffers a per-group value->count map inside one
     aggregation buffer (OpenHashMap in Percentile.scala), so a group with
     unbounded value cardinality concentrates on one task and OOMs at
-    corpus scale.  This runs the r10 deterministic-bucket discipline
-    with NO materialization at all (late-r10 rework — the first cut
-    checkpointed the full distinct (group, value) frame, and the 40M-row
-    smoke showed that checkpoint dominating and going superlinear under
-    storage-memory pressure): bucket ids come from the data-independent
-    ``monotone_log_bucket`` codegen map (r10 optimization round — the
-    earlier sampled percentile_approx edges job cost one extra scan +
-    driver round-trip; buckets only load-balance, results are
-    bucketing-invariant by construction), per-(group, bucket)
-    totals aggregate the RAW rows (map-side combined, no distinct),
-    offsets and target ranks are computed on the driver, and only the
-    COVERING buckets — the <= 2 * len(probs) buckets per group that can
-    contain a requested rank — are filtered (broadcast semi-style join on
-    the bounded offsets table), deduplicated, windowed, and fed to ONE
-    conditional aggregation that picks the two neighbor values per
-    quantile.  ``df`` is scanned twice (totals, covering slice) — cache
-    it upstream if scans are expensive; no task ever holds more than its
-    partition slice of one bucket.
+    corpus scale.  This runs ``_covering_prefix`` instead: per-(group,
+    bucket) counts off the RAW rows, the <= 2 * len(probs) covering
+    buckets per group that hold a requested rank, and ONE conditional
+    aggregation that picks the two neighbor values per quantile.  ``df``
+    is scanned twice; no task holds more than its slice of one bucket.
 
     Interpolation mirrors Percentile.getPercentile exactly: for p over n
     values, ``pos = p * (n - 1)`` (double), ``lower = floor(pos)``,
     ``higher = ceil(pos)``, result = value at lower when they coincide,
-    else ``(higher - pos) * v_lo + (pos - lower) * v_hi`` — the weights
-    are computed on the driver with the same IEEE ops the JVM uses, and
-    the final expression repeats the two-mult-one-add shape, so replacing
-    a ``percentile()`` call leaves certified hashes unchanged.
+    else ``(higher - pos) * v_lo + (pos - lower) * v_hi`` — the same IEEE
+    ops in the same order (on the driver for the covering ranks, in the
+    plan for the picks), so replacing a ``percentile()`` call leaves
+    certified hashes unchanged.
 
     ``probs`` maps output column name -> p in [0, 1].  Values are cast to
     double (like ``percentile()``'s result); NULL values are ignored
     (same as the built-in).  Returns (grp, n, <name>...), one row per
     non-empty group.
     """
-    import bisect
-    import math
-
     if not probs:
         raise ValueError("probs must be a non-empty {name: p} dict")
     for name, p in probs.items():
@@ -690,103 +617,41 @@ def interpolated_quantiles_by_group(
     raw = df.select(
         group.cast("string").alias("_g"), value.cast("double").alias("_v")
     ).filter(F.col("_v").isNotNull())
-    # Buckets load-balance only — any monotone bucketing yields the same
-    # answer — so the r10 optimization round swapped the sampled
-    # percentile_approx edges job for the data-independent
-    # monotone_log_bucket: one fewer scan + driver round-trip per call.
-    # NULLs are filtered above; NaN takes the helper's top rail (the
-    # same NaN-last ordering percentile() uses).
-    if num_buckets < 3:
-        bkt = F.lit(0)
-    else:
-        bkt = F.coalesce(
-            monotone_log_bucket(F.col("_v"), num_buckets), F.lit(1 << 30)
-        )
-    bucketed = raw.withColumn("_b", bkt.cast("int"))
-    totals = bucketed.groupBy("_g", "_b").agg(F.count(F.lit(1)).alias("_t")).collect()
-    by_group: dict = {}
-    for r in sorted(totals, key=lambda r: (str(r["_g"]), r["_b"])):
-        acc, offs = by_group.setdefault(r["_g"], [0, {}])
-        offs[r["_b"]] = acc
-        by_group[r["_g"]][0] = acc + int(r["_t"])
-    spark = df.sparkSession
-    names = list(probs)
-    ks_rows = []
-    cov_rows = []
-    for g, (n_g, offs) in by_group.items():
-        row = [g, n_g]
-        need = set()
-        for name in names:
-            pos = probs[name] * (n_g - 1)  # same IEEE ops as the JVM
-            lo = math.floor(pos)
-            hi = math.ceil(pos)
-            row += [lo + 1, hi + 1, float(hi) - pos, pos - float(lo)]
-            need.add(lo + 1)
-            need.add(hi + 1)
-        ks_rows.append(tuple(row))
-        # bucket b covers ranks offs[b]+1 .. offs[b]+t[b]; pick, per
-        # needed rank, the last bucket whose offset is below it
-        bs = sorted(offs)
-        offs_list = [offs[b] for b in bs]
-        covered = set()
-        for k in need:
-            covered.add(bisect.bisect_right(offs_list, k - 1) - 1)
-        cov_rows.extend((g, bs[i], offs_list[i]) for i in sorted(covered))
-    ks_schema = "_g string, _n long, " + ", ".join(
-        f"_klo_{i} long, _khi_{i} long, _wl_{i} double, _wh_{i} double"
-        for i in range(len(names))
-    )
-    ks_df = spark.createDataFrame(ks_rows or [tuple([""] + [0] + [0, 0, 0.0, 0.0] * len(names))], ks_schema)
-    cov_df = spark.createDataFrame(
-        cov_rows or [("", -2, 0)], "_g string, _b int, _off long"
-    )
-    w_local = Window.partitionBy("_g", "_b").orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    local = (
-        bucketed.join(F.broadcast(cov_df), ["_g", "_b"])
-        .groupBy("_g", "_b", "_off", "_v")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .withColumn(
-            "_before",
-            F.col("_off") + F.coalesce(F.sum("_c").over(w_local), F.lit(0)).cast("long"),
-        )
-        .withColumn("_cum", F.col("_before") + F.col("_c").cast("long"))
-        .join(F.broadcast(ks_df), "_g")
-    )
-    any_cond = None
-    sel_aggs = [F.max("_n").alias("n")]
-    for i, name in enumerate(names):
-        for side in ("klo", "khi"):
-            k = F.col(f"_{side}_{i}")
+
+    def ranks(n: int) -> set[int]:  # the 1-based neighbor ranks of every p
+        return {
+            k
+            for p in probs.values()
+            for k in (math.floor(p * (n - 1)) + 1, math.ceil(p * (n - 1)) + 1)
+        }
+
+    def pos(p: float, n: Column) -> Column:
+        return F.lit(float(p)) * (n - 1).cast("double")
+
+    local = _covering_prefix(raw, num_buckets, ranks, weighted=False)
+    conds, picks = [], [F.max("_n").alias("n")]
+    for i, p in enumerate(probs.values()):
+        at = pos(p, F.col("_n"))
+        for side, k in (("lo", F.floor(at) + 1), ("hi", F.ceil(at) + 1)):
             c = (F.col("_cum") >= k) & (F.col("_before") < k)
-            any_cond = c if any_cond is None else (any_cond | c)
-            sel_aggs.append(
-                F.max(F.when(c, F.col("_v"))).alias(f"_v{side[1:]}_{i}")
-            )
-        sel_aggs += [
-            F.max(f"_klo_{i}").alias(f"_klo_{i}"),
-            F.max(f"_khi_{i}").alias(f"_khi_{i}"),
-            F.max(f"_wl_{i}").alias(f"_wl_{i}"),
-            F.max(f"_wh_{i}").alias(f"_wh_{i}"),
-        ]
-    picked = local.filter(any_cond).groupBy("_g").agg(*sel_aggs)
+            conds.append(c)
+            picks.append(F.max(F.when(c, F.col("_v"))).alias(f"_v{side}_{i}"))
+    picked = local.filter(reduce(operator.or_, conds)).groupBy("_g").agg(*picks)
     out_cols = [F.col("_g").alias("grp"), F.col("n")]
-    for i, name in enumerate(names):
+    for i, (name, p) in enumerate(probs.items()):
+        at = pos(p, F.col("n"))
+        lo, hi = F.floor(at), F.ceil(at)
+        vlo, vhi = F.col(f"_vlo_{i}"), F.col(f"_vhi_{i}")
         out_cols.append(
-            F.when(F.col(f"_klo_{i}") == F.col(f"_khi_{i}"), F.col(f"_vlo_{i}"))
-            .otherwise(
-                F.col(f"_wl_{i}") * F.col(f"_vlo_{i}")
-                + F.col(f"_wh_{i}") * F.col(f"_vhi_{i}")
-            )
+            F.when(lo == hi, vlo)
+            .otherwise((hi.cast("double") - at) * vlo + (at - lo.cast("double")) * vhi)
             .alias(name)
         )
     return picked.select(*out_cols).orderBy("grp")
 
 
-# below this many distinct rows the ordered frame trivially fits one
-# partition and the bucketed machinery (bounds + totals jobs) is pure
-# overhead — the evalmetrics._RANK2_SMALL_ROWS contract
+# below this many rows the ordered frame fits one partition and the
+# bucketed path (a totals job + a broadcast offsets join) is pure overhead
 SMALL_ROWS = 5_000_000
 
 
@@ -801,26 +666,19 @@ def bucketed_cumsum(
     """EXCLUSIVE running totals of integer columns over the global
     ascending ``order_col`` ordering (NULLS FIRST), appended as new
     columns — the shared primitive behind every "cumulative count over a
-    distinct-value frame" shape (rank-AUC, Mann-Whitney ranks, KS ECDFs,
-    Zipf ranks).  ``sums`` maps output column name -> existing
-    integer-typed column; each output is the exact sum of that column
-    over all STRICTLY PRECEDING rows (0 for the first row).
+    distinct-value frame" shape (rank-AUC, Mann-Whitney and Spearman
+    ranks, Kruskal-Wallis, KS ECDFs, Zipf ranks).  ``sums`` maps output
+    column name -> existing integer-typed column; each output is the
+    exact sum of that column over all STRICTLY PRECEDING rows (0 for the
+    first row).
 
-    Adaptive scale shape (the evalmetrics._rank2 discipline): when
-    ``n_rows`` (any upper bound on cnt's row count) is at or below
+    When ``n_rows`` (any upper bound on cnt's row count) is at or below
     SMALL_ROWS, one plain ordered window runs — the frame fits a single
-    partition and that is the cheapest correct plan.  Above it, the r10
-    deterministic-bucket path: one codegen ``monotone_log_bucket``
-    expression over ``order_col`` (bucket id = pure DATA-INDEPENDENT
-    function of the value — no edges job at all since the r10
-    optimization round; independent of partitioning, scheduling, and
-    checkpoint block lifetime; buckets only load-balance),
-    per-bucket totals of every requested column collected (bounded by
-    the octave span), prefix offsets per column computed on the driver,
-    and the within-bucket exclusive window runs PARTITIONED BY bucket —
-    all cores busy, no data-sized single-partition sort.  Both paths
-    emit identical exact integers (CI-pinned), so certified consumers
-    hash the same either way.
+    partition and that is the cheapest correct plan.  Otherwise the
+    bucketed path: ``_bucket_offsets`` adds each bucket's offsets, and
+    the exclusive window runs PARTITIONED BY bucket — all cores busy, no
+    data-sized single-partition sort.  Both paths emit identical exact
+    integers (CI-pinned), so certified consumers hash the same either way.
 
     ``tiebreaks`` orders rows WITHIN equal ``order_col`` values (needed
     when callers require a total order, e.g. row numbering); bucketing
@@ -829,64 +687,21 @@ def bucketed_cumsum(
     for ``n_rows`` (the count is then ~free and the frame is not
     recomputed per downstream job).
     """
-    tb = [F.col(c) for c in (tiebreaks or [])]
-    order = [F.col(order_col).asc_nulls_first(), *tb]
+    order = [F.col(order_col).asc_nulls_first(), *[F.col(c) for c in tiebreaks or []]]
+    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
     if n_rows is not None and n_rows <= SMALL_ROWS:
-        w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, -1)
         out = cnt
         for name, c in sums.items():
-            out = out.withColumn(
-                name, F.coalesce(F.sum(c).over(w), F.lit(0)).cast("long")
-            )
+            out = out.withColumn(name, F.coalesce(F.sum(c).over(w), F.lit(0)).cast("long"))
         return out
-    # r10 optimization round: the data-independent monotone_log_bucket
-    # replaces the percentile_approx edges job (which scanned the FULL
-    # cnt frame) — one fewer scan + driver round-trip per call; the
-    # running totals are bucketing-invariant (offsets absorb any
-    # monotone bucketing; both paths CI-pinned identical).  The window
-    # below orders by order_col in its NATIVE type, so bucketing via
-    # cast("double") is only order-consistent for numeric inputs — a
-    # non-numeric orderable type falls back to one bucket (the same
-    # degradation the old percentile_approx-raises path had).
-    numeric = isinstance(cnt.schema[order_col].dataType, NumericType)
-    if num_buckets < 3 or not numeric:
-        bkt = F.when(F.col(order_col).isNull(), F.lit(-1)).otherwise(F.lit(0))
-    else:
-        # NULL -> a rail below every finite bucket (sorts first, matching
-        # NULLS FIRST) via an EXPLICIT isNull branch; NaN takes the
-        # helper's top rail (NaN sorts LAST in Spark).
-        bkt = F.when(F.col(order_col).isNull(), F.lit(-(1 << 30))).otherwise(
-            F.coalesce(
-                monotone_log_bucket(
-                    F.col(order_col).cast("double"), num_buckets
-                ),
-                F.lit(1 << 30),
-            )
-        )
-    bucketed = cnt.withColumn("_cs_b", bkt.cast("int"))
-    names = list(sums)
-    totals = (
-        bucketed.groupBy("_cs_b")
-        .agg(*[F.sum(sums[n]).cast("long").alias(f"_t{i}") for i, n in enumerate(names)])
-        .collect()
+    offs = {name: f"_ooff{i}" for i, name in enumerate(sums)}
+    out, _ = _bucket_offsets(
+        cnt, order_col, {offs[name]: F.sum(c) for name, c in sums.items()}, num_buckets
     )
-    accs = [0] * len(names)
-    off_rows = []
-    for r in sorted(totals, key=lambda r: r["_cs_b"]):  # bucket order IS value order
-        off_rows.append((int(r["_cs_b"]), *accs))
-        accs = [a + int(r[f"_t{i}"] or 0) for i, a in enumerate(accs)]
-    off_schema = "_cs_b int, " + ", ".join(f"_off{i} long" for i in range(len(names)))
-    off_df = cnt.sparkSession.createDataFrame(off_rows or [(0, *[0] * len(names))], off_schema)
-    w = Window.partitionBy("_cs_b").orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    out = bucketed.join(F.broadcast(off_df), "_cs_b")
-    for i, name in enumerate(names):
+    w = w.partitionBy("_obkt")
+    for name, c in sums.items():
         out = out.withColumn(
             name,
-            (
-                F.col(f"_off{i}")
-                + F.coalesce(F.sum(sums[name]).over(w), F.lit(0)).cast("long")
-            ).cast("long"),
+            F.col(offs[name]) + F.coalesce(F.sum(c).over(w), F.lit(0)).cast("long"),
         )
-    return out.drop("_cs_b", *[f"_off{i}" for i in range(len(names))])
+    return out.drop("_obkt", *offs.values())

@@ -4893,7 +4893,7 @@ def kruskal_wallis_values(spark, sf_dir):
     """Kruskal-Wallis H across event types (evalmetrics.kruskal_wallis):
     the k-group RANK test completing the stats ladder — mann_whitney
     (2-group ranks) / anova_value_by_type (k-group means) / this (k-group
-    ranks).  Pooled 2x-integer average ranks from the distributed _rank2,
+    ranks).  Pooled 2x-integer average ranks from _rank2_from_counts,
     exact DECIMAL rank sums, tie-corrected; the per-group R2^2/n quotient
     uses the ANOVA r09 quantized-double idiom so both engines sum
     identical DECIMAL(38,6) terms.
@@ -6423,7 +6423,7 @@ def dau_wau_stickiness(spark, sf_dir):
 def revenue_concentration(spark, sf_dir):
     """Revenue concentration: Gini coefficient + top-1% share over
     per-customer revenue.  r10: every customer's exact global rank comes
-    from orderstats.with_global_index (width_bucket + bounded per-bucket
+    from orderstats.with_global_index (bucket ids + driver per-bucket
     offsets + per-bucket row_number) — the r09 customer-count-sized
     single-partition sort is gone; the fact table never sorts and no
     partition ever holds more than ~|customers|/256 rows.  n and the
@@ -8373,9 +8373,9 @@ def spearman_spend_vs_orders(spark, sf_dir):
     AUC idiom) so both engines feed identical DECIMAL moments into the
     closed form.  One groupBy(customer), then distributed global ranking:
     spend sums are essentially unique per customer (~n distinct values),
-    so the rank maps are built by the range-partitioned _rank2 (r09 —
-    no single-partition sort, no O(n) broadcast; AQE picks the join
-    strategy at runtime), one final aggregate."""
+    so the rank maps are built by _rank2 on orderstats.bucketed_cumsum
+    (no single-partition sort beyond SMALL_ROWS, no O(n) broadcast; AQE
+    picks the join strategy at runtime), one final aggregate."""
     from kafka_connect_morphlines_spark.functions import evalmetrics
 
     orders = t(spark, sf_dir, "orders")

@@ -96,6 +96,20 @@ def test_convert_timestamp_bad_pattern_compile_error(spark):
         compile_pipeline([{"convertTimestamp": {"field": "ts", "inputFormats": ["YYYY-ww-uu bogus"], "outputFormat": "unixTimeInMillis"}}])
 
 
+def test_convert_timestamp_pattern_check_runs_no_job(spark):
+    """Compiling a convertTimestamp with a custom pattern validates it
+    on the optimizer, not with a Spark job."""
+    sc = spark.sparkContext
+    group = "convert-timestamp-compile-spy"
+    sc.setJobGroup(group, "compile spy", interruptOnCancel=False)
+    try:
+        compile_pipeline([{"convertTimestamp": {"field": "ts", "inputFormats": ["yyyy.MM.dd HH:mm:ss"], "outputFormat": "yyyy-MM-dd EEE HH:mm"}}])
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
+    assert jobs == [], f"compile ran Spark jobs: {jobs}"
+
+
 def test_fuzzy_join_finds_typos_across_tables(spark):
     from kafka_connect_morphlines_spark.functions import relational
 

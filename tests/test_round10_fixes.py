@@ -128,8 +128,8 @@ def test_weighted_quantiles_non_numeric_values(spark):
 
     rows = [("g", "apple", 1), ("g", "banana", 2), ("g", "cherry", 1)]
     df = spark.createDataFrame(rows, "g string, v string, w int")
-    out = orderstats.weighted_quantile_by_group(
-        df, F.col("g"), F.col("v"), F.col("w")
+    out = orderstats.weighted_quantiles_by_group(
+        df, F.col("g"), F.col("v"), F.col("w"), {"quantile_value": (1, 2)}
     ).collect()
     assert [(r["grp"], r["quantile_value"]) for r in out] == [("g", "banana")]
 

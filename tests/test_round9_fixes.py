@@ -315,8 +315,8 @@ def test_weighted_quantile_matches_python_mirror(spark):
     for num, den in [(1, 2), (9, 10)]:
         got = {
             r["grp"]: float(r["quantile_value"])
-            for r in orderstats.weighted_quantile_by_group(
-                df, F.col("g"), F.col("v"), F.col("w"), q_num=num, q_den=den
+            for r in orderstats.weighted_quantiles_by_group(
+                df, F.col("g"), F.col("v"), F.col("w"), {"quantile_value": (num, den)}
             ).collect()
         }
         want = {

@@ -1,11 +1,12 @@
-"""Corpus-wide single-partition-window + cartesian guardrail.
+"""Corpus-wide single-partition-window + cartesian + output-type guardrail.
 
 The scale discipline says no certified query may rank/window DATA-SIZED
 input on one partition (the classic ``row_number().over(Window.orderBy)``
 trap — at 100 TB that partition is the job).  The r09/r10 order-stat
-machinery (_rank2, global_rank_pick, with_global_index, bucketed_cumsum,
-covering-bucket quantiles) exists precisely to replace that shape, so
-this test audits EVERY registered query's physical plan.
+machinery (global_rank_pick and the bucketed-prefix primitives of
+orderstats: bucketed_cumsum, with_global_index, the covering-bucket
+quantiles) exists precisely to replace that shape, so this test audits
+EVERY registered query's physical plan.
 
 The plan must come from ``executedPlan()`` (post-EnsureRequirements):
 ``sparkPlan()`` has NO exchanges yet, so a SinglePartition check against
@@ -14,10 +15,9 @@ never contained the string it was grepping for.
 
 An allowlisted query may show a single-partition window at sf0.001 for
 exactly one of two audited reasons:
-- "adaptive": the op takes the plain-window SMALL path below
-  orderstats.SMALL_ROWS / evalmetrics._RANK2_SMALL_ROWS and the
-  distributed large path beyond it; path equality is pinned by
-  test_bucketed_cumsum_paths_identical /
+- "adaptive": the op takes bucketed_cumsum's plain-window path up to
+  orderstats.SMALL_ROWS and its bucketed path beyond it; path equality
+  is pinned by test_bucketed_cumsum_paths_identical /
   test_rank2_distributed_matches_single_partition.
 - "bounded": the window's input is an aggregate-sized frame whose row
   count is bounded by something other than data volume (calendar days,
@@ -25,11 +25,18 @@ exactly one of two audited reasons:
   operator.
 Everything NOT listed must have no single-partition Window at all, and
 no query may ever contain a CartesianProduct.
+
+The same loop freezes the output boundary types: no query may output a
+DECIMAL column at any depth (structs, arrays, maps included).  Decimal
+results hash differently across engines, so the corpus casts them to
+DOUBLE at the boundary; the decimal-heavy internals stay inside.
 """
 
 from __future__ import annotations
 
 import pytest
+
+from pyspark.sql.types import ArrayType, DataType, DecimalType, MapType, StructType
 
 from kafka_connect_morphlines_spark.plans.queries import QUERIES
 
@@ -37,8 +44,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 ALLOWED = {
     # adaptive small path at tiny SF; distributed path parity-pinned
-    "spearman_spend_vs_orders": "adaptive (_rank2 cutover)",
-    "kruskal_wallis_values": "adaptive (_rank2_from_counts cutover)",
+    "spearman_spend_vs_orders": "adaptive (bucketed_cumsum cutover via _rank2)",
+    "kruskal_wallis_values": "adaptive (bucketed_cumsum cutover via _rank2_from_counts)",
     "roc_auc_purchase": "adaptive (bucketed_cumsum cutover)",
     "mann_whitney_values": "adaptive (bucketed_cumsum cutover)",
     "ks_drift_value": "adaptive (bucketed_cumsum cutover)",
@@ -65,6 +72,18 @@ def _single_partition_windows(plan: str) -> bool:
     return False
 
 
+def _has_decimal(dt: DataType) -> bool:
+    if isinstance(dt, DecimalType):
+        return True
+    if isinstance(dt, StructType):
+        return any(_has_decimal(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_decimal(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_decimal(dt.keyType) or _has_decimal(dt.valueType)
+    return False
+
+
 def test_no_query_windows_data_on_a_single_partition(spark):
     failures = {}
     allowed_seen = set()
@@ -82,10 +101,12 @@ def test_no_query_windows_data_on_a_single_partition(spark):
                 bad.append("single-partition Window")
         if "CartesianProduct" in plan:
             bad.append("CartesianProduct")
+        if _has_decimal(df.schema):
+            bad.append("DECIMAL output column")
         if bad:
             failures[name] = bad
     assert not failures, (
-        "100TB-hostile plan shapes found: "
+        "100TB-hostile plan shapes or DECIMAL outputs found: "
         + "; ".join(f"{n}: {b}" for n, b in failures.items())
     )
     # a stale allowlist hides regressions elsewhere: every entry must
