@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kafka_connect_morphlines_spark.functions import orderstats
+from kafka_connect_morphlines_spark.functions import driver_table, orderstats
 from kafka_connect_morphlines_spark.functions.textstats import split_words, tokens
 
 __all__ = [
@@ -335,9 +335,8 @@ def threshold_metrics(
     ``F1 = 2*TP / (2*TP + FP + FN)`` — the integer form, no intermediate
     precision/recall doubles.
     """
-    spark = df.sparkSession
     th = F.broadcast(
-        spark.createDataFrame([(float(x),) for x in thresholds], "threshold double")
+        driver_table(df.sparkSession, [(float(x),) for x in thresholds], "threshold double")
     )
     pred = score >= F.col("threshold")
     return (
@@ -453,8 +452,8 @@ def krippendorff_alpha_nominal(df: DataFrame, unit: Column, rating: Column) -> D
     sm = per_u.groupBy("m").agg(F.sum(F.col("a").cast(dec0)).alias("s"))
     m_values = [int(r["m"]) for r in sm.select("m").collect()]  # <= #raters rows
     if not m_values:
-        return per_u.sparkSession.createDataFrame(
-            [(0, 0, None)], "n_units long, n_ratings long, alpha double"
+        return driver_table(
+            per_u.sparkSession, [(0, 0, None)], "n_units long, n_ratings long, alpha double"
         )
     big_l = lcm(*[m - 1 for m in m_values])
     # exact integer weight L/(m-1) as a literal CASE over the observed m
@@ -563,8 +562,8 @@ def bradley_terry_strengths(
         )
         for i in items
     ]
-    df = duels.sparkSession.createDataFrame(
-        out_rows, "item string, wins long, duels long, _p long, _tot long"
+    df = driver_table(
+        duels.sparkSession, out_rows, "item string, wins long, duels long, _p long, _tot long"
     )
     return df.select(
         "item", "wins", "duels", _ratio6(F.col("_p"), F.col("_tot")).alias("strength")

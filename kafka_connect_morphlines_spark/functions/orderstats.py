@@ -13,6 +13,7 @@ quantiles — runs on one bucketed-prefix mechanism:
    pure codegen function of the value (``monotone_log_bucket``);
 2. one bounded aggregate collects the per-bucket totals, the driver
    prefix-sums them into exact offsets, and a broadcast local table
+   (``functions.driver_table``: a ``LocalTableScan``, no Python task)
    carries the offsets back (``_bucket_offsets``; grouped and restricted
    to the buckets that cover a target: ``_covering_prefix``);
 3. a window partitioned by bucket finishes the order inside each bucket.
@@ -43,9 +44,10 @@ import operator
 from fractions import Fraction
 from functools import reduce
 
-import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.types import NumericType
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import ArrayType, LongType, NumericType, StructField, StructType
+
+from kafka_connect_morphlines_spark.functions import driver_table
 
 __all__ = [
     "weighted_quantiles_by_group",
@@ -120,13 +122,6 @@ def _bucket_id(df: DataFrame, col: str, slots: int) -> Column:
     )
 
 
-def _driver_table(spark: SparkSession, schema: pa.Schema, rows: list[dict]) -> DataFrame:
-    """Driver-computed rows as a local relation: built from an Arrow
-    table, Spark plans it as a ``LocalTableScan``, so its broadcast runs
-    no Python task (a Python list would become a Python RDD)."""
-    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
-
-
 def _bucket_offsets(
     df: DataFrame, order_col: str, totals: dict[str, Column], slots: int
 ) -> tuple[DataFrame, dict[str, int]]:
@@ -144,11 +139,11 @@ def _bucket_offsets(
     acc = dict.fromkeys(totals, 0)
     offsets = []
     for r in sorted(rows, key=lambda r: r["_obkt"]):  # bucket order IS value order
-        offsets.append({"_obkt": r["_obkt"], **acc})
+        offsets.append((r["_obkt"], *acc.values()))
         for n in totals:
             acc[n] += r[n] or 0
-    schema = pa.schema([("_obkt", pa.int32()), *[(n, pa.int64()) for n in totals]])
-    table = _driver_table(df.sparkSession, schema, offsets)
+    schema = ", ".join(["_obkt int", *[f"{n} long" for n in totals]])
+    table = driver_table(df.sparkSession, offsets, schema)
     return bucketed.join(F.broadcast(table), "_obkt"), acc
 
 
@@ -169,10 +164,10 @@ def _covering_prefix(raw: DataFrame, slots: int, targets, *, weighted: bool) -> 
     scans are expensive."""
     bucketed = raw.withColumn("_obkt", _bucket_id(raw, "_v", slots))
     if weighted:
-        wsum, wtype, ztype = F.sum("_w"), pa.decimal128(38, 6), "decimal(38,6)"
+        wsum, ztype = F.sum("_w"), "decimal(38,6)"
         guard = [F.sum(F.when(F.col("_w") <= 0, 1).otherwise(0)).alias("_bad")]
     else:
-        wsum, wtype, ztype, guard = F.count(F.lit(1)), pa.int64(), "long", []
+        wsum, ztype, guard = F.count(F.lit(1)), "long", []
     totals = bucketed.groupBy("_g", "_obkt").agg(wsum.alias("_t"), *guard).collect()
     if weighted and any(r["_bad"] for r in totals):
         # a nonpositive weight makes the cumulative non-monotonic, so the
@@ -189,11 +184,10 @@ def _covering_prefix(raw: DataFrame, slots: int, targets, *, weighted: bool) -> 
         ends = list(itertools.accumulate(t for _, t in buckets))
         for i in sorted({bisect.bisect_left(ends, t) for t in targets(ends[-1])}):
             b, t = buckets[i]
-            covering.append({"_g": g, "_obkt": b, "_off": ends[i] - t, "_n": ends[-1]})
-    schema = pa.schema(
-        [("_g", pa.string()), ("_obkt", pa.int32()), ("_off", wtype), ("_n", wtype)]
+            covering.append((g, b, ends[i] - t, ends[-1]))
+    table = driver_table(
+        raw.sparkSession, covering, f"_g string, _obkt int, _off {ztype}, _n {ztype}"
     )
-    table = _driver_table(raw.sparkSession, schema, covering)
     win = Window.partitionBy("_g", "_obkt").orderBy("_v").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -258,8 +252,10 @@ def global_rank_pick(
     it covers several requested ranks (callers that average middle
     elements get the right answer because (v+v)/2 = v).  Skew/plateau
     guard: a bucket whose min == max IS a single value — its covered
-    ranks resolve immediately; ``max_rounds`` caps pathological
-    float-edge stalls, falling back to sorting the survivors.
+    ranks resolve immediately and come back as a local relation of the
+    value column's own type (``driver_table``, which converts a collected
+    naive timestamp as ``createDataFrame`` would); ``max_rounds`` caps
+    pathological float-edge stalls, falling back to sorting the survivors.
     ``counts`` is read once per round plus once per surviving interval
     for the final pick (interval count <= len(ks)) — checkpoint/cache it
     upstream.  Pass a dict as ``stats`` to receive
@@ -451,12 +447,11 @@ def global_rank_pick(
         distinct_vals = sorted({v for _, v in resolved})
         val_schema = counts.select(value_col).schema
         if with_ranks is None:
-            lit_rows = spark.createDataFrame([(v,) for v in distinct_vals], val_schema)
+            lit_rows = driver_table(spark, [(v,) for v in distinct_vals], val_schema)
             extra = []
         else:
-            from pyspark.sql.types import ArrayType, LongType, StructField, StructType
-
-            lit_rows = spark.createDataFrame(
+            lit_rows = driver_table(
+                spark,
                 [
                     (v, sorted(int(k) for k, vv in resolved if vv == v))
                     for v in distinct_vals

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kafka_connect_morphlines_spark.functions import ensure_parallelism
+from kafka_connect_morphlines_spark.functions import driver_table, ensure_parallelism
 from kafka_connect_morphlines_spark.functions.similarity import cosine, ivf_assign
 
 
@@ -37,10 +37,12 @@ def _vector_dim(df: DataFrame, vec_col: str) -> int:
 
 def _centroid_frame(df: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     """k-row (centroid, _cv) frame from the driver-side centroid list —
-    ONE createDataFrame call instead of k*d literal Column constructions
-    (each F.lit is a py4j round-trip, and Catalyst re-analyzes the full
-    literal tree on every plan pass).  Broadcast by the caller."""
-    return df.sparkSession.createDataFrame(
+    ONE local relation (``driver_table``) instead of k*d literal Column
+    constructions (each F.lit is a py4j round-trip, and Catalyst
+    re-analyzes the full literal tree on every plan pass).  Broadcast by
+    the caller; the broadcast runs no Python task."""
+    return driver_table(
+        df.sparkSession,
         [(int(cid), [float(v) for v in vec]) for cid, vec in centroids],
         "centroid long, _cv array<double>",
     )

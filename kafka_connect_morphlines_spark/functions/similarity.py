@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from pyspark.sql import Window
 
-from kafka_connect_morphlines_spark.functions import ensure_parallelism
+from kafka_connect_morphlines_spark.functions import driver_table, ensure_parallelism
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -586,8 +586,7 @@ def mmr_topk(
         .collect()
     )
     if not short:
-        spark = df.sparkSession
-        return spark.createDataFrame([], out_schema)
+        return driver_table(df.sparkSession, [], out_schema)
     ids = [r[id_col] for r in short]
     rel = np.array([r["relevance"] for r in short])
     vecs = np.array([list(r[vec_col]) for r in short], dtype=np.float64)
@@ -615,8 +614,7 @@ def mmr_topk(
         picked.append(best_i)
         cand.remove(best_i)
         out.append((rank, ids[best_i], float(rel[best_i]), best_score / 1e6))
-    spark = df.sparkSession
-    return spark.createDataFrame(out, out_schema)
+    return driver_table(df.sparkSession, out, out_schema)
 
 
 # --------------------------------------------------------------------------
@@ -721,8 +719,8 @@ def power_component_int(
     # sign: largest-|v| coordinate, smallest index on ties, made positive
     j_star = max(range(d), key=lambda j: (abs(v[j]), -j))
     sgn = -1 if v[j_star] < 0 else 1
-    out = df.sparkSession.createDataFrame(
-        [(j, sgn * v[j], m) for j in range(d)], "j int, _v long, _m long"
+    out = driver_table(
+        df.sparkSession, [(j, sgn * v[j], m) for j in range(d)], "j int, _v long, _m long"
     )
     return out.select(
         "j",
@@ -863,8 +861,10 @@ def pca_whiten_int(
 
     src = df.select(F.col(id_col).alias("_id"), F.col(vec_col))
     ydf = src.mapInPandas(project, "_id long, component int, y long")
-    scal = df.sparkSession.createDataFrame(
-        [(c, m, sv2) for c, _, m, sv2 in comps], "component int, _m long, _sv2 long"
+    scal = driver_table(
+        df.sparkSession,
+        [(c, m, sv2) for c, _, m, sv2 in comps],
+        "component int, _m long, _sv2 long",
     )
     den = F.sqrt(F.col("_sv2").cast("double")) * F.sqrt(
         F.col("_m").cast("double") / F.lit(float(unit)) / F.lit(float(n_rows))

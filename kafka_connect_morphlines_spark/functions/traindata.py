@@ -37,7 +37,7 @@ from itertools import groupby
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from kafka_connect_morphlines_spark.functions import ensure_parallelism
+from kafka_connect_morphlines_spark.functions import driver_table, ensure_parallelism
 from kafka_connect_morphlines_spark.functions.textstats import split_words, tokens
 
 
@@ -836,7 +836,7 @@ def bpe_train(
 
         syms = syms.mapInPandas(apply_merges, schema="freq long, s array<string>").localCheckpoint()
 
-    return spark.createDataFrame(rules, "rank int, left string, right string, pair_count long")
+    return driver_table(spark, rules, "rank int, left string, right string, pair_count long")
 
 
 def bpe_encode(
@@ -1442,7 +1442,8 @@ def unigram_lm_train(
         seed_mult, text_col, max_words,
     )
     tot = sum(c for _, c in rows)
-    return df.sparkSession.createDataFrame(
+    return driver_table(
+        df.sparkSession,
         [
             (i, p, len(p), c, round(_log_score(c, tot), 6))
             for i, (p, c) in enumerate(rows)
@@ -1470,7 +1471,8 @@ def unigram_lm_train_prob(
         max_piece_len, seed_mult, text_col, max_words,
     )
     tot = sum(c for _, c in rows)
-    base = df.sparkSession.createDataFrame(
+    base = driver_table(
+        df.sparkSession,
         [(i, p, len(p), c, tot) for i, (p, c) in enumerate(rows)],
         "rank int, piece string, piece_len int, count long, _tot long",
     )

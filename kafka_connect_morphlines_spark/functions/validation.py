@@ -32,6 +32,8 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from kafka_connect_morphlines_spark.functions import driver_table
+
 
 @dataclass(frozen=True)
 class NotNull:
@@ -133,8 +135,8 @@ def check(df: DataFrame, constraints: list[Constraint]) -> DataFrame:
         (results[i][0], results[i][1], results[i][2], results[i][2] == 0)
         for i in range(len(constraints))
     ]
-    return spark.createDataFrame(
-        rows, "constraint string, column string, violations long, passed boolean"
+    return driver_table(
+        spark, rows, "constraint string, column string, violations long, passed boolean"
     )
 
 

@@ -24,7 +24,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from kafka_connect_morphlines_spark.functions import dedup, similarity, textstats
+from kafka_connect_morphlines_spark.functions import dedup, driver_table, similarity, textstats
 from kafka_connect_morphlines_spark.pipeline import compile_pipeline
 
 
@@ -4543,7 +4543,7 @@ def acf_daily_revenue(spark, sf_dir):
         F.sum(F.col("o_totalprice").cast("decimal(23,6)")).alias("rev")
     )
     daily = daily.localCheckpoint()  # tiny series reused on both join sides
-    lags = spark.createDataFrame([(i,) for i in range(1, 8)], "lag int")
+    lags = spark.range(1, 8).select(F.col("id").cast("int").alias("lag"))
     a, b = daily.alias("a"), daily.alias("b")
     j = (
         F.broadcast(lags)
@@ -4777,8 +4777,8 @@ def price_decile_grid(spark, sf_dir):
     n = per.agg(F.sum("_c").cast("long").alias("n")).first()["n"] or 0
     ks = [((i * n) + 9) // 10 for i in range(1, 10)] if n else [1]
     picked = orderstats.global_rank_pick(per, "_v", "_c", ks, with_ranks="_ks")
-    kmap = spark.createDataFrame(
-        [(int(k), i) for i, k in enumerate(ks, 1)], "k long, decile long"
+    kmap = driver_table(
+        spark, [(int(k), i) for i, k in enumerate(ks, 1)], "k long, decile long"
     )
     return (
         picked.select(F.explode("_ks").alias("k"), F.col("_v").alias("value"))
@@ -5035,8 +5035,8 @@ def benford_first_digit_prices(spark, sf_dir):
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    exp = spark.createDataFrame(
-        [(d, _BENFORD_P[d]) for d in range(1, 10)], "digit int, p double"
+    exp = driver_table(
+        spark, [(d, _BENFORD_P[d]) for d in range(1, 10)], "digit int, p double"
     )
     tot = obs.agg(F.sum("n").alias("nt"))
     j = exp.join(obs, "digit", "left").crossJoin(F.broadcast(tot))
@@ -7571,9 +7571,7 @@ def url_blocklist_filter(spark, sf_dir):
             F.col("doc_id").cast("string"),
         ).alias("url"),
     )
-    bl = docs.sparkSession.createDataFrame(
-        [("tracker.net",), ("spam.example",)], "domain string"
-    )
+    bl = driver_table(spark, [("tracker.net",), ("spam.example",)], "domain string")
     out = web.blocklist_filter(urls, bl)
     return out.select("doc_id", "host", "blocked").orderBy("doc_id")
 

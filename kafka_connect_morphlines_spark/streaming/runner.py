@@ -37,6 +37,16 @@ def quarantine_split(df: DataFrame, flag_col: str = QUARANTINE_FLAG) -> tuple[Da
     return good, bad
 
 
+def _batch_violates(df: DataFrame, constraints: list[Any]) -> bool:
+    """``run_stream``'s batch gate: whether ``df`` violates any of the
+    validation constraints.  ``validation.check`` runs its aggregate and
+    returns the verdict as a local relation, which ``collect()`` reads
+    without a Spark job (a filtered ``count()`` of it would run two)."""
+    from kafka_connect_morphlines_spark.functions import validation
+
+    return not all(r["passed"] for r in validation.check(df, constraints).collect())
+
+
 def run_stream(
     source: DataFrame,
     pipeline: Pipeline | Callable[[DataFrame], DataFrame],
@@ -79,14 +89,10 @@ def run_stream(
             # without a flag column ``bad`` is statically empty: skip its
             # sink call unless the gate below routes the batch there
             may_quarantine = QUARANTINE_FLAG in out.columns
-            if constraints:
-                from kafka_connect_morphlines_spark.functions import validation
-
-                verdict = validation.check(good, constraints)
-                if verdict.filter(~F.col("passed")).count() > 0:
-                    bad = bad.unionByName(good, allowMissingColumns=True)
-                    good = good.filter(F.lit(False))
-                    may_quarantine = True
+            if constraints and _batch_violates(good, constraints):
+                bad = bad.unionByName(good, allowMissingColumns=True)
+                good = good.filter(F.lit(False))
+                may_quarantine = True
             if quarantine_sink is not None and may_quarantine:
                 quarantine_sink(bad, epoch_id)
             if sink is not None:

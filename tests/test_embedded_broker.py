@@ -14,10 +14,10 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
 import pytest
 
 from kafka_connect_morphlines_spark import compile_pipeline
+from kafka_connect_morphlines_spark.functions import driver_table
 from kafka_connect_morphlines_spark.sources import embedded_broker
 from kafka_connect_morphlines_spark.sources.kafka import (
     KafkaUnavailableError,
@@ -109,7 +109,7 @@ def test_sink_connector_loop_kafka_to_pipeline_to_sink(spark, broker, tmp_path):
         (None, '{"name":"b","n":2}', "in"),
         (None, "broken", "in"),
     ]
-    write_kafka_batch(spark.createDataFrame(records, "key string, value string, topic string"), broker)
+    write_kafka_batch(driver_table(spark, records, "key string, value string, topic string"), broker)
 
     pipe = compile_pipeline(
         [
@@ -139,7 +139,7 @@ def test_streaming_consume_with_incremental_publish(spark, broker, tmp_path):
     backlog AND records published while the query runs, in new micro-batches
     (MorphlineSinkTask.java:129-149 contract)."""
     write_kafka_batch(
-        spark.createDataFrame([(None, '{"n":1}', "t")], "key string, value string, topic string"), broker
+        driver_table(spark, [(None, '{"n":1}', "t")], "key string, value string, topic string"), broker
     )
     stream = read_kafka_stream(spark, broker, "t")
     assert stream.columns == read_kafka_batch(spark, broker, "t").columns  # identical envelope
@@ -152,7 +152,7 @@ def test_streaming_consume_with_incremental_publish(spark, broker, tmp_path):
     q.processAllAvailable()
     assert len(seen) == 1
     write_kafka_batch(
-        spark.createDataFrame([(None, '{"n":2}', "t")], "key string, value string, topic string"), broker
+        driver_table(spark, [(None, '{"n":2}', "t")], "key string, value string, topic string"), broker
     )
     q.processAllAvailable()
     q.stop()
@@ -163,7 +163,7 @@ def test_streaming_consume_with_incremental_publish(spark, broker, tmp_path):
 
 def _publish(spark, root: str, values: list[bytes]) -> None:
     """One publish of unkeyed rows: one log file of topic ``t``."""
-    df = spark.createDataFrame(pa.table({"value": pa.array(values, pa.binary())}))  # a local relation: no Python tasks
+    df = driver_table(spark, [(v,) for v in values], "value binary")
     embedded_broker.publish(df, {"kafka.bootstrap.servers": root, "topic": "t"})
 
 
@@ -333,7 +333,7 @@ def test_failed_publish_publishes_nothing(spark, broker):
 
 
 def _write_values(spark, broker, values):
-    df = spark.createDataFrame([(None, v, "in") for v in values], "key string, value string, topic string")
+    df = driver_table(spark, [(None, v, "in") for v in values], "key string, value string, topic string")
     write_kafka_batch(df, broker)
 
 

@@ -7,7 +7,7 @@ import os
 
 from kafka_connect_morphlines_spark import Pipeline
 from kafka_connect_morphlines_spark.commands.sinks import LOAD_CLIENTS
-from kafka_connect_morphlines_spark.functions import skew
+from kafka_connect_morphlines_spark.functions import driver_table, skew
 from kafka_connect_morphlines_spark.sources.files import load_table
 
 EXAMPLES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "examples")
@@ -41,7 +41,7 @@ def test_heterogeneous_topic_branching(spark, broker):
         (None, '{"type":"order","order_id":2,"amount":1.25}', "mixed"),
         (None, '{"type":"mystery","x":1}', "mixed"),
     ]
-    write_kafka_batch(spark.createDataFrame(records, "key string, value string, topic string"), broker)
+    write_kafka_batch(driver_table(spark, records, "key string, value string, topic string"), broker)
 
     env = read_kafka_batch(spark, broker, "mixed").withColumn("_value", F.col("_value").cast("string"))
     conf = os.path.join(EXAMPLES, "heterogeneous_topic.conf")

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_connect_morphlines_spark import compile_pipeline
+from kafka_connect_morphlines_spark.functions import driver_table
 from kafka_connect_morphlines_spark.streaming import runner
 
 
@@ -47,7 +48,7 @@ def test_quarantine_dlq(spark, tmp_path):
     rows = [('{"k": 1}',), ("not json",), ('{"k": 3}',)]
     src_dir = tmp_path / "json_src"
     src_dir.mkdir()
-    spark.createDataFrame(rows, "payload string").coalesce(1).write.mode("overwrite").parquet(str(src_dir / "data"))
+    driver_table(spark, rows, "payload string").coalesce(1).write.mode("overwrite").parquet(str(src_dir / "data"))
 
     pipe = compile_pipeline([{"readJson": {"inputField": "payload", "schemaDdl": "k int", "flagInvalid": True}}])
     good_batches, bad_batches = [], []
@@ -70,7 +71,7 @@ def test_unflagged_pipeline_never_calls_the_quarantine_sink(spark, tmp_path):
     reaches the main sink and the quarantine sink (a DLQ write job per
     call) is never invoked."""
     src_dir = str(tmp_path / "plain_src" / "data")
-    spark.createDataFrame([(1,), (2,), (3,)], "k long").coalesce(1).write.parquet(src_dir)
+    driver_table(spark, [(1,), (2,), (3,)], "k long").coalesce(1).write.parquet(src_dir)
     pipe = compile_pipeline([{"setValues": {"tag": "row-@{k}"}}])
     good, quarantine_calls = [], []
     stream = spark.readStream.schema(spark.read.parquet(src_dir).schema).parquet(src_dir)
@@ -125,7 +126,7 @@ def test_stateful_running_counts(spark, tmp_path):
     from kafka_connect_morphlines_spark.streaming.stateful import running_event_counts
 
     src = str(tmp_path / "ev")
-    spark.createDataFrame([(1, "a"), (1, "b"), (2, "a")], "user_id long, ev string").coalesce(1).write.mode(
+    driver_table(spark, [(1, "a"), (1, "b"), (2, "a")], "user_id long, ev string").coalesce(1).write.mode(
         "overwrite"
     ).parquet(src)
     schema = spark.read.parquet(src).schema
@@ -136,7 +137,7 @@ def test_stateful_running_counts(spark, tmp_path):
     q = out.writeStream.queryName("state_out").outputMode("append").format("memory").option("checkpointLocation", ckpt).start()
     q.processAllAvailable()
     # second micro-batch: new file arrives
-    spark.createDataFrame([(1, "c")], "user_id long, ev string").coalesce(1).write.mode("append").parquet(src)
+    driver_table(spark, [(1, "c")], "user_id long, ev string").coalesce(1).write.mode("append").parquet(src)
     q.processAllAvailable()
     q.stop()
     rows = spark.sql("SELECT * FROM state_out ORDER BY total_events").collect()
@@ -191,8 +192,8 @@ def test_transform_with_state_running_sums(spark, tmp_path):
         pytest.skip("protobuf not installed: transformWithState gated")
 
     src = str(tmp_path / "tws")
-    spark.createDataFrame(
-        [(1, 10.0), (1, 5.0), (2, 1.0)], "user_id long, value double"
+    driver_table(
+        spark, [(1, 10.0), (1, 5.0), (2, 1.0)], "user_id long, value double"
     ).coalesce(1).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     ckpt = str(tmp_path / "tws_ck")
@@ -207,7 +208,7 @@ def test_transform_with_state_running_sums(spark, tmp_path):
         .start()
     )
     q.processAllAvailable()
-    spark.createDataFrame([(1, 2.0)], "user_id long, value double").coalesce(1).write.mode("append").parquet(src)
+    driver_table(spark, [(1, 2.0)], "user_id long, value double").coalesce(1).write.mode("append").parquet(src)
     q.processAllAvailable()
     q.stop()
     rows = spark.sql("SELECT * FROM tws_out ORDER BY running_sum").collect()
@@ -225,8 +226,8 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 
     ts = datetime.datetime(2024, 1, 1, 12, 0, 0)
     src = str(tmp_path / "dd")
-    spark.createDataFrame(
-        [(1, ts), (1, ts), (2, ts)], "k long, ts timestamp"
+    driver_table(
+        spark, [(1, ts), (1, ts), (2, ts)], "k long, ts timestamp"
     ).coalesce(1).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     ckpt = str(tmp_path / "dd_ck")
@@ -242,7 +243,7 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     )
     q.processAllAvailable()
     # same key arrives again in a later micro-batch, still within the delay
-    spark.createDataFrame([(1, ts + datetime.timedelta(minutes=1))], "k long, ts timestamp").coalesce(1).write.mode(
+    driver_table(spark, [(1, ts + datetime.timedelta(minutes=1))], "k long, ts timestamp").coalesce(1).write.mode(
         "append"
     ).parquet(src)
     q.processAllAvailable()
@@ -316,7 +317,7 @@ def test_constraint_gate_quarantines_bad_batch(spark, tmp_path):
     src_dir = tmp_path / "gate_src"
     src_dir.mkdir()
     # one clean file-batch, one poisoned (duplicate keys)
-    spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string").coalesce(1).write.parquet(
+    driver_table(spark, [(1, "a"), (2, "b")], "k long, v string").coalesce(1).write.parquet(
         str(src_dir / "data")
     )
     pipe = compile_pipeline([{"setValues": {"tag": "row-@{k}"}}])
@@ -338,7 +339,7 @@ def test_constraint_gate_quarantines_bad_batch(spark, tmp_path):
     # checkpoint) re-reads everything as ONE micro-batch, so the whole
     # batch — clean rows included — must land in quarantine: the gate is
     # batch-granular by design.
-    spark.createDataFrame([(7, "x"), (7, "y")], "k long, v string").coalesce(1).write.mode(
+    driver_table(spark, [(7, "x"), (7, "y")], "k long, v string").coalesce(1).write.mode(
         "append"
     ).parquet(str(src_dir / "data"))
     good2, bad2 = [], []
@@ -385,7 +386,7 @@ def test_upsert_sink_through_run_stream(spark, tmp_path):
 
     src_dir = tmp_path / "upsrc"
     src_dir.mkdir()
-    spark.createDataFrame([(1, "x"), (2, "y"), (1, "z")], "k long, v string").coalesce(
+    driver_table(spark, [(1, "x"), (2, "y"), (1, "z")], "k long, v string").coalesce(
         1
     ).write.parquet(str(src_dir / "data"))
     sink = UpsertParquetSink(str(tmp_path / "uptab"), key_cols=["k"])
